@@ -6,7 +6,7 @@ import java.time.Instant
 import java.util.zip.GZIPOutputStream
 import scala.jdk.CollectionConverters._
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.SparkSession
 
 /** Archive sink — operator A15 (dags/msconvert_dag.py:345-439): tar the
   * original run dir, commit atomically via `.partial` temp + rename, honor
@@ -22,12 +22,16 @@ import org.apache.spark.sql.Dataset
   */
 object ArchiveSink {
 
-  def archive(statuses: Dataset[RunStatus], cfg: GraftConfig, now: Instant): Dataset[RunStatus] = {
-    val spark = statuses.sparkSession
-    import spark.implicits._
-    if (!cfg.archiveOrig) statuses
-    else statuses.mapPartitions(_.map(s => archiveOne(s, cfg, now)))
-  }
+  /** Archive every status row of the batch on `min(rows, poolSlots)` tasks;
+    * one job, collected in input order.
+    */
+  def archive(spark: SparkSession, statuses: Seq[RunStatus], cfg: GraftConfig,
+      now: Instant): Seq[RunStatus] =
+    if (!cfg.archiveOrig || statuses.isEmpty) statuses
+    else spark.sparkContext
+      .parallelize(statuses, math.min(statuses.size, math.max(1, cfg.poolSlots)))
+      .map(archiveOne(_, cfg, now))
+      .collect().toSeq
 
   private def archiveOne(s: RunStatus, cfg: GraftConfig, now: Instant): RunStatus = {
     // guard: only archive runs whose expected converted output exists (:362-379)
@@ -58,7 +62,7 @@ object ArchiveSink {
         case ex: Exception => Files.deleteIfExists(tmp); throw ex // (:432-437)
       }
       val archiveBytes = Files.size(fin) // arc_size (:417)
-      if (cfg.deleteOrig) deleteRecursive(src) // (:426-431)
+      if (cfg.deleteOrig) Discovery.deleteRecursive(src) // (:426-431)
       s.copy(archived = true, origBytes = origBytes, archiveBytes = archiveBytes)
     } catch {
       case ex: Exception =>
@@ -103,13 +107,6 @@ object ArchiveSink {
     */
   private def commitTar(tmp: Path, fin: Path): Unit =
     Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
-
-  private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p)) {
-      val stream = Files.walk(p)
-      try stream.sorted(java.util.Comparator.reverseOrder()).forEach(Files.deleteIfExists(_))
-      finally stream.close()
-    }
 
   private[pipeline] def listArchives(dir: Path, base: String): Seq[Path] =
     if (Files.isDirectory(dir)) existingArchives(dir, base) else Seq.empty

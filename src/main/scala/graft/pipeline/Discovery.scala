@@ -72,9 +72,8 @@ object Discovery {
       cfg: GraftConfig): Dataset[RunRecord] = {
     val spark = discovered.sparkSession
     import spark.implicits._
-    val done = ledger.convertedKeys.union(ledger.skipKeys).distinct()
     discovered
-      .join(done, Seq("base", "plateRel"), "left_anti")
+      .join(ledger.doneKeys, Seq("base", "plateRel"), "left_anti")
       .as[RunRecord]
       .orderBy(col("path"))
       .limit(cfg.maxMap)
@@ -98,4 +97,12 @@ object Discovery {
     } catch { case _: java.io.IOException => () }
     total
   }
+
+  /** Remove a file tree, deepest entries first; a missing path is a no-op. */
+  private[pipeline] def deleteRecursive(p: Path): Unit =
+    if (Files.exists(p)) {
+      val stream = Files.walk(p)
+      try stream.sorted(java.util.Comparator.reverseOrder()).forEach(Files.deleteIfExists(_))
+      finally stream.close()
+    }
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.SparkSession
 
 /** The external-process transform — operator A13 (dags/msconvert_dag.py:
   * 249-343), the reference's per-run `msconvert` invocation reduced to its
@@ -12,12 +12,13 @@ import org.apache.spark.sql.Dataset
   * exists. (Wine-prefix seeding and Docker mounts are site mechanics, not
   * semantics — SURVEY.md §2.A13.)
   *
-  * Parallelism is bounded to `poolSlots` partitions (the reference's Airflow
-  * pool of 4, docker-compose.yml:74) via coalesce — each partition runs its
-  * rows sequentially, so at most `poolSlots` subprocesses exist at once,
-  * cluster-wide the same contract as the pool. A10 (skip-on-missing) runs at
-  * stage entry: a run dir that vanished between discovery and processing is
-  * counted `skipped`, never `failed` (:226-228).
+  * Parallelism is bounded by the slice count: the batch (driver rows, at
+  * most MAX_MAP of them) is split into `min(rows, poolSlots)` slices, one
+  * task each, and each task runs its rows sequentially — so at most
+  * `poolSlots` subprocesses exist at once, cluster-wide the same contract as
+  * the reference's Airflow pool of 4 (docker-compose.yml:74). A10
+  * (skip-on-missing) runs at stage entry: a run dir that vanished between
+  * discovery and processing is counted `skipped`, never `failed` (:226-228).
   */
 object ExternalProcess {
 
@@ -30,13 +31,13 @@ object ExternalProcess {
     template.map(arg => subs.foldLeft(arg) { case (a, (k, v)) => a.replace(k, v) })
   }
 
-  def convert(envs: Dataset[RunEnv], cfg: GraftConfig): Dataset[RunStatus] = {
-    val spark = envs.sparkSession
-    import spark.implicits._
-    envs
-      .coalesce(math.max(1, cfg.poolSlots)) // A17 concurrency governor
-      .mapPartitions(_.map(e => runOne(e, cfg)))
-  }
+  /** Run every conversion of the batch; one job, collected in input order. */
+  def convert(spark: SparkSession, envs: Seq[RunEnv], cfg: GraftConfig): Seq[RunStatus] =
+    if (envs.isEmpty) Nil
+    else spark.sparkContext
+      .parallelize(envs, math.min(envs.size, math.max(1, cfg.poolSlots))) // A17 governor
+      .map(runOne(_, cfg))
+      .collect().toSeq
 
   private def runOne(e: RunEnv, cfg: GraftConfig): RunStatus = {
     val start = new Timestamp(System.currentTimeMillis())

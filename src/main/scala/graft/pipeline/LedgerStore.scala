@@ -14,22 +14,29 @@ import org.apache.spark.sql.functions._
   *     the reference keeps in `.attempts` files (:145-152). Rows reaching
   *     `maxAttempts` are the permanent skip set (`.skip` sentinel, :153-158).
   *     Snapshot-swap updated.
+  *   - `quiet`: (path, lastSize, stableSince) — the quiescence clocks of
+  *     pending runs not yet ready (A9, see [[Quiescence]]). Snapshot-swap
+  *     updated.
   *
-  * Scale note: at 100 TB both are partitioned tables and the attempts update
-  * becomes a MERGE in a table format with transactions (Delta/Iceberg); the
-  * API here (appendConverted / recordFailures / keys) is the seam — callers
-  * never see the storage layout. The snapshot swap uses temp-dir + atomic
-  * rename, the same commit protocol as the archive sink (local-FS assumption
-  * documented there).
+  * Scale note: at 100 TB these are partitioned tables and the snapshot
+  * updates become MERGEs in a table format with transactions (Delta/Iceberg);
+  * the API here (appendConverted / recordFailures / replaceQuiet / keys) is
+  * the seam — callers never see the storage layout. The snapshot swap uses
+  * temp-dir + atomic rename, the same commit protocol as the archive sink
+  * (local-FS assumption documented there).
   */
 final class LedgerStore(spark: SparkSession, stateDir: String, maxAttempts: Int = 3) {
   import spark.implicits._
 
   private val convertedPath = s"$stateDir/converted"
   private val attemptsPath = s"$stateDir/attempts"
+  private val quietPath = s"$stateDir/quiet"
 
-  private def readOr(path: String, empty: => DataFrame): DataFrame =
-    if (Files.exists(Paths.get(path))) spark.read.parquet(path) else empty
+  /** The table at `path` read with `empty`'s schema (no inference job), or
+    * `empty` itself before the first write.
+    */
+  private def readOr(path: String, empty: DataFrame): DataFrame =
+    if (Files.exists(Paths.get(path))) spark.read.schema(empty.schema).parquet(path) else empty
 
   def converted: DataFrame = readOr(convertedPath,
     Seq.empty[(String, String, String, java.sql.Timestamp)]
@@ -38,12 +45,18 @@ final class LedgerStore(spark: SparkSession, stateDir: String, maxAttempts: Int 
   def attempts: DataFrame = readOr(attemptsPath,
     Seq.empty[(String, String, Int)].toDF("base", "plateRel", "attempts"))
 
-  /** Keys already converted (A6 anti-join right side). */
-  def convertedKeys: DataFrame = converted.select("base", "plateRel")
+  def quiet: DataFrame = readOr(quietPath,
+    Seq.empty[(String, Long, Long)].toDF("path", "lastSize", "stableSince"))
 
   /** Keys permanently skipped — attempts >= maxAttempts (`.skip` semantics). */
   def skipKeys: DataFrame =
     attempts.where(col("attempts") >= maxAttempts).select("base", "plateRel")
+
+  /** Keys that never enter a batch again: converted or skipped (A6 anti-join
+    * right side).
+    */
+  def doneKeys: DataFrame =
+    converted.select("base", "plateRel").union(skipKeys).distinct()
 
   /** Record successful conversions (append-only, idempotent downstream via
     * the anti-join).
@@ -52,7 +65,7 @@ final class LedgerStore(spark: SparkSession, stateDir: String, maxAttempts: Int 
     val rows = statuses.where(col("state") === "success")
       .select(col("base"), col("plateRel"), col("outfile"), col("endTs").as("ts"))
     if (!rows.isEmpty)
-      rows.write.mode(SaveMode.Append).parquet(convertedPath)
+      rows.coalesce(1).write.mode(SaveMode.Append).parquet(convertedPath)
   }
 
   /** Increment attempt counters for this cycle's failures — the
@@ -62,36 +75,34 @@ final class LedgerStore(spark: SparkSession, stateDir: String, maxAttempts: Int 
     */
   def recordFailures(statuses: DataFrame): Unit = {
     val failed = statuses.where(col("state") === "failed")
-      .groupBy("base", "plateRel").agg(count(lit(1)).cast("int").as("delta"))
     if (failed.isEmpty) return
     val updated = attempts
-      .join(failed, Seq("base", "plateRel"), "full_outer")
+      .join(failed.groupBy("base", "plateRel").agg(count(lit(1)).cast("int").as("delta")),
+        Seq("base", "plateRel"), "full_outer")
       .select(col("base"), col("plateRel"),
         (coalesce(col("attempts"), lit(0)) + coalesce(col("delta"), lit(0)))
           .as("attempts"))
     swapSnapshot(updated, attemptsPath)
   }
 
-  /** Snapshot-swap commit: write to a temp dir, then atomically replace the
-    * live dir. Readers either see the old or the new snapshot, never a
-    * partial write — the `.partial` → rename protocol of the archive sink
-    * applied to a table.
+  /** Replace the quiescence clocks with `clocks` (run path → state). */
+  def replaceQuiet(clocks: Map[String, Quiescence.QuietState]): Unit =
+    swapSnapshot(clocks.toSeq.map { case (p, s) => (p, s.lastSize, s.stableSinceEpochS) }
+      .toDF("path", "lastSize", "stableSince"), quietPath)
+
+  /** Snapshot-swap commit: write one file to a temp dir, then atomically
+    * replace the live dir. Readers either see the old or the new snapshot,
+    * never a partial write — the `.partial` → rename protocol of the archive
+    * sink applied to a table.
     */
   private def swapSnapshot(df: DataFrame, livePath: String): Unit = {
     val tmp = livePath + ".swap"
     val old = livePath + ".old"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
+    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     val live = Paths.get(livePath)
     if (Files.exists(live))
       Files.move(live, Paths.get(old), StandardCopyOption.REPLACE_EXISTING)
     Files.move(Paths.get(tmp), live, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursive(Paths.get(old))
+    Discovery.deleteRecursive(Paths.get(old))
   }
-
-  private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val stream = Files.walk(p)
-      try stream.sorted(java.util.Comparator.reverseOrder()).forEach(Files.deleteIfExists(_))
-      finally stream.close()
-    }
 }

@@ -3,21 +3,27 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.time.Instant
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** One pipeline cycle — the reference's whole DagRun (SURVEY.md §3.1) as a
-  * single Spark job chain:
+/** One pipeline cycle — the reference's whole DagRun (SURVEY.md §3.1):
   *
   *   discover → dedup(anti-join ledger) → quiescence gate → naming →
   *   external-process convert (≤poolSlots) → archive (ALL_DONE) →
   *   ledger updates → run-history append → verify gate
   *
-  * Batch mode is the micro-batch body; graft.streaming.PipelinePoller wraps
-  * it on the reference's 5-minute trigger. All cross-cycle state (converted
-  * ledger, attempts, quiescence clocks, run history) lives in `stateDir`
-  * parquet tables — the Spark replacement for the reference's Airflow
-  * metadata DB + sentinel files.
+  * Listing and the capped ledger anti-join are Spark queries. The capped
+  * batch (≤ MAX_MAP rows) is then held as driver rows, and each per-run side
+  * effect (size walk, convert, archive) is one job over them whose results
+  * are collected, so no side effect is ever replayed from lineage.
+  * [[runBatch]], the tail from naming on, is shared with
+  * graft.streaming.StreamingPipeline's micro-batch.
+  *
+  * graft.streaming.PipelinePoller runs cycles on the reference's 5-minute
+  * trigger. All cross-cycle state (converted ledger, attempts, quiescence
+  * clocks, run history) lives in `stateDir` parquet tables — the Spark
+  * replacement for the reference's Airflow metadata DB + sentinel files; a
+  * cycle leaves nothing cached or checkpointed.
   */
 object PipelineRunner {
 
@@ -31,104 +37,84 @@ object PipelineRunner {
       spark: SparkSession,
       cfg: GraftConfig,
       now: Instant = Instant.now()): CycleResult = {
-    import spark.implicits._
     val ledger = new LedgerStore(spark, cfg.stateDir, cfg.maxAttempts)
 
     val discovered = Discovery.discover(spark, cfg).cache()
-    val nDiscovered = discovered.count()
-    val pending = Discovery.dedup(discovered, ledger, cfg).cache()
-    val nPending = pending.count()
-    if (nPending == cfg.maxMap)
+    val (nDiscovered, pending) = try {
+      val n = discovered.count()
+      (n, Discovery.dedup(discovered, ledger, cfg).collect().toSeq)
+    } finally discovered.unpersist()
+    if (pending.size == cfg.maxMap)
       log.info(s"cycle capped at MAX_MAP=${cfg.maxMap}; remainder next cycle")
 
-    // A9: observe sizes on executors, advance quiescence clocks vs state table
-    val ready = quiesce(spark, pending, cfg, now).cache()
-    val nReady = ready.count()
-
-    val envs = ready.map(r => Naming.runEnv(r, cfg, now))
-
-    // A13 + A15: side-effecting stages — localCheckpoint materializes the
-    // statuses exactly once so no retry/lineage replay re-runs subprocesses.
-    val statuses0 = ExternalProcess.convert(envs, cfg).localCheckpoint(eager = true)
-    val statuses = ArchiveSink.archive(statuses0, cfg, now).localCheckpoint(eager = true)
-
-    // A6 + A14: ledger updates
-    val statusDf = statuses.toDF()
-    ledger.appendConverted(statusDf)
-    ledger.recordFailures(statusDf)
-
-    appendHistory(spark, cfg, statusDf, now)
-
-    // A16 — throws on threshold breach, after bookkeeping (ALL_DONE ordering)
-    val st = VerifyGate.stats(statuses)
-    VerifyGate.check(st, cfg.failThreshold)
-
-    discovered.unpersist(); pending.unpersist(); ready.unpersist()
-    CycleResult(nDiscovered, nPending, nReady, st)
+    val ready = quiesce(spark, ledger, pending, cfg, now)
+    CycleResult(nDiscovered, pending.size, ready.size, runBatch(spark, ledger, ready, cfg, now))
   }
 
-  /** Quiescence gate: current sizes join the persisted clock table through
-    * the pure Quiescence.advance transition; ready rows flow on, the updated
-    * clock table is snapshot-swapped for the next cycle.
+  /** Quiescence gate (A9): observe the pending runs' sizes on executors and
+    * fold the pure Quiescence.advance over them and the stored clocks. Ready
+    * runs flow on in pending order; the others' clocks replace the stored
+    * ones (rewritten only when they changed).
     */
   private def quiesce(
       spark: SparkSession,
-      pending: Dataset[RunRecord],
+      ledger: LedgerStore,
+      pending: Seq[RunRecord],
       cfg: GraftConfig,
-      now: Instant): Dataset[RunRecord] = {
+      now: Instant): Seq[RunRecord] = {
     import spark.implicits._
-    val nowS = now.getEpochSecond
-    val statePath = s"${cfg.stateDir}/quiet"
-
-    val observed = pending.map { r =>
-      (r.path, r.plateRel, r.base, Discovery.dirSizeBytes(Paths.get(r.path)))
-    }.toDF("path", "plateRel", "base", "size")
-
-    val prev: DataFrame =
-      if (Files.exists(Paths.get(statePath))) spark.read.parquet(statePath)
-      else Seq.empty[(String, Long, Long)].toDF("path", "lastSize", "stableSince")
-
-    val joined = observed.join(prev, Seq("path"), "left")
-      .as[(String, String, String, Long, Option[Long], Option[Long])]
-
-    val decided = joined.map { case (path, plateRel, base, size, lastSize, since) =>
-      val prevState = for (ls <- lastSize; ss <- since)
-        yield Quiescence.QuietState(ls, ss)
-      val d = Quiescence.advance(prevState, size, nowS, cfg.quietS)
-      (path, plateRel, base, d.state.lastSize, d.state.stableSinceEpochS, d.ready)
-    }.toDF("path", "plateRel", "base", "lastSize", "stableSince", "ready")
-      .localCheckpoint(eager = true) // decouple from prev before the swap below
-
-    swapState(spark, decided.where(!col("ready"))
-      .select("path", "lastSize", "stableSince"), statePath)
-
-    decided.where(col("ready"))
-      .select("path", "plateRel", "base").as[RunRecord]
+    val sizes =
+      if (pending.isEmpty) Nil
+      else spark.sparkContext
+        .parallelize(pending.map(_.path),
+          math.min(pending.size, spark.sparkContext.defaultParallelism))
+        .map(p => Discovery.dirSizeBytes(Paths.get(p)))
+        .collect().toSeq
+    val clocks = ledger.quiet.as[(String, Long, Long)].collect()
+      .map { case (path, size, since) => path -> Quiescence.QuietState(size, since) }.toMap
+    val decided = pending.zip(sizes).map { case (r, size) =>
+      r -> Quiescence.advance(clocks.get(r.path), size, now.getEpochSecond, cfg.quietS)
+    }
+    val waiting = decided.collect { case (r, d) if !d.ready => r.path -> d.state }.toMap
+    if (waiting != clocks) ledger.replaceQuiet(waiting)
+    decided.collect { case (r, d) if d.ready => r }
   }
 
-  private def swapState(spark: SparkSession, df: DataFrame, livePath: String): Unit = {
-    val tmp = livePath + ".swap"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val live = Paths.get(livePath)
-    val old = Paths.get(livePath + ".old")
-    if (Files.exists(live))
-      Files.move(live, old, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    Files.move(Paths.get(tmp), live, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(old)) {
-      val stream = Files.walk(old)
-      try stream.sorted(java.util.Comparator.reverseOrder()).forEach(Files.deleteIfExists(_))
-      finally stream.close()
-    }
+  /** The batch body (A12-A16) over ready runs held as driver rows: naming →
+    * convert → archive (ALL_DONE) → ledger updates → run-history append →
+    * verify gate, which throws on a threshold breach after the bookkeeping.
+    */
+  private[graft] def runBatch(
+      spark: SparkSession,
+      ledger: LedgerStore,
+      ready: Seq[RunRecord],
+      cfg: GraftConfig,
+      now: Instant): VerifyGate.BatchStats = {
+    import spark.implicits._
+    val envs = ready.map(r => Naming.runEnv(r, cfg, now))
+    val converted = ExternalProcess.convert(spark, envs, cfg)
+    val statuses = ArchiveSink.archive(spark, converted, cfg, now).toDS()
+    val statusDf = statuses.toDF()
+
+    // A6 + A14: ledger updates
+    ledger.appendConverted(statusDf)
+    ledger.recordFailures(statusDf)
+
+    appendHistory(cfg, statusDf, now)
+
+    val st = VerifyGate.stats(statuses)
+    VerifyGate.check(st, cfg.failThreshold)
+    st
   }
 
   /** Run-history table — the engine's task_instance analog; the B1-B9
-    * analytics queries run over it (SURVEY.md §7.2.h).
+    * analytics queries run over it (SURVEY.md §7.2.h). One file per batch.
     */
-  private def appendHistory(
-      spark: SparkSession, cfg: GraftConfig, statuses: DataFrame, now: Instant): Unit = {
+  private def appendHistory(cfg: GraftConfig, statuses: DataFrame, now: Instant): Unit = {
     if (statuses.isEmpty) return
     statuses
       .withColumn("cycleTs", lit(new Timestamp(now.toEpochMilli)))
+      .coalesce(1)
       .write.mode(SaveMode.Append).parquet(s"${cfg.stateDir}/history")
   }
 

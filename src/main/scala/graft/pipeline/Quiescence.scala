@@ -7,9 +7,10 @@ package graft.pipeline
   * The reference blocks a task polling every `checkIntS`; a distributed
   * engine must not block executors, so the same state machine runs
   * non-blocking across observations (SURVEY.md §7.4.1, hard part #1):
-  * per-cycle in batch mode (PipelineRunner persists the state table between
-  * cycles) and per-event in streaming mode (flatMapGroupsWithState keyed by
-  * run path — see graft.streaming.DebounceStream).
+  * per-cycle in batch mode (PipelineRunner folds it over each cycle's
+  * observed sizes; LedgerStore keeps the clocks between cycles) and
+  * per-event in streaming mode (flatMapGroupsWithState keyed by run path —
+  * see graft.streaming.DebounceStream).
   *
   * The transition function is pure so both modes — and the property tests —
   * share one definition.

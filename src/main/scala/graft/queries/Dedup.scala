@@ -541,12 +541,13 @@ object Dedup {
     // them (x340's truth verify: 7.5 s over 3 tasks on 32 cores). ONE
     // explicit repartition of the SLIM pair table pins the stage: in the
     // broadcast-join regime both set joins and the verify projection
-    // pipeline into this exchange's stage (nothing fat ever re-shuffles);
-    // past broadcast range the first sort-merge join consumes this same
-    // exchange as its required distribution — no extra exchange either
-    // way. (A second pin on b_id was measured and REJECTED: the planner
-    // keeps only the last pin and it forces the joined sa-arrays through
-    // an added ~70 MB exchange.)
+    // pipeline into this exchange's stage (nothing fat ever re-shuffles).
+    // Past broadcast range the first sort-merge join keys on a_id alone,
+    // and hashpartitioning(a_id, b_id) does not satisfy its
+    // ClusteredDistribution(a_id), so Spark adds one more exchange of this
+    // slim pair table (cheap: two longs a row). (A second pin on b_id was
+    // measured and REJECTED: the planner keeps only the last pin and it
+    // forces the joined sa-arrays through an added ~70 MB exchange.)
     prefix.as("a").join(prefix.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .where(least(col("a.n"), col("b.n")) * den >=

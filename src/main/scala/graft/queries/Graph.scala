@@ -122,10 +122,10 @@ object Graph {
     * configured shuffle parallelism. The count is parquet-metadata-cheap
     * for the stored edge artifact every registry query serves from.
     */
-  private def superstepPartitions(e: DataFrame, scale: Int = 1): Int = {
+  private def superstepPartitions(e: DataFrame): Int = {
     val conf = e.sparkSession.sessionState.conf.numShufflePartitions
     val edges = e.count()
-    math.max(2, math.min(conf, math.ceil(edges * scale.toLong / 200000.0).toInt))
+    math.max(2, math.min(conf, math.ceil(edges / 200000.0).toInt))
   }
 
   /** Scope the superstep loop's session settings: AQE off (see

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.time.Instant
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.pipeline._
 
@@ -47,8 +46,10 @@ object StreamingPipeline {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** One micro-batch: ready paths → RunRecords → ledger dedup → naming →
-    * external-process convert → archive → ledger/history update → verify.
+  /** One micro-batch: ready paths → RunRecords → ledger dedup, collected
+    * as the batch's driver rows → the batch engine's shared body
+    * (PipelineRunner.runBatch: naming → convert → archive → ledger/history
+    * update → verify).
     */
   private[streaming] def processReadyBatch(
       ready: Dataset[DebounceStream.ReadyRun],
@@ -56,7 +57,6 @@ object StreamingPipeline {
       batchId: Long): VerifyGate.BatchStats = {
     val spark = ready.sparkSession
     import spark.implicits._
-    val now = Instant.now()
     val ledger = new LedgerStore(spark, cfg.stateDir, cfg.maxAttempts)
 
     val watchPrefix = cfg.watchDir.stripSuffix("/") + "/" // plain string: serializable closure
@@ -71,22 +71,10 @@ object StreamingPipeline {
 
     // idempotency on replay: drop anything the ledger already has
     val pending = records
-      .join(ledger.convertedKeys.union(ledger.skipKeys).distinct(),
-        Seq("base", "plateRel"), "left_anti")
+      .join(ledger.doneKeys, Seq("base", "plateRel"), "left_anti")
       .as[RunRecord]
-
-    val envs = pending.map(r => Naming.runEnv(r, cfg, now))
-    val statuses0 = ExternalProcess.convert(envs, cfg).localCheckpoint(true)
-    val statuses = ArchiveSink.archive(statuses0, cfg, now).localCheckpoint(true)
-    val df = statuses.toDF()
-    ledger.appendConverted(df)
-    ledger.recordFailures(df)
-    if (!df.isEmpty)
-      df.withColumn("cycleTs", lit(new java.sql.Timestamp(now.toEpochMilli)))
-        .write.mode("append").parquet(s"${cfg.stateDir}/history")
-    val st = VerifyGate.stats(statuses)
-    VerifyGate.check(st, cfg.failThreshold)
-    st
+      .collect().toSeq
+    PipelineRunner.runBatch(spark, ledger, pending, cfg, Instant.now())
   }
 
   /** Convenience: observation stream from periodic directory snapshots is the
