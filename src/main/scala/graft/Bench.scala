@@ -35,36 +35,8 @@ object Bench {
     // which goes through log4j.
     org.apache.logging.log4j.core.config.Configurator.setRootLevel(
       org.apache.logging.log4j.Level.OFF)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // JVM-lifecycle hygiene (round 13, r12 VERDICT task 3): a single
-      // JVM timing 465 queries × 3 reps + warmup accumulates ~2000 SQL
-      // executions of status-store state (plan graphs, stage/task rows)
-      // with default retention (1000 executions / 100k tasks), so late
-      // queries run against a heap and listener bus the early ones
-      // filled — the measured pass-level mechanism behind like-for-like
-      // totals growing with registry size at byte-identical plans (r12:
-      // +23-26 % r11→r12; x169 swinging 0.33↔10.73 s ACROSS sessions
-      // with tight in-session spread). Bound the stores to a working
-      // set; the bench reads none of this state.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "64")
-      .config("spark.ui.retainedStages", "128")
-      .config("spark.ui.retainedTasks", "2048")
-      .config("spark.appStateStore.asyncTracking.enable", "false")
-      .getOrCreate()
-    // keep the context's own level in agreement with the root-OFF set at
-    // main entry (setLogLevel also records the level on the context so a
-    // later library reset cannot quietly restore chatty defaults)
-    spark.sparkContext.setLogLevel("OFF")
+    val (cpus, sfDir) = GraftSession.env()
+    val spark = session(cpus)
     // builder-side subset (comma-separated names; never set by the
     // driver): a full 445-query timed pass costs ~15 min, which makes
     // controlled experiments — e.g. the probe-drift calibration runs
@@ -105,7 +77,7 @@ object Bench {
     val probesMc = scala.collection.mutable.ArrayBuffer(calibrationProbeMcMs())
     val warmT0 = System.nanoTime()
     queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      try fn(spark, WarmDir).count() catch { case _: Throwable => () }
     }
     val warmupSec = (System.nanoTime() - warmT0) / 1e9
     probes += calibrationProbeMs()
@@ -115,15 +87,13 @@ object Bench {
     // mid-pass readings
     val probeEvery = math.max(1, math.min(ProbeEvery, queries.size / 4))
     // between-query hygiene (round 13, with the bounded status stores
-    // above): a forced GC + settle sleep after each query's reps lets the
-    // ContextCleaner reclaim the query's broadcasts/accumulators BEFORE
-    // the next query is timed, instead of a GC landing mid-rep on some
-    // later, unrelated query — the cross-session single-row swings the
-    // r12 judge measured at unchanged plans. UNTIMED (between reps of
+    // of [[session]]): a forced GC + settle sleep after each query's reps
+    // lets the ContextCleaner reclaim the query's broadcasts/accumulators
+    // BEFORE the next query is timed, instead of a GC landing mid-rep on
+    // some later, unrelated query — the cross-session single-row swings
+    // measured in r12 at unchanged plans. UNTIMED (between reps of
     // different queries); the accumulated time is subtracted from wall
     // before the contention ratio so hygiene doesn't read as CPU steal.
-    // SPARK_GRAFT_NOHYGIENE=1 restores the r12 protocol for A/B runs.
-    val hygiene = !sys.env.contains("SPARK_GRAFT_NOHYGIENE")
     var hygieneSec = 0.0
     val repResults = queries.zipWithIndex.map { case ((name, fn), qi) =>
       val reps = Seq.fill(3) {
@@ -131,12 +101,10 @@ object Bench {
         try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
         catch { case _: Throwable => -1.0 }
       }
-      if (hygiene) {
-        val h0 = System.nanoTime()
-        System.gc()
-        Thread.sleep(80)
-        hygieneSec += (System.nanoTime() - h0) / 1e9
-      }
+      val h0 = System.nanoTime()
+      System.gc()
+      Thread.sleep(80)
+      hygieneSec += (System.nanoTime() - h0) / 1e9
       if ((qi + 1) % probeEvery == 0) {
         probes += calibrationProbeMs()
         probesMc += calibrationProbeMcMs()
@@ -239,6 +207,39 @@ object Bench {
       s"metric line ${line.length} chars nears the driver's ~2000-char stdout tail; " +
         "the self-fitting floor failed — fix the encoding before the next bench round")
     spark.stop()
+  }
+
+  /** Untimed warm-up scale factor: plan shapes match the timed one's. */
+  private[graft] val WarmDir = "/root/testdata/sf0.001"
+
+  /** The bench's session: [[GraftSession.builder]] plus bounded status
+    * stores, with Spark's logging off (the bench's own surface is println
+    * and System.err). graft.Profile runs on it too, so a profiled stage or
+    * dumped plan is the one the bench executes.
+    */
+  private[graft] def session(cores: Int): SparkSession = {
+    val spark = GraftSession.builder("graft-bench", cores)
+      // JVM-lifecycle hygiene (round 13, r12 VERDICT task 3): a single
+      // JVM timing 465 queries × 3 reps + warmup accumulates ~2000 SQL
+      // executions of status-store state (plan graphs, stage/task rows)
+      // with default retention (1000 executions / 100k tasks), so late
+      // queries run against a heap and listener bus the early ones
+      // filled — the measured pass-level mechanism behind like-for-like
+      // totals growing with registry size at byte-identical plans (r12:
+      // +23-26 % r11→r12; x169 swinging 0.33↔10.73 s ACROSS sessions
+      // with tight in-session spread). Bound the stores to a working
+      // set; the bench reads none of this state.
+      .config("spark.sql.ui.retainedExecutions", "8")
+      .config("spark.ui.retainedJobs", "64")
+      .config("spark.ui.retainedStages", "128")
+      .config("spark.ui.retainedTasks", "2048")
+      .config("spark.appStateStore.asyncTracking.enable", "false")
+      .getOrCreate()
+    // keep the context's own level in agreement with the root-OFF set at
+    // Bench.main entry (setLogLevel also records the level on the context
+    // so a later library reset cannot quietly restore chatty defaults)
+    spark.sparkContext.setLogLevel("OFF")
+    spark
   }
 
   /** Per-query fingerprints of the CANONICALIZED optimized plan, written

@@ -877,8 +877,14 @@ object HashFunctions {
   def jaccardLongs(a: Column, b: Column): Column =
     ColumnGlue.column(JaccardLongs(ColumnGlue.expression(a), ColumnGlue.expression(b)))
 
-  /** Column API for [[IntersectCountLongs]] over two sorted-distinct
-    * array<long> set columns.
+  /** Column API for [[IntersectCountLongs]]: |a ∩ b| of two array<long> set
+    * columns.
+    *
+    * Precondition: both arrays are sorted ascending and hold no duplicates,
+    * as [[tokenHashSet]] and the `shingleSets` outputs are. Nothing checks
+    * it: the merge walk skips past elements that are out of order, so
+    * unsorted input silently UNDERCOUNTS (a duplicate present on both sides
+    * counts more than once).
     */
   def intersectLongs(a: Column, b: Column): Column =
     ColumnGlue.column(IntersectCountLongs(

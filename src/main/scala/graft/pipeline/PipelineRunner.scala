@@ -3,8 +3,9 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.time.Instant
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 /** One pipeline cycle — the reference's whole DagRun (SURVEY.md §3.1):
   *
@@ -118,24 +119,23 @@ object PipelineRunner {
       .write.mode(SaveMode.Append).parquet(s"${cfg.stateDir}/history")
   }
 
-  /** History table, or a schema-correct empty frame if no cycle has written
-    * yet — so dashboard queries compile (and return empties) either way.
+  /** The history table's schema: a RunStatus row plus its cycle's time. */
+  private[graft] val HistorySchema: StructType =
+    Encoders.product[RunStatus].schema.add("cycleTs", TimestampType)
+
+  /** History table read with [[HistorySchema]] (no footer is opened to plan
+    * it), or an empty frame of that schema if no cycle has written yet — so
+    * dashboard queries compile (and return empties) either way.
     *
-    * Read with mergeSchema and backfill: the history dir is append-only
-    * across engine versions, so files written before a RunStatus field
-    * existed (e.g. origBytes/archiveBytes) must still read — merged schema,
-    * missing columns zero-filled — rather than depend on which file's
-    * footer wins schema inference.
+    * The history dir is append-only across engine versions: a file written
+    * before a RunStatus field existed (origBytes/archiveBytes) reads that
+    * column as null, filled with 0.
     */
   def history(spark: SparkSession, cfg: GraftConfig): DataFrame = {
-    import spark.implicits._
     val p = s"${cfg.stateDir}/history"
-    if (!Files.exists(Paths.get(p)))
-      return spark.emptyDataset[RunStatus].toDF()
-        .withColumn("cycleTs", lit(null).cast("timestamp"))
-    var df = spark.read.option("mergeSchema", "true").parquet(p)
-    for (c <- Seq("origBytes", "archiveBytes"))
-      if (!df.columns.contains(c)) df = df.withColumn(c, lit(0L))
+    val df =
+      if (Files.exists(Paths.get(p))) spark.read.schema(HistorySchema).parquet(p)
+      else spark.createDataFrame(java.util.List.of[Row](), HistorySchema)
     df.na.fill(0L, Seq("origBytes", "archiveBytes"))
   }
 

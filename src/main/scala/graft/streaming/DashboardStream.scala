@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.StoredManifest
-import graft.pipeline.{GraftConfig, RunAnalytics, RunStatus}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import graft.pipeline.{GraftConfig, PipelineRunner, RunAnalytics}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.TimestampType
 
 /** Streaming refresh of the five Grafana dashboard panels — the monitoring
   * loop the reference closes OUTSIDE the engine (Grafana polls Postgres on
@@ -40,9 +39,8 @@ object DashboardStream {
   /** Start the refresh stream over the history table. */
   def start(spark: SparkSession, cfg: GraftConfig,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery = {
-    val schema = Encoders.product[RunStatus].schema.add("cycleTs", TimestampType)
     spark.readStream
-      .schema(schema)
+      .schema(PipelineRunner.HistorySchema)
       .parquet(s"${cfg.stateDir}/history")
       .writeStream
       .queryName("dashboard-refresh")

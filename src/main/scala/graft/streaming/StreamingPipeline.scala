@@ -36,7 +36,7 @@ object StreamingPipeline {
         // a failed DagRun). Letting the exception escape would terminate the
         // query and re-run recordFailures on the replayed batch at restart,
         // double-counting the same failures.
-        try { processReadyBatch(ready, cfg, batchId); () }
+        try { processReadyBatch(ready, cfg); () }
         catch {
           case e: VerifyGate.BatchFailedException =>
             log.warn(s"batch $batchId failed verify: ${e.getMessage}")
@@ -53,8 +53,7 @@ object StreamingPipeline {
     */
   private[streaming] def processReadyBatch(
       ready: Dataset[DebounceStream.ReadyRun],
-      cfg: GraftConfig,
-      batchId: Long): VerifyGate.BatchStats = {
+      cfg: GraftConfig): VerifyGate.BatchStats = {
     val spark = ready.sparkSession
     import spark.implicits._
     val ledger = new LedgerStore(spark, cfg.stateDir, cfg.maxAttempts)

@@ -87,7 +87,8 @@ class KernelPropertySpec extends AnyFunSuite {
       val union = a.toSet.union(b.toSet).size
       val expected = if (union == 0) 0.0 else inter.toDouble / union
       JaccardLongs(litLongs(a), litLongs(b)).eval()
-        .asInstanceOf[Double] == expected
+        .asInstanceOf[Double] == expected &&
+        IntersectCountLongs(litLongs(a), litLongs(b)).eval() == inter.toLong
     })
   }
 

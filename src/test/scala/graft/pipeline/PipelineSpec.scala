@@ -205,6 +205,25 @@ class PipelineSpec extends SparkSpec {
     assert(h.getAs[Long]("minArc") > 0, "committed tar bytes must be recorded")
   }
 
+  test("history reads a file written before origBytes/archiveBytes existed, with zeros") {
+    val cfg = freshCfg(copyCmd)
+    PipelineRunner.runCycle(spark, cfg, Instant.parse("2026-01-01T00:05:00Z"))
+    import spark.implicits._
+    // a file of an engine version whose RunStatus had no byte columns,
+    // beside the current cycle's file
+    val ts = java.sql.Timestamp.from(Instant.parse("2026-01-01T00:00:00Z"))
+    Seq(("runOld", "plate one", "in", "runOld.mzML", "success", "", ts, ts, true, ts))
+      .toDF("base", "plateRel", "in", "outfile", "state", "message",
+        "startTs", "endTs", "archived", "cycleTs")
+      .coalesce(1).write.mode("append").parquet(s"${cfg.stateDir}/history")
+    val rows = PipelineRunner.history(spark, cfg)
+      .select("base", "origBytes", "archiveBytes").as[(String, Long, Long)]
+      .collect().sortBy(_._1).toSeq
+    assert(rows.map(_._1) == Seq("runA", "runB", "runC", "runOld"))
+    assert(rows.last == (("runOld", 0L, 0L)))
+    assert(rows.init.forall { case (_, orig, arc) => orig > 0 && arc > 0 }, rows.toString)
+  }
+
   test("deleteOrig removes the source run after archive") {
     val cfg = freshCfg(copyCmd, extra = _.copy(deleteOrig = true))
     PipelineRunner.runCycle(spark, cfg, Instant.parse("2026-01-01T00:00:00Z"))
