@@ -30,6 +30,15 @@ load as TIMESTAMPTZ and CAST(.. AS TIMESTAMP) renders in the session
 zone, so on a non-UTC box the Spark side would shift off midnight
 against the oracle's DATE side. Not part of the shipped library —
 local iteration tooling only.
+
+Every CTE of an oracle query runs AS MATERIALIZED (materialize_ctes;
+the registry's oracle SQL is untouched). DuckDB 1.0 inlines CTEs, and
+x160's chained label-propagation CTEs each reference the previous level
+twice, so inlined the work doubles per level: the check spilled more
+than 10 GB and did not finish. Materialized, it checks in seconds, and
+no other query's result changes. Spill goes to a temp dir under /tmp,
+capped at TEMP_CAP, so a runaway query fails instead of filling the
+disk of the working directory.
 """
 import json
 import os
@@ -40,6 +49,18 @@ import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+TEMP_CAP = "5GB"
+
+# A CTE head: `WITH [RECURSIVE] name [(cols)] AS (` or, after the previous
+# CTE's closing paren, `, name [(cols)] AS (`.
+CTE_HEAD = re.compile(
+    r"(\bWITH\s+(?:RECURSIVE\s+)?|\)\s*,\s*)(\w+(?:\s*\([^()]*\))?\s+AS)\s*\(",
+    re.IGNORECASE)
+
+
+def materialize_ctes(sql):
+    """`sql` with every CTE marked AS MATERIALIZED (see module doc)."""
+    return CTE_HEAD.sub(r"\1\2 MATERIALIZED (", sql)
 
 
 def cols_of(con, rel_sql):
@@ -147,6 +168,8 @@ def check_one(con, name, sql, out_dir):
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
+    con.execute(f"SET temp_directory='/tmp/check_oracle_{os.getpid()}'")
+    con.execute(f"SET max_temp_directory_size='{TEMP_CAP}'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -157,7 +180,7 @@ def main(sf_dir, out_dir):
             n_skip += 1  # SPARK_GRAFT_ONLY run: query not materialized
             continue
         try:
-            line = check_one(con, name, sql, out_dir)
+            line = check_one(con, name, materialize_ctes(sql), out_dir)
         except Exception as e:  # noqa: BLE001
             line = f"FAIL {name}: {e}"
         print(line)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.sql.Timestamp
 import java.time.Instant
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
@@ -102,21 +102,26 @@ object PipelineRunner {
     ledger.recordFailures(statusDf)
 
     appendHistory(cfg, statusDf, now)
+    ledger.compact(historyPath(cfg), HistorySchema)
 
     val st = VerifyGate.stats(statuses)
     VerifyGate.check(st, cfg.failThreshold)
     st
   }
 
+  private def historyPath(cfg: GraftConfig): String = s"${cfg.stateDir}/history"
+
   /** Run-history table — the engine's task_instance analog; the B1-B9
-    * analytics queries run over it (SURVEY.md §7.2.h). One file per batch.
+    * analytics queries run over it (SURVEY.md §7.2.h). Each batch appends
+    * one file; [[runBatch]] then has the ledger compact the table.
     */
   private def appendHistory(cfg: GraftConfig, statuses: DataFrame, now: Instant): Unit = {
     if (statuses.isEmpty) return
+    LedgerStore.reopen(historyPath(cfg))
     statuses
       .withColumn("cycleTs", lit(new Timestamp(now.toEpochMilli)))
       .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(s"${cfg.stateDir}/history")
+      .write.mode(SaveMode.Append).parquet(historyPath(cfg))
   }
 
   /** The history table's schema: a RunStatus row plus its cycle's time. */
@@ -124,20 +129,19 @@ object PipelineRunner {
     Encoders.product[RunStatus].schema.add("cycleTs", TimestampType)
 
   /** History table read with [[HistorySchema]] (no footer is opened to plan
-    * it), or an empty frame of that schema if no cycle has written yet — so
-    * dashboard queries compile (and return empties) either way.
+    * it) from [[LedgerStore.snapshotDir]], or an empty frame of that schema if
+    * no cycle has written yet — so dashboard queries compile (and return
+    * empties) either way.
     *
-    * The history dir is append-only across engine versions: a file written
-    * before a RunStatus field existed (origBytes/archiveBytes) reads that
-    * column as null, filled with 0.
+    * Files of earlier engine versions stay readable, also once compacted
+    * with newer ones: a row written before a RunStatus field existed
+    * (origBytes/archiveBytes) reads that column as null, filled with 0.
     */
-  def history(spark: SparkSession, cfg: GraftConfig): DataFrame = {
-    val p = s"${cfg.stateDir}/history"
-    val df =
-      if (Files.exists(Paths.get(p))) spark.read.schema(HistorySchema).parquet(p)
-      else spark.createDataFrame(java.util.List.of[Row](), HistorySchema)
-    df.na.fill(0L, Seq("origBytes", "archiveBytes"))
-  }
+  def history(spark: SparkSession, cfg: GraftConfig): DataFrame =
+    LedgerStore.snapshotDir(historyPath(cfg))
+      .fold(spark.createDataFrame(java.util.List.of[Row](), HistorySchema))(
+        spark.read.schema(HistorySchema).parquet(_))
+      .na.fill(0L, Seq("origBytes", "archiveBytes"))
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * pipeline maintains the tables its monitoring queries read, exactly as the
   * reference's Airflow metadata DB feeds its dashboards.
   *
-  * history schema (PipelineRunner.appendHistory): base, plateRel, in, outfile,
-  * state, message, startTs, endTs, archived, cycleTs.
+  * history schema (PipelineRunner.HistorySchema): base, plateRel, in, outfile,
+  * state, message, startTs, endTs, archived, origBytes, archiveBytes, cycleTs.
   */
 object RunAnalytics {
 

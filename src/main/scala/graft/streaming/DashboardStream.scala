@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.StoredManifest
 import graft.pipeline.{GraftConfig, PipelineRunner, RunAnalytics}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming refresh of the five Grafana dashboard panels — the monitoring
@@ -10,8 +10,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * a 5-minute `refresh` cadence,
   * `/root/reference/grafana/provisioning/dashboards/msconvert.json:6-7`),
   * here closed INSIDE it: a Structured Streaming query watches the
-  * pipeline's append-only `history` table and re-publishes every panel as
-  * a parquet "materialized view" whenever a cycle lands new rows.
+  * pipeline's `history` table and re-publishes every panel as a parquet
+  * "materialized view" whenever a cycle lands a new file there — its
+  * batch's appended file, or the one file a compaction
+  * ([[graft.pipeline.LedgerStore]]) rewrites the table into.
   *
   * Publication is crash-safe via [[graft.StoredManifest]]: each refresh
   * writes ALL panels under a fresh `gen_<batchId>` directory, then flips
@@ -58,6 +60,12 @@ object DashboardStream {
     * new one, flip the manifest. Also callable synchronously (a cycle-end
     * hook) — the streaming form exists so refresh latency is bounded by
     * the trigger, not by the caller remembering to refresh.
+    *
+    * A compaction lands one new file in `history/`, which the stream takes
+    * as a refresh signal; that is harmless, since the batch rows are never
+    * read. A refresh that overlaps a compaction's rename can still list a
+    * file the rename then removes, so the panels are recomputed once on a
+    * missing-file error instead of stopping the stream.
     */
   def refresh(spark: SparkSession, cfg: GraftConfig, gen: Long): Unit = {
     val dir = dashDir(cfg)
@@ -69,12 +77,24 @@ object DashboardStream {
     if (StoredManifest.exists(dir) && StoredManifest.read(dir)._1 == genName)
       return
     StoredManifest.sweepUnreachable(dir)
-    val panels = RunAnalytics.dashboard(spark, cfg)
-    panels.foreach { case (name, df) =>
-      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$genName/$name")
+    def publish(): Seq[String] = {
+      val panels = RunAnalytics.dashboard(spark, cfg)
+      panels.foreach { case (name, df) =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$genName/$name")
+      }
+      panels.keys.toSeq.sorted
     }
-    StoredManifest.write(dir, genName, panels.keys.toSeq.sorted)
+    val names = try publish() catch { case e: Exception if missingFile(e) => publish() }
+    StoredManifest.write(dir, genName, names)
   }
+
+  /** Whether `e` (or a cause) says a file or path read was not there. */
+  private[streaming] def missingFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => true
+      case a: AnalysisException => a.getCondition == "PATH_NOT_FOUND"
+      case _ => false
+    }
 
   def published(cfg: GraftConfig): Boolean = StoredManifest.exists(dashDir(cfg))
 

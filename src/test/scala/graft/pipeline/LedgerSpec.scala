@@ -63,4 +63,29 @@ class LedgerSpec extends SparkSpec {
     assert(ledger.skipKeys.as[(String, String)].collect().toSet == Set(("a", "p")),
       "only the 3-strike row enters the skip set")
   }
+
+  test("a snapshot swap cut between its renames: readers and the next write use <table>.old") {
+    val stateDir = Files.createTempDirectory("graft-ledger3").toString
+    val ledger = new LedgerStore(spark, stateDir, maxAttempts = 2)
+    ledger.recordFailures(Seq(status("a", "failed"), status("a", "failed"), status("b", "failed"))
+      .toDS().toDF())
+    ledger.appendConverted(Seq(status("c", "success"), status("d", "success")).toDS().toDF())
+    def keys(df: org.apache.spark.sql.DataFrame) = df.as[(String, String)].collect().toSet
+    val (skip, done) = (keys(ledger.skipKeys), keys(ledger.doneKeys))
+    assert(skip == Set(("a", "p")) && done == Set(("a", "p"), ("c", "p"), ("d", "p")))
+
+    // the crash window: live renamed to .old, the new snapshot not yet moved in
+    for (t <- Seq("attempts", "converted"))
+      Files.move(java.nio.file.Paths.get(stateDir, t), java.nio.file.Paths.get(stateDir, s"$t.old"))
+    assert(keys(ledger.skipKeys) == skip && keys(ledger.doneKeys) == done)
+
+    ledger.recordFailures(Seq(status("b", "failed")).toDS().toDF())
+    ledger.appendConverted(Seq(status("e", "success")).toDS().toDF())
+    val dirs = Files.list(java.nio.file.Paths.get(stateDir)).iterator().asScala
+      .map(_.getFileName.toString).toSet
+    assert(dirs == Set("attempts", "converted"), dirs)
+    assert(keys(ledger.skipKeys) == Set(("a", "p"), ("b", "p")))
+    assert(keys(ledger.converted.select("base", "plateRel")) ==
+      Set(("c", "p"), ("d", "p"), ("e", "p")))
+  }
 }

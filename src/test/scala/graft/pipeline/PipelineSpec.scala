@@ -216,12 +216,31 @@ class PipelineSpec extends SparkSpec {
       .toDF("base", "plateRel", "in", "outfile", "state", "message",
         "startTs", "endTs", "archived", "cycleTs")
       .coalesce(1).write.mode("append").parquet(s"${cfg.stateDir}/history")
-    val rows = PipelineRunner.history(spark, cfg)
-      .select("base", "origBytes", "archiveBytes").as[(String, Long, Long)]
-      .collect().sortBy(_._1).toSeq
-    assert(rows.map(_._1) == Seq("runA", "runB", "runC", "runOld"))
-    assert(rows.last == (("runOld", 0L, 0L)))
-    assert(rows.init.forall { case (_, orig, arc) => orig > 0 && arc > 0 }, rows.toString)
+    def check(bases: Seq[String]): Unit = {
+      val rs = PipelineRunner.history(spark, cfg)
+        .select("base", "origBytes", "archiveBytes").as[(String, Long, Long)]
+        .collect().sortBy(_._1).toSeq
+      assert(rs.map(_._1) == bases)
+      assert(rs.filter(_._1 == "runOld") == Seq(("runOld", 0L, 0L)))
+      assert(rs.filter(_._1 != "runOld").forall { case (_, orig, arc) => orig > 0 && arc > 0 },
+        rs.toString)
+    }
+    check(Seq("runA", "runB", "runC", "runOld"))
+
+    // newer files up to CompactAt, then compaction: the old file's rows
+    // keep reading zeros from the one compacted file
+    val hist = s"${cfg.stateDir}/history"
+    val pads = (1 to LedgerStore.CompactAt - 2).map(i => f"pad$i%02d")
+    pads.foreach { b =>
+      Seq((b, "plate one", "in", s"$b.mzML", "success", "", ts, ts, true, 1L, 1L, ts))
+        .toDF(PipelineRunner.HistorySchema.fieldNames.toSeq: _*)
+        .coalesce(1).write.mode("append").parquet(hist)
+    }
+    new LedgerStore(spark, cfg.stateDir).compact(hist, PipelineRunner.HistorySchema)
+    val files = Files.list(java.nio.file.Paths.get(hist)).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))
+    assert(files == 1)
+    check(pads ++ Seq("runA", "runB", "runC", "runOld"))
   }
 
   test("deleteOrig removes the source run after archive") {

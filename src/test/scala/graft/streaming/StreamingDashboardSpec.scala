@@ -103,4 +103,16 @@ class StreamingDashboardSpec extends SparkSpec {
         "no new history must mean no republish")
     } finally graft.StoredArtifacts.deleteTree(root.toString)
   }
+
+  test("a refresh recognizes a file or path that vanished under it as a missing-file error") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-vanish").resolve("t").toString
+    Seq(1, 2).toDF("x").coalesce(1).write.parquet(dir)
+    val listed = spark.read.parquet(dir) // files listed now, read at collect
+    Files.list(java.nio.file.Paths.get(dir)).forEach(Files.delete(_))
+    assert(DashboardStream.missingFile(intercept[Exception](listed.collect())))
+    Files.delete(java.nio.file.Paths.get(dir))
+    assert(DashboardStream.missingFile(intercept[Exception](spark.read.parquet(dir))))
+    assert(!DashboardStream.missingFile(new RuntimeException("boom", new IllegalStateException)))
+  }
 }
