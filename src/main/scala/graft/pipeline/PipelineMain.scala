@@ -5,7 +5,7 @@ import graft.streaming.PipelinePoller
 
 /** CLI entry point for the watch-convert-archive pipeline.
   *
-  * Usage:
+  * Usage (local cores from `SPARK_GRAFT_CPUS`, see [[graft.GraftSession.env]]):
   *   runMain graft.pipeline.PipelineMain <watchDir> <outputDir> <archiveDir> \
   *     <stateDir> <cycles> <intervalS> <quietS> -- <command...>
   *
@@ -22,7 +22,7 @@ object PipelineMain {
     val cfg = GraftConfig(
       watchDir = watch, outputDir = out, archiveDir = arch, stateDir = state,
       quietS = quietS.toInt, command = cmd.drop(1).toSeq)
-    val spark = GraftSession.local("graft-pipeline", 8)
+    val spark = GraftSession.local("graft-pipeline", GraftSession.env()._1)
     val results = new PipelinePoller(spark, cfg, intervalS.toInt)
       .run(cycles.toInt)
     results.zipWithIndex.foreach {

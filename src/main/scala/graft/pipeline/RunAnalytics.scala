@@ -15,12 +15,19 @@ import org.apache.spark.sql.functions._
 object RunAnalytics {
 
   /** Panel 1 (msconvert.json:20): files converted in the trailing 24 h
-    * before `now` (the reference uses NOW(); deterministic callers pass it).
+    * before the latest `endTs` in `history` (the reference uses NOW(); the
+    * latest run end is the engine's deterministic clock), 0 on an empty
+    * history. `now` is a one-row `max(endTs)` aggregate joined into the
+    * plan, not a collected value: building the panel runs no job, and the
+    * plan carries no per-refresh timestamp literal, which Spark would
+    * inline into generated Java source and so compile new classes on every
+    * refresh.
     */
-  def converted24h(history: DataFrame, now: java.sql.Timestamp): DataFrame =
+  def converted24h(history: DataFrame): DataFrame =
     history
-      .where(col("state") === "success" &&
-        col("endTs") > lit(now) - expr("INTERVAL 24 HOURS"))
+      .where(col("state") === "success")
+      .crossJoin(history.agg(max(col("endTs")).as("now")))
+      .where(col("endTs") > col("now") - expr("INTERVAL 24 HOURS"))
       .agg(count(lit(1)).as("converted"))
 
   /** Panel 2 (msconvert.json:48): avg conversion minutes, 1 decimal. */
@@ -82,16 +89,15 @@ object RunAnalytics {
           round(lit(100.0) * (lit(1.0) - col("archive_bytes") / col("orig_bytes")), 1))
           .otherwise(lit(0.0)))
 
-  /** All panels as named frames (dashboard refresh equivalent). Safe on an
-    * empty history: panels return empty/zero frames rather than null-filter
-    * surprises (max(endTs) of an empty table is null).
+  /** All panels as named frames (dashboard refresh equivalent). Building
+    * them runs no Spark job. Safe on an empty history: panels return
+    * empty/zero frames rather than null-filter surprises (max(endTs) of an
+    * empty table is null).
     */
   def dashboard(spark: SparkSession, cfg: GraftConfig): Map[String, DataFrame] = {
     val h = PipelineRunner.history(spark, cfg)
-    val now = Option(h.agg(max(col("endTs"))).head().getTimestamp(0))
-      .getOrElse(new java.sql.Timestamp(0L))
     Map(
-      "converted_24h" -> converted24h(h, now),
+      "converted_24h" -> converted24h(h),
       "avg_minutes" -> avgConversionMinutes(h),
       "per_hour" -> conversionsPerHour(h),
       "recent_cycles" -> recentCycles(h),

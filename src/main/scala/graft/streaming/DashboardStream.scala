@@ -27,7 +27,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * body recomputes the panels over the full history table, which is
   * run-METADATA (one row per conversion), not data — at 1024 runs/cycle
   * (the reference's MAX_MAP) a year of history is a few million rows, a
-  * single-task scan. Incrementalizing the two windowed panels
+  * single-task scan. What a refresh costs is per query, not per row:
+  * each panel is planned and scheduled anew. The panels' plans are the
+  * same from one refresh to the next (the 24 h window's `now` is derived
+  * inside the plan, see [[graft.pipeline.RunAnalytics.converted24h]]), so
+  * a warm stream finds every generated class in Spark's code cache and
+  * compiles nothing. Incrementalizing the two windowed panels
   * (converted_24h, per_hour) with watermarked streaming aggregation is
   * possible but buys nothing at metadata cardinality and loses the
   * whole-history panels (avg, details), which need the table anyway.
