@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftglue.ColumnGlue
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 
 /** Native Catalyst expressions for the text-fingerprinting operators the
   * built-in function library can't express in one pass.
@@ -56,6 +56,68 @@ case class SimHash64(child: Expression, ngram: Int = 1)
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
+}
+
+/** md5-keyed 64-bit SimHash over word bigrams, returned as the ascending
+  * positive-vote bit positions (array<int>) — the cross-engine-exact
+  * signature of the x333/x348/x356 tier, one pass per document.
+  *
+  * Features are the bigrams `w(i) + " " + w(i+1)` (a null token is skipped
+  * as `concat_ws` skips it). Feature g hashes to `md5("s:" + g)`; its digest
+  * bytes 8–11 are `hi` and 12–15 are `lo` (unsigned 32-bit, i.e. the
+  * 17th–24th and 25th–32nd hex digits), and bit b of the feature is bit b of
+  * `lo` for b < 32, else bit b − 32 of `hi`. Each bigram occurrence votes
+  * ±1 on every bit; a bit is set when its vote sum is positive. Every step
+  * is integer arithmetic DuckDB reproduces with `md5`/`substr`/`>>`, so the
+  * oracle checks the same bits. A document with fewer than 2 tokens has no
+  * feature and yields an empty array.
+  */
+case class Md5SimHashBits(child: Expression)
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "md5_simhash_bits"
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelTypes.check(prettyName, child -> KernelTypes.stringArray)
+
+  override def nullSafeEval(input: Any): Any = {
+    val arr = input.asInstanceOf[ArrayData]
+    val n = arr.numElements()
+    val toks = Array.tabulate(n)(i =>
+      if (arr.isNullAt(i)) null else arr.getUTF8String(i).getBytes)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val votes = new Array[Int](64)
+    var i = 0
+    while (i < n - 1) {
+      val a = toks(i)
+      val b = toks(i + 1)
+      md.update(Md5SimHashBits.Prefix)
+      if (a != null) md.update(a)
+      if (a != null && b != null) md.update(Md5SimHashBits.Space)
+      if (b != null) md.update(b)
+      val d = md.digest()
+      // bytes 8–15 big-endian: hi in the upper 32 bits, lo in the lower,
+      // so bit b of h is the feature's bit b
+      var h = 0L
+      var k = 8
+      while (k < 16) { h = (h << 8) | (d(k) & 0xFFL); k += 1 }
+      var bit = 0
+      while (bit < 64) {
+        votes(bit) += (if (((h >>> bit) & 1L) == 1L) 1 else -1)
+        bit += 1
+      }
+      i += 1
+    }
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray((0 until 64).filter(votes(_) > 0).toArray)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Md5SimHashBits =
+    copy(child = newChild)
+}
+
+object Md5SimHashBits {
+  private val Prefix = "s:".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val Space = " ".getBytes(java.nio.charset.StandardCharsets.UTF_8)
 }
 
 /** Karp-Rabin polynomial rolling hash over an array<string> of tokens:
@@ -857,6 +919,12 @@ object HashFunctions {
   def simhash64(tokens: Column, ngram: Int = 1): Column =
     ColumnGlue.column(SimHash64(ColumnGlue.expression(tokens), ngram))
 
+  /** Column API for [[Md5SimHashBits]]: array<string> tokens → ascending
+    * positive-vote bit positions of the md5-keyed bigram SimHash.
+    */
+  def md5SimhashBits(tokens: Column): Column =
+    ColumnGlue.column(Md5SimHashBits(ColumnGlue.expression(tokens)))
+
   /** Column API for [[TokenRollingHash]]. */
   def tokenRollingHash(tokens: Column): Column =
     ColumnGlue.column(TokenRollingHash(ColumnGlue.expression(tokens)))
@@ -881,10 +949,9 @@ object HashFunctions {
     * columns.
     *
     * Precondition: both arrays are sorted ascending and hold no duplicates,
-    * as [[tokenHashSet]] and the `shingleSets` outputs are. Nothing checks
-    * it: the merge walk skips past elements that are out of order, so
-    * unsorted input silently UNDERCOUNTS (a duplicate present on both sides
-    * counts more than once).
+    * as [[tokenHashSet]] and the `shingleSets` outputs are. The kernel
+    * checks it per row and fails the task on unsorted or duplicate input,
+    * which the merge walk would otherwise silently undercount.
     */
   def intersectLongs(a: Column, b: Column): Column =
     ColumnGlue.column(IntersectCountLongs(

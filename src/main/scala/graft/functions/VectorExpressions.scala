@@ -383,6 +383,10 @@ case class JaccardLongs(left: Expression, right: Expression)
   * registry row). Exact same integer result by construction: both
   * inputs are [[TokenHashSet]]/`shingleSets` outputs (sorted, distinct),
   * where intersection-of-sets equals the merge-walk match count.
+  * The precondition is checked per row: an element that is not strictly
+  * greater than its predecessor on either side raises an
+  * IllegalArgumentException naming the side and index, since the walk
+  * would otherwise skip it and silently undercount.
   */
 case class IntersectCountLongs(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
@@ -392,24 +396,60 @@ case class IntersectCountLongs(left: Expression, right: Expression)
     KernelTypes.check(prettyName, left -> KernelTypes.longSet, right -> KernelTypes.longSet)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
+    import IntersectCountLongs.{next, requireSortedFrom}
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val na = x.numElements()
     val nb = y.numElements()
+    // the walk reads each element once and checks it against its
+    // predecessor there; the tail it never reaches is checked after it
     var i = 0; var j = 0; var common = 0L
-    while (i < na && j < nb) {
-      val av = x.getLong(i)
-      val bv = y.getLong(j)
-      if (av == bv) { common += 1L; i += 1; j += 1 }
-      else if (av < bv) i += 1
-      else j += 1
+    if (na > 0 && nb > 0) {
+      var av = x.getLong(0)
+      var bv = y.getLong(0)
+      while (i < na && j < nb) {
+        if (av <= bv) {
+          if (av == bv) {
+            common += 1L; j += 1
+            if (j < nb) bv = next(y, j, bv, "right")
+          }
+          i += 1
+          if (i < na) av = next(x, i, av, "left")
+        } else {
+          j += 1
+          if (j < nb) bv = next(y, j, bv, "right")
+        }
+      }
     }
+    requireSortedFrom(x, i + 1, "left")
+    requireSortedFrom(y, j + 1, "right")
     common
   }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IntersectCountLongs =
     copy(left = newLeft, right = newRight)
+}
+
+object IntersectCountLongs {
+  /** Element `k` of `s`, after checking it is above its predecessor `prev`. */
+  private def next(s: ArrayData, k: Int, prev: Long, side: String): Long = {
+    val v = s.getLong(k)
+    if (v <= prev)
+      throw new IllegalArgumentException(
+        s"intersect_count_longs: $side input must be sorted ascending with no " +
+          s"duplicates, but element $k ($v) follows $prev")
+    v
+  }
+
+  /** Checks elements `from` onwards of `s` against their predecessors. */
+  private def requireSortedFrom(s: ArrayData, from: Int, side: String): Unit = {
+    var k = math.max(from, 1)
+    if (k < s.numElements()) {
+      var prev = s.getLong(k - 1)
+      while (k < s.numElements()) { prev = next(s, k, prev, side); k += 1 }
+    }
+  }
 }
 
 /** `nTables` random-hyperplane LSH bucket codes in one pass over the vector

@@ -1537,45 +1537,28 @@ object Dedup {
   // from the two 32-bit md5 halves via shiftright/&1 — identical integer
   // ops both engines.
   //
-  // Scale shape: the 64 per-bit votes are 64 map-side-combinable column
-  // SUMs in one doc_id aggregate (no per-bit exploded shuffle — the
-  // exchange carries 64 longs per doc); buckets and verify shuffle only
+  // Scale shape: the signature is one native pass per doc
+  // (Md5SimHashBits: bigram md5 votes folded in the row, no exploded
+  // bigram rows, no shuffle); buckets and verify shuffle only
   // (chunk_key, doc_id) and bit-position lists. Production operator
-  // stays x04 (native SimHash64, one pass per doc).
+  // stays x04 (native SimHash64, xxhash-keyed, one pass per doc).
   /** md5-keyed SimHash positive-vote bit positions per doc — the
-    * cross-engine-exact signature shared by the x333 tier and its x348
-    * precision/recall advisor (the x31 no-drift discipline: one
-    * definition, two consumers; a vote-rule or hash-prefix change can
-    * never desynchronize the advisor from the tier it advises).
-    * Returns (doc_id, bits) localCheckpoint'ed — every consumer reads
-    * it at least twice (blocking + verify sides).
+    * cross-engine-exact signature shared by the x333 tier, its x348
+    * precision/recall advisor and x356's keeper labeling (the x31
+    * no-drift discipline: one definition, three consumers; a vote-rule or
+    * hash-prefix change can never desynchronize the advisor from the tier
+    * it advises). The per-doc fold is the [[graft.functions.Md5SimHashBits]]
+    * kernel, whose scaladoc gives the hash and vote rule the oracle SQL
+    * spells out; docs with fewer than 2 words have no bigram and no row.
+    * Returns (doc_id, bits) localCheckpoint'ed — every consumer reads it
+    * at least twice (blocking + verify sides).
     */
-  private def simhashBits(d: DataFrame): DataFrame = {
-    val tf = Par.fanOutScan(d, "doc_id")
+  private def simhashBits(d: DataFrame): DataFrame =
+    Par.fanOutScan(d, "doc_id")
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .where(size(col("w")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(w) - 2), i -> concat_ws(' ', w[i], w[i + 1]))"))
-        .as("g"))
-      .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
-    val votes = (0 until 64).map { b =>
-      val bit = if (b < 32) s"shiftright(lo, $b)" else s"shiftright(hi, ${b - 32})"
-      sum(expr(s"(($bit & 1) * 2 - 1) * c")).as(s"v$b")
-    }
-    tf
-      .withColumn("h", md5(concat(lit("s:"), col("g"))))
-      .select(col("doc_id"), col("c"),
-        expr("CAST(conv(substring(h, 17, 8), 16, 10) AS BIGINT)").as("hi"),
-        expr("CAST(conv(substring(h, 25, 8), 16, 10) AS BIGINT)").as("lo"))
-      .groupBy(col("doc_id"))
-      .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"),
-        array((0 until 64).map(b => col(s"v$b")): _*).as("vs"))
-      .select(col("doc_id"), expr(
-        """filter(transform(sequence(0, 63), b -> CASE WHEN vs[b] > 0 THEN b END),
-             x -> x IS NOT NULL)""").as("bits"))
+      .select(col("doc_id"), HashFunctions.md5SimhashBits(col("w")).as("bits"))
       .localCheckpoint(true)
-  }
 
   /** The registry's standard lossless truth tier at τ = 1/2: every doc
     * pair with exact 3-gram-shingle Jaccard ≥ 500‰ (integer millis),
@@ -1861,7 +1844,8 @@ object Dedup {
   // prefix-filter, integer J millis ≥ 500). Every cell is an integer
   // count or a floor-division milli ratio.
   //
-  // Scale shape: one bigram scan → 64-vote fold per doc; candidate pairs
+  // Scale shape: one bigram scan with a native signature fold per doc
+  // (shared simhashBits); candidate pairs
   // are chunk-bucket joins under the 32-doc hot-bucket cap (the x340
   // discipline); the τ sweep explodes the PAIR tables (both bounded),
   // never the corpus. The two 4-row summaries meet in a tau-keyed join.
@@ -2003,11 +1987,17 @@ object Dedup {
   //
   // Scale shape: two label tables (doc-domain), one join on doc_id, a
   // contingency rollup (cluster-domain), windows over it, a 1-row fold.
-  // The SimHash side re-runs x333's live pipeline (~1.5 s at sf0.1) —
-  // the deliberate trade: the exact side reads the storedClusters
-  // artifact because its build is iterative; the SimHash build is one
-  // pass, and storing it would put a second lifecycle between the
-  // oracled tier and its consumers for a ~1.5 s/pass saving.
+  // The SimHash side re-runs x333's live pipeline — the deliberate
+  // trade: the exact side reads the storedClusters artifact because its
+  // build is iterative; the SimHash build is one native pass per doc,
+  // and storing it would put a second lifecycle between the oracled
+  // tier and its consumers to save that one pass. The cluster counts
+  // are count_if over one row per ka / kb window partition, the row
+  // holding the partition's least other key ((ka, kb) is unique in the
+  // contingency table and both keys are non-null, so this is
+  // COUNT(DISTINCT)), not countDistinct: a distinct-aggregate Expand
+  // orders its projections by expression ids, which vary between plan
+  // builds, so each order compiled its own classes.
   private val x356 = GQuery(
     "x356_clustering_agreement", "ext-dedup-fuzzy tier-agreement rand-ari",
     (s, dir) => {
@@ -2020,10 +2010,12 @@ object Dedup {
       val wa = org.apache.spark.sql.expressions.Window.partitionBy(col("ka"))
       val wb = org.apache.spark.sql.expressions.Window.partitionBy(col("kb"))
       ct.withColumn("ai", sum(col("nij")).over(wa))
+        .withColumn("kb_min", min(col("kb")).over(wa))
         .withColumn("bj", sum(col("nij")).over(wb))
+        .withColumn("ka_min", min(col("ka")).over(wb))
         .agg(sum(col("nij")).cast("decimal(38,0)").as("n"),
-          countDistinct(col("ka")).as("clusters_exact"),
-          countDistinct(col("kb")).as("clusters_simhash"),
+          count_if(col("kb") === col("kb_min")).as("clusters_exact"),
+          count_if(col("ka") === col("ka_min")).as("clusters_simhash"),
           sum(expr("cast(nij as decimal(38,0)) * (nij - 1)")).as("pij"),
           sum(expr("cast(nij as decimal(38,0)) * (ai - 1)")).as("pa"),
           sum(expr("cast(nij as decimal(38,0)) * (bj - 1)")).as("pb"))

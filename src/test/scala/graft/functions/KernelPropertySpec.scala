@@ -92,6 +92,66 @@ class KernelPropertySpec extends AnyFunSuite {
     })
   }
 
+  test("IntersectCountLongs rejects unsorted or duplicate input on either side") {
+    val ok = litLongs(Seq(1L, 3L, 5L))
+    for (bad <- Seq(Seq(3L, 1L, 5L), Seq(1L, 3L, 3L), Seq(5L, 3L, 1L), Seq(2L, 2L))) {
+      for ((l, r, side) <- Seq((litLongs(bad), ok, "left"), (ok, litLongs(bad), "right"))) {
+        val e = intercept[IllegalArgumentException](IntersectCountLongs(l, r).eval())
+        assert(e.getMessage.contains(side) && e.getMessage.contains("sorted ascending"),
+          e.getMessage)
+      }
+    }
+    // an unsorted array whose disorder the merge walk would never visit
+    // (the other side runs out first) is rejected all the same
+    intercept[IllegalArgumentException](
+      IntersectCountLongs(litLongs(Seq(0L)), litLongs(Seq(9L, 8L))).eval())
+    holds(Prop.forAll(Gen.nonEmptyListOf(Gen.choose(-5L, 5L))) { xs =>
+      val strictly = xs.zip(xs.tail).forall { case (p, q) => p < q }
+      val threw =
+        try { IntersectCountLongs(litLongs(xs), litLongs(xs)).eval(); false }
+        catch { case _: IllegalArgumentException => true }
+      threw == !strictly
+    })
+  }
+
+  /** The md5 SimHash bit rule spelled out the way the oracle SQL does:
+    * bigram strings (`concat_ws(' ', ...)`, nulls skipped), the md5 hex
+    * digest of "s:" + bigram, `hi`/`lo` parsed from hex digits 17–24 and
+    * 25–32, one ±1 vote per bigram occurrence on each of the 64 bits.
+    */
+  private def md5SimhashBitsRef(ts: Seq[String]): Seq[Int] = {
+    val grams = ts.sliding(2).filter(_.length == 2)
+      .map(_.filter(_ != null).mkString(" ")).toSeq
+    val votes = new Array[Long](64)
+    for (g <- grams) {
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(("s:" + g).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val hex = d.map(b => f"${b & 0xff}%02x").mkString
+      val hi = java.lang.Long.parseLong(hex.substring(16, 24), 16)
+      val lo = java.lang.Long.parseLong(hex.substring(24, 32), 16)
+      for (b <- 0 until 64) {
+        val bit = if (b < 32) (lo >> b) & 1 else (hi >> (b - 32)) & 1
+        votes(b) += bit * 2 - 1
+      }
+    }
+    (0 until 64).filter(votes(_) > 0)
+  }
+
+  private def md5SimhashBits(ts: Seq[String]): Seq[Int] =
+    Md5SimHashBits(litTokens(ts)).eval()
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray().toSeq
+
+  test("Md5SimHashBits == the md5-hex bigram vote definition") {
+    val withNulls: Gen[List[String]] =
+      Gen.listOf(Gen.frequency(6 -> token, 1 -> Gen.const(null: String)))
+    holds(Prop.forAll(withNulls) { ts => md5SimhashBits(ts) == md5SimhashBitsRef(ts) })
+    // 0- and 1-token arrays have no bigram; 2 tokens have exactly one
+    assert(md5SimhashBits(Nil).isEmpty && md5SimhashBits(Seq("solo")).isEmpty)
+    for (ts <- Seq(Seq("a", "b"), Seq("", ""), Seq("", "x"), Seq("é", "世界"),
+        Seq(null, "x"), Seq(null, null), Seq("naïve", "café", "naïve", "café")))
+      assert(md5SimhashBits(ts) == md5SimhashBitsRef(ts), ts)
+  }
+
   private val litWord: String => Literal =
     w => Literal.create(w, org.apache.spark.sql.types.StringType)
 

@@ -360,4 +360,43 @@ class DedupSpec extends SparkSpec {
     assert(rows(1).getAs[Long]("n_true") == x225Pairs,
       s"x402@800 n_true ${rows(1).getAs[Long]("n_true")} != x225 $x225Pairs")
   }
+
+  test("md5SimhashBits equals the 64-sum vote aggregate on every sf0.01 document") {
+    // the reference is the former x333/x348/x356 signature plan: explode
+    // bigrams, count each per doc, md5-hex -> conv halves, one ANSI sum
+    // per bit, then the positive-vote bit list
+    val sf0_01 = new java.io.File(new java.io.File(sf001).getParentFile, "sf0.01").getPath
+    val docs = Tables(spark, sf0_01, "documents")
+      .select(col("doc_id"), split(col("text"), " ").as("w"))
+      .where(size(col("w")) >= 2)
+    val votes = (0 until 64).map { b =>
+      val bit = if (b < 32) s"shiftright(lo, $b)" else s"shiftright(hi, ${b - 32})"
+      sum(expr(s"(($bit & 1) * 2 - 1) * c")).as(s"v$b")
+    }
+    val reference = docs
+      .select(col("doc_id"), explode(expr(
+        "transform(sequence(0, size(w) - 2), i -> concat_ws(' ', w[i], w[i + 1]))"))
+        .as("g"))
+      .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
+      .withColumn("h", md5(concat(lit("s:"), col("g"))))
+      .select(col("doc_id"), col("c"),
+        expr("CAST(conv(substring(h, 17, 8), 16, 10) AS BIGINT)").as("hi"),
+        expr("CAST(conv(substring(h, 25, 8), 16, 10) AS BIGINT)").as("lo"))
+      .groupBy(col("doc_id"))
+      .agg(votes.head, votes.tail: _*)
+      .select(col("doc_id"),
+        array((0 until 64).map(b => col(s"v$b")): _*).as("vs"))
+      .select(col("doc_id"), expr(
+        """filter(transform(sequence(0, 63), b -> CASE WHEN vs[b] > 0 THEN b END),
+             x -> x IS NOT NULL)""").as("bits"))
+    val kernel = docs.select(col("doc_id"),
+      graft.functions.HashFunctions.md5SimhashBits(col("w")).as("bits"))
+    def bitsById(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Int]] =
+      df.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    val (want, got) = (bitsById(reference), bitsById(kernel))
+    assert(want.size > 100, s"too few documents to compare: ${want.size}")
+    assert(got.size == want.size, "one signature per multi-word document")
+    val diff = want.keys.filter(id => got(id) != want(id))
+    assert(diff.isEmpty, s"${diff.size} docs differ, e.g. ${diff.take(3)}")
+  }
 }
