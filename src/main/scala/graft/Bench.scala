@@ -368,21 +368,23 @@ object Bench {
     * another JVM is stealing slows the kernel in direct proportion — the
     * failure mode the wall-to-busy `contention` ratio is structurally
     * blind to (uniform steal inflates its numerator and denominator
-    * together). The digest chain folds into a check byte so the loop
-    * cannot be dead-code-eliminated.
+    * together).
     */
-  private[graft] def calibrationProbeMs(): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def run(): Double = {
-      var buf = Array.fill[Byte](64)(0x5a.toByte)
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < 400000) { buf = md.digest(buf); i += 1 }
-      val ms = (System.nanoTime() - t0) / 1e6
-      if (buf(0) == 0x7f && buf(1) == 0x7f) System.err.print("") // keep live
-      ms
-    }
-    math.min(run(), math.min(run(), run()))
+  private[graft] def calibrationProbeMs(): Double =
+    math.min(singleKernelRunMs(), math.min(singleKernelRunMs(), singleKernelRunMs()))
+
+  /** One timed run of the calibration kernel, in ms: 4·10⁵ chained MD5
+    * digests of a 64-byte buffer filled with `seed`. The chain folds into
+    * a check byte so the loop cannot be dead-code-eliminated.
+    */
+  private def md5ChainMs(md: java.security.MessageDigest, seed: Byte): Double = {
+    var buf = Array.fill[Byte](64)(seed)
+    val t0 = System.nanoTime()
+    var i = 0
+    while (i < 400000) { buf = md.digest(buf); i += 1 }
+    val ms = (System.nanoTime() - t0) / 1e6
+    if (buf(0) == 0x7f && buf(1) == 0x7f) System.err.print("") // keep live
+    ms
   }
 
   /** Thread count for the PARALLEL probe: every schedulable core (the
@@ -394,40 +396,15 @@ object Bench {
   private[graft] val ProbeMcThreads: Int =
     math.min(32, math.max(8, Runtime.getRuntime.availableProcessors))
 
-  /** PARALLEL calibration kernel (round 14 — the r13 "what's missing"
-    * #1): the SAME MD5-chain kernel run on [[ProbeMcThreads]] threads
-    * SIMULTANEOUSLY; one probe point is the min over three back-to-back
-    * runs of the SLOWEST thread's time. The single-thread probe is
-    * structurally blind to mild UNIFORM multi-core steal: with one probe
-    * thread on a 32-core box, a hog load that slows the bench's 32
-    * executor threads 10-15 % almost never collides with the probe (31
-    * free cores to land on), so three r13 passes carried 11-14 %
-    * inflation that probe_drift read as clean. This kernel occupies
-    * EVERY core at once, so any concurrent load must collide with at
-    * least one probe thread, and the max-over-threads statistic reports
-    * the collision; on an idle box all threads run unimpeded and the
-    * reading sits at the single-thread time (~50 ms — the kernel is
-    * pure CPU, no shared state, no memory bandwidth pressure). The
-    * min-of-3 filters the bench JVM's own compiler/GC threads finishing
-    * previous work (the same idle-box spike the single-thread probe
-    * min-filters). Calibration numbers and the adjudication rule are in
-    * BASELINE.md.
-    */
   /** Running floor of single-thread kernel runs — the settle gate's
     * reference. Updated by every single-thread kernel run (probe points
     * and settle attempts alike), so it converges on the box's true
     * idle kernel time within the first few readings.
     */
-  @volatile private var kernelFloorMs: Double = Double.MaxValue
+  @volatile private[graft] var kernelFloorMs: Double = Double.MaxValue
 
   private def singleKernelRunMs(): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    var buf = Array.fill[Byte](64)(0x5a.toByte)
-    val t0 = System.nanoTime()
-    var i = 0
-    while (i < 400000) { buf = md.digest(buf); i += 1 }
-    val ms = (System.nanoTime() - t0) / 1e6
-    if (buf(0) == 0x7f && buf(1) == 0x7f) System.err.print("") // keep live
+    val ms = md5ChainMs(java.security.MessageDigest.getInstance("MD5"), 0x5a.toByte)
     kernelFloorMs = math.min(kernelFloorMs, ms)
     ms
   }
@@ -455,6 +432,25 @@ object Bench {
     }
   }
 
+  /** PARALLEL calibration kernel (round 14 — the r13 "what's missing"
+    * #1): the SAME MD5-chain kernel run on [[ProbeMcThreads]] threads
+    * SIMULTANEOUSLY; one probe point is the min over three back-to-back
+    * runs of the SLOWEST thread's time. The single-thread probe is
+    * structurally blind to mild UNIFORM multi-core steal: with one probe
+    * thread on a 32-core box, a hog load that slows the bench's 32
+    * executor threads 10-15 % almost never collides with the probe (31
+    * free cores to land on), so three r13 passes carried 11-14 %
+    * inflation that probe_drift read as clean. This kernel occupies
+    * EVERY core at once, so any concurrent load must collide with at
+    * least one probe thread, and the max-over-threads statistic reports
+    * the collision; on an idle box all threads run unimpeded and the
+    * reading sits at the single-thread time (~50 ms — the kernel is
+    * pure CPU, no shared state, no memory bandwidth pressure). The
+    * min-of-3 filters the bench JVM's own compiler/GC threads finishing
+    * previous work (the same idle-box spike the single-thread probe
+    * min-filters). Calibration numbers and the adjudication rule are in
+    * BASELINE.md.
+    */
   private[graft] def calibrationProbeMcMs(): Double = {
     val n = ProbeMcThreads
     settleForMcProbe()
@@ -464,13 +460,8 @@ object Bench {
       val threads = (0 until n).map { ti =>
         val t = new Thread(() => {
           val md = java.security.MessageDigest.getInstance("MD5")
-          var buf = Array.fill[Byte](64)((0x5a + ti).toByte)
           start.await()
-          val t0 = System.nanoTime()
-          var i = 0
-          while (i < 400000) { buf = md.digest(buf); i += 1 }
-          times(ti) = (System.nanoTime() - t0) / 1e6
-          if (buf(0) == 0x7f && buf(1) == 0x7f) System.err.print("") // keep live
+          times(ti) = md5ChainMs(md, (0x5a + ti).toByte)
         })
         t.setDaemon(true)
         t.start()

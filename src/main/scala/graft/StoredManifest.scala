@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The atomic pointer-file commit shared by every generation-directory
   * artifact (the IVF index's [[graft.queries.AnnManifest]], the streaming
@@ -76,6 +77,27 @@ object StoredManifest {
   }
 
   def exists(dir: String): Boolean = Files.exists(manifestPath(dir))
+
+  /** The live generation's name. */
+  def live(dir: String): String = read(dir)._1
+
+  /** Whether `gen` is already the live generation — every publisher's
+    * at-least-once guard: `foreachBatch` re-delivers a batch whose
+    * manifest flip landed before its checkpoint commit, and rewriting the
+    * live generation in place would un-publish it mid-overwrite.
+    */
+  def isLive(dir: String, gen: String): Boolean = exists(dir) && live(dir) == gen
+
+  /** Read one segment of the live generation — always a complete
+    * generation, never a mid-write mixture; a segment the generation
+    * does not list fails.
+    */
+  def readSegment(spark: SparkSession, dir: String, segment: String): DataFrame = {
+    val (gen, segments) = read(dir)
+    require(segments.contains(segment),
+      s"unknown segment '$segment'; published: ${segments.mkString(", ")}")
+    spark.read.parquet(s"$dir/$gen/$segment")
+  }
 
   /** Pin a generation: its directory becomes sweep-exempt until [[unpin]],
     * so a reader can keep serving a historical snapshot while compactions

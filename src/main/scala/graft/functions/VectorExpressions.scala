@@ -98,22 +98,28 @@ private[functions] object KernelTypes {
     }
 }
 
+/** A kernel over two vectors (array<float|double>): the type check and
+  * each side's element type and element nullability.
+  */
+private[functions] trait VecPairKernel extends BinaryExpression with CodegenFallback {
+  override def checkInputDataTypes(): TypeCheckResult =
+    KernelTypes.check(prettyName, left -> KernelTypes.vec, right -> KernelTypes.vec)
+  protected lazy val lf = VectorKernels.isFloatArray(left)
+  protected lazy val rf = VectorKernels.isFloatArray(right)
+  protected lazy val ln = VectorKernels.elemNullable(left)
+  protected lazy val rn = VectorKernels.elemNullable(right)
+}
+
 /** cosine(a, b) = (Σ a_i b_i) / (√(Σ a_i²) · √(Σ b_i²)), one fused pass.
   * Mismatched lengths yield null (a corrupt/truncated embedding must surface
   * as missing, not as a plausible similarity — the semantics the zip_with
   * formulation had via null-padding).
   */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends VecPairKernel {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "cosine_sim"
-  override def checkInputDataTypes(): TypeCheckResult =
-    KernelTypes.check(prettyName, left -> KernelTypes.vec, right -> KernelTypes.vec)
-  private lazy val lf = VectorKernels.isFloatArray(left)
-  private lazy val rf = VectorKernels.isFloatArray(right)
-  private lazy val ln = VectorKernels.elemNullable(left)
-  private lazy val rn = VectorKernels.elemNullable(right)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -264,16 +270,10 @@ case class MatVecLit(child: Expression, rows: Int, flat: Seq[Double])
 
 /** Σ (a_i − b_i)² — squared euclidean distance; null on length mismatch. */
 case class SqDist(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends VecPairKernel {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "sq_dist"
-  override def checkInputDataTypes(): TypeCheckResult =
-    KernelTypes.check(prettyName, left -> KernelTypes.vec, right -> KernelTypes.vec)
-  private lazy val lf = VectorKernels.isFloatArray(left)
-  private lazy val rf = VectorKernels.isFloatArray(right)
-  private lazy val ln = VectorKernels.elemNullable(left)
-  private lazy val rn = VectorKernels.elemNullable(right)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]

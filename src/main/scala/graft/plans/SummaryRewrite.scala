@@ -119,6 +119,38 @@ final case class SummaryRewrite(
   private def attrOf(out: Seq[AttributeReference], name: String): Option[AttributeReference] =
     out.find(_.name == name)
 
+  /** What both rewrites bind first: the filter conditions above the fact
+    * scan, its ts/dim/value attributes, and a fresh summary instance with
+    * its six columns. `inline` applies the alias substitutions
+    * (PullOutGroupingExpressions / withColumn aliases) so the rewrites
+    * match shapes against fact-table expressions.
+    */
+  private final class Bound(val rawConds: Seq[Expression], subst: Map[Long, Expression],
+      val tsA: AttributeReference, val etA: AttributeReference, val vA: AttributeReference,
+      val inst: LogicalRelation, val sDay: AttributeReference, val sEt: AttributeReference,
+      val sCnt: AttributeReference, val sSum: AttributeReference,
+      val sMin: AttributeReference, val sMax: AttributeReference) {
+    def inline(e: Expression): Expression = e.transformUp {
+      case ar: AttributeReference if subst.contains(ar.exprId.id) =>
+        subst(ar.exprId.id)
+    }
+  }
+
+  private def bind(child: LogicalPlan): Option[Bound] =
+    for {
+      (rawConds, subst, fact) <- stripToFact(child)
+      tsA <- attrOf(fact.output, tsCol)
+      etA <- attrOf(fact.output, dimCol)
+      vA <- attrOf(fact.output, valCol)
+      inst = summary.newInstance()
+      sDay <- attrOf(inst.output, "day")
+      sEt <- attrOf(inst.output, dimCol)
+      sCnt <- attrOf(inst.output, "cnt")
+      sSum <- attrOf(inst.output, "sum_value")
+      sMin <- attrOf(inst.output, "min_value")
+      sMax <- attrOf(inst.output, "max_value")
+    } yield new Bound(rawConds, subst, tsA, etA, vA, inst, sDay, sEt, sCnt, sSum, sMin, sMax)
+
   private def isDayTrunc(fmt: Expression): Boolean =
     fmt.foldable && Option(fmt.eval()).exists(_.toString.equalsIgnoreCase("day"))
 
@@ -178,22 +210,9 @@ final case class SummaryRewrite(
     */
   private def tryRewriteExpand(agg: Aggregate, ex: Expand): Option[LogicalPlan] = {
     for {
-      (rawConds, subst, fact) <- stripToFact(ex.child)
-      tsA <- attrOf(fact.output, tsCol)
-      etA <- attrOf(fact.output, dimCol)
-      vA <- attrOf(fact.output, valCol)
-      inst = summary.newInstance()
-      sDay <- attrOf(inst.output, "day")
-      sEt <- attrOf(inst.output, dimCol)
-      sCnt <- attrOf(inst.output, "cnt")
-      sSum <- attrOf(inst.output, "sum_value")
-      sMin <- attrOf(inst.output, "min_value")
-      sMax <- attrOf(inst.output, "max_value")
+      b <- bind(ex.child)
       rewritten <- {
-        def inline(e: Expression): Expression = e.transformUp {
-          case ar: AttributeReference if subst.contains(ar.exprId.id) =>
-            subst(ar.exprId.id)
-        }
+        import b._
         val remap: PartialFunction[Expression, Expression] = {
           case TruncTimestamp(fmt, t: AttributeReference, _)
               if isDayTrunc(fmt) && t.semanticEquals(tsA) => sDay
@@ -276,24 +295,9 @@ final case class SummaryRewrite(
   // ---------------------------------------------------------------- rewrite
   private def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
     for {
-      (rawConds, subst, fact) <- stripToFact(agg.child)
-      tsA <- attrOf(fact.output, tsCol)
-      etA <- attrOf(fact.output, dimCol)
-      vA <- attrOf(fact.output, valCol)
-      inst = summary.newInstance()
-      sDay <- attrOf(inst.output, "day")
-      sEt <- attrOf(inst.output, dimCol)
-      sCnt <- attrOf(inst.output, "cnt")
-      sSum <- attrOf(inst.output, "sum_value")
-      sMin <- attrOf(inst.output, "min_value")
-      sMax <- attrOf(inst.output, "max_value")
+      b <- bind(agg.child)
       rewritten <- {
-        // Inline PullOutGroupingExpressions / withColumn aliases so the
-        // shapes below are matched against fact-table expressions.
-        def inline(e: Expression): Expression = e.transformUp {
-          case ar: AttributeReference if subst.contains(ar.exprId.id) =>
-            subst(ar.exprId.id)
-        }
+        import b._
         val groupings = agg.groupingExpressions.map(inline)
         val aggExprs = agg.aggregateExpressions.map(ne => inline(ne) match {
           case n: NamedExpression => n

@@ -208,18 +208,8 @@ object AnnManifest {
             org.apache.spark.sql.functions.broadcast(tombstones(s, indexDir)),
             Seq("vec_id"), "left_anti"))
           .localCheckpoint(true)
-        val warm = Similarity.readIvfCentroids(s, s"$indexDir/$gen")
-        val cs =
-          if (iters == 0) warm
-          else graft.operators.KMeans.refine(all, warm, iters)._2
-        import s.implicits._
-        graft.operators.KMeans.assign(all, cs)
-          .select(col("id").as("vec_id"), col("vec").as("embedding"), col("cluster"))
-          .write.mode("overwrite").partitionBy("cluster")
-          .parquet(s"$indexDir/$next/$baseSegment")
-        cs.zipWithIndex.map { case (c, j) => (j, c) }
-          .toDF("cluster", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/$next/centroids")
+        Similarity.writeRecelled(all, Similarity.readIvfCentroids(s, s"$indexDir/$gen"),
+          iters, s"$indexDir/$next/$baseSegment", s"$indexDir/$next/centroids")
       },
       "commit-manifest" -> { () => writeManifest(indexDir, next, Seq(baseSegment)) })
   }

@@ -394,18 +394,7 @@ object Dedup {
       val standSigs = minhashSigs(d.where(col("source") =!= "src0"))
       val standBands = bandHashes(standSigs)
         .select(col("band_hash"), col("doc_id").as("old_id"))
-      // verify EVERY distinct candidate pair, THEN take the smallest
-      // verified match — min-before-verify would let one spurious band
-      // collision with a low-id standing doc suppress a genuine near-dup
-      val candPairs = bandHashes(batchSigs)
-        .join(standBands, "band_hash")
-        .select(col("doc_id"), col("old_id")).distinct()
-      val verified = verifyPairs(candPairs, batchSigs, "old_id", standSigs)
-        .groupBy(col("doc_id")).agg(min(col("old_id")).as("dup_of"))
-      batchSigs.select(col("doc_id"))
-        .join(verified, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("dup_of"))
-        .orderBy("doc_id")
+      smallestVerifiedMatch(batchSigs, standSigs, standBands)
     },
     None) // hash-seeded algorithm: no SQL oracle; covered by DedupSpec
 
@@ -438,7 +427,17 @@ object Dedup {
       .select(col("doc_id"), array_compact(col("sig")).as("sig"))
     val standBands = s.read.parquet(s"$indexDir/bands")
       .select(col("band_hash"), col("doc_id").as("old_id"))
-    val batchSigs = minhashSigs(batch)
+    smallestVerifiedMatch(minhashSigs(batch), standSigs, standBands)
+  }
+
+  /** One row per batch doc with `dup_of`, its smallest verified standing
+    * match (null = new). Every distinct band-collision candidate is
+    * verified BEFORE the min: min-before-verify would let one spurious
+    * band collision with a low-id standing doc suppress a genuine
+    * near-dup.
+    */
+  private def smallestVerifiedMatch(batchSigs: DataFrame, standSigs: DataFrame,
+      standBands: DataFrame): DataFrame = {
     val candPairs = bandHashes(batchSigs)
       .join(standBands, "band_hash")
       .select(col("doc_id"), col("old_id")).distinct()
@@ -1426,12 +1425,15 @@ object Dedup {
     * builds from the IDENTICAL projection.
     */
   private def hexShingles(d: DataFrame): DataFrame =
-    Par.fanOutScan(d, "doc_id")
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .where(size(col("w")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        """array_distinct(transform(sequence(0, size(w) - 3),
-             i -> concat_ws(' ', w[i], w[i + 1], w[i + 2])))""")).as("sh"))
+    wordTrigrams(Par.fanOutScan(d, "doc_id"))
+
+  /** (doc_id, sh): each document's distinct word 3-grams as strings. */
+  private def wordTrigrams(d: DataFrame): DataFrame = d
+    .select(col("doc_id"), split(col("text"), " ").as("w"))
+    .where(size(col("w")) >= 3)
+    .select(col("doc_id"), explode(expr(
+      """array_distinct(transform(sequence(0, size(w) - 3),
+           i -> concat_ws(' ', w[i], w[i + 1], w[i + 2])))""")).as("sh"))
 
   /** String band keys over an md5-hex signature (4 rows per band): the
     * band id prefixed to the comma-joined slice — engine-neutral (plain
@@ -1697,12 +1699,7 @@ object Dedup {
         // and every md5 signature pass downstream inherits them
         .transform(Par.fanOutScan(_, "doc_id"))
         .localCheckpoint(true) // md5 sig side + xxhash truth side
-      val sh = corpus
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .where(size(col("w")) >= 3)
-        .select(col("doc_id"), explode(expr(
-          """array_distinct(transform(sequence(0, size(w) - 3),
-               i -> concat_ws(' ', w[i], w[i + 1], w[i + 2])))""")).as("sh"))
+      val sh = wordTrigrams(corpus)
       val sig16 = minhashHexSigs(sh, 16)
         .localCheckpoint(true) // sliced by every config; both pair sides
       val banded = sig16
@@ -2156,12 +2153,7 @@ object Dedup {
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("bkey"))
       val corpus = docs(s, dir).select(col("doc_id"), col("text"))
         .transform(Par.fanOutScan(_, "doc_id")) // md5 sig + truth kernels
-      val sh = corpus
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .where(size(col("w")) >= 3)
-        .select(col("doc_id"), explode(expr(
-          """array_distinct(transform(sequence(0, size(w) - 3),
-               i -> concat_ws(' ', w[i], w[i + 1], w[i + 2])))""")).as("sh"))
+      val sh = wordTrigrams(corpus)
       val sig16 = minhashHexSigs(sh, 16)
       val capped = sig16
         .select(col("doc_id"), explode(expr("array(2, 4, 8)")).as("rr"), col("sig"))

@@ -15,6 +15,52 @@ object Events {
 
   private def events(s: SparkSession, dir: String): DataFrame = Tables(s, dir, "events")
 
+  /** Per-user spend in integer cents, with the user's experiment arm. */
+  private def userSpend(s: SparkSession, dir: String): DataFrame = events(s, dir)
+    .groupBy(col("user_id"))
+    .agg(sum(round(col("value") * 100, 0).cast("long")).as("spend"))
+    .withColumn("arm", Experiment.arm)
+
+  /** [[userSpend]] with its global rank `rn` by (spend, user_id) and the
+    * user count `n` — the winsorization thresholds' input (x374, x394).
+    */
+  private def rankedSpend(s: SparkSession, dir: String): DataFrame = {
+    val wR = Window.orderBy(col("spend"), col("user_id"))
+    val wAll = Window.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    userSpend(s, dir)
+      .withColumn("rn", row_number().over(wR).cast("long"))
+      .withColumn("n", count(lit(1)).over(wAll))
+  }
+
+  /** Every (touch, conversion) pair of one user where the touch is at most
+    * 7 days before the purchase: touch (user_id, event_type, us,
+    * event_id) with the conversion's `cus` and `conv_id` (x269, x373).
+    */
+  private def weekTouches(s: SparkSession, dir: String): DataFrame = {
+    val e = events(s, dir).select(col("user_id"), col("event_type"),
+      unix_micros(col("ts")).as("us"), col("event_id"))
+    val conv = e.where(col("event_type") === "purchase")
+      .select(col("user_id"), col("us").as("cus"),
+        col("event_id").as("conv_id"))
+    e.join(conv, Seq("user_id"))
+      .where(col("us") < col("cus")
+        && col("us") >= col("cus") - lit(7L * 86400000000L))
+  }
+
+  /** Per-user first view day `fv` and first purchase day `fp` (null if
+    * none), for every user with a view (x378, x384).
+    */
+  private def firstViewPurchase(s: SparkSession, dir: String): DataFrame = events(s, dir)
+    .where(col("event_type").isin("view", "purchase"))
+    .groupBy(col("user_id"))
+    .agg(
+      min(when(col("event_type") === "view",
+        date_trunc("day", col("ts")).cast("date"))).as("fv"),
+      min(when(col("event_type") === "purchase",
+        date_trunc("day", col("ts")).cast("date"))).as("fp"))
+    .where(col("fv").isNotNull)
+
   // Ordered funnel: view -> click -> purchase, strictly sequential per user
   // (each stage's event must be LATER than the previous stage's earliest
   // completion — the standard attribution semantics; an earlier click does
@@ -1029,6 +1075,18 @@ object Events {
                WHERE r = (mm.n * p.p + 99) // 100) AS exact_q
             FROM pcts p ORDER BY p"""))
 
+  /** (day, n) event counts in one partition, in day order — the input
+    * of the sequential daily recurrences (EWMA, Holt).
+    */
+  private def dailyCountsInOrder(ev: DataFrame)
+      : org.apache.spark.sql.Dataset[(java.sql.Timestamp, Long)] = {
+    import ev.sparkSession.implicits._
+    ev.groupBy(date_trunc("day", col("ts")).as("day"))
+      .agg(count(lit(1)).as("n"))
+      .as[(java.sql.Timestamp, Long)]
+      .repartition(1).sortWithinPartitions("day")
+  }
+
   /** Integer EWMA over the daily volume series — the smoothing baseline
     * under alerting dashboards, and the coverage row for SEQUENTIAL
     * RECURRENCES: s_t = (7·s_{t-1} + n_t) div 8 (α = 1/8, all-positive
@@ -1043,12 +1101,8 @@ object Events {
     * inherently ordered operator hash-verifies bit-identically.
     */
   def ewmaDailyVolume(ev: DataFrame): DataFrame = {
-    val s = ev.sparkSession
-    import s.implicits._
-    ev.groupBy(date_trunc("day", col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-      .as[(java.sql.Timestamp, Long)]
-      .repartition(1).sortWithinPartitions("day")
+    import ev.sparkSession.implicits._
+    dailyCountsInOrder(ev)
       .mapPartitions { it =>
         var sAcc = -1L
         it.map { case (d, n) =>
@@ -1251,10 +1305,16 @@ object Events {
     * reg, rho) row per event — the shared derivation behind x152, the
     * streaming sketch maintainer, and any future sketch consumer.
     */
-  def hllRegisterRows(ev: DataFrame): DataFrame = {
+  def hllRegisterRows(ev: DataFrame): DataFrame =
+    hllRho(ev, date_trunc("day", col("ts")).as("day"))
+
+  /** `key`, user_id and the user's HLL register (`reg`, first 2 hex of
+    * md5) and rank `rho` (leading zero bits of the next 32, plus one;
+    * 33 when all are zero).
+    */
+  private def hllRho(ev: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val h = md5(col("user_id").cast("string"))
-    ev.select(date_trunc("day", col("ts")).as("day"),
-        col("user_id"), substring(h, 1, 2).as("reg"), substring(h, 3, 8).as("suf"))
+    ev.select(key, col("user_id"), substring(h, 1, 2).as("reg"), substring(h, 3, 8).as("suf"))
       .withColumn("zrun", length(regexp_extract(col("suf"), "^0*", 0)))
       .withColumn("c", expr("substring(suf, zrun + 1, 1)"))
       .withColumn("rho", when(col("zrun") === 8, lit(33)).otherwise(
@@ -1881,12 +1941,8 @@ object Events {
   // recursive CTE, so the inherently-ordered operator still
   // hash-verifies bit-identically.
   def holtDailyVolume(ev: DataFrame): DataFrame = {
-    val s = ev.sparkSession
-    import s.implicits._
-    ev.groupBy(date_trunc("day", col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-      .as[(java.sql.Timestamp, Long)]
-      .repartition(1).sortWithinPartitions("day")
+    import ev.sparkSession.implicits._
+    dailyCountsInOrder(ev)
       .mapPartitions { it =>
         var l = Long.MinValue
         var b = 0L
@@ -2125,17 +2181,7 @@ object Events {
   // (checkpointed artifact); everything downstream — pair lattice, union
   // merge, estimates, the error join — is sketch-domain-sized.
   def sketchOverlap(ev: DataFrame): DataFrame = {
-    val h = md5(col("user_id").cast("string"))
-    val regRows = ev.select(col("event_type"), col("user_id"),
-        substring(h, 1, 2).as("reg"), substring(h, 3, 8).as("suf"))
-      .withColumn("zrun", length(regexp_extract(col("suf"), "^0*", 0)))
-      .withColumn("c", expr("substring(suf, zrun + 1, 1)"))
-      .withColumn("rho", when(col("zrun") === 8, lit(33)).otherwise(
-        lit(4) * col("zrun") + lit(1) +
-          when(col("c") === "1", 3)
-            .when(col("c").isin("2", "3"), 2)
-            .when(col("c").isin("4", "5", "6", "7"), 1)
-            .otherwise(0)))
+    val regRows = hllRho(ev, col("event_type"))
     val sk = regRows.groupBy(col("event_type"), col("reg"))
       .agg(max(col("rho")).as("mr"))
       .localCheckpoint(true) // the stored artifact: type x 256 registers
@@ -3513,14 +3559,7 @@ object Events {
   private val x269 = GQuery(
     "x269_timedecay_attribution", "ext-events attribution time-decay",
     (s, dir) => {
-      val e = events(s, dir).select(col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      val conv = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("us").as("cus"),
-          col("event_id").as("conv_id"))
-      val touches = e.join(conv, Seq("user_id"))
-        .where(col("us") < col("cus")
-          && col("us") >= col("cus") - lit(7L * 86400000000L))
+      val touches = weekTouches(s, dir)
         .withColumn("w",
           expr("1000 div shiftleft(1, cast((cus - us) div 86400000000 as int))"))
       val perConv = Window.partitionBy("conv_id")
@@ -5389,14 +5428,7 @@ object Events {
   private val x373 = GQuery(
     "x373_attribution_sensitivity", "ext-events attribution model comparison",
     (s, dir) => {
-      val e = events(s, dir).select(col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"), col("event_id"))
-      val conv = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("us").as("cus"),
-          col("event_id").as("conv_id"))
-      val touches = e.join(conv, Seq("user_id"))
-        .where(col("us") < col("cus")
-          && col("us") >= col("cus") - lit(7L * 86400000000L))
+      val touches = weekTouches(s, dir)
       val wAsc = Window.partitionBy("conv_id")
         .orderBy(col("us"), col("event_id"))
       val wDesc = Window.partitionBy("conv_id")
@@ -5460,16 +5492,7 @@ object Events {
   private val x374 = GQuery(
     "x374_winsorized_ab", "ext-events experiment winsorized readout",
     (s, dir) => {
-      val per = events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(sum(round(col("value") * 100, 0).cast("long")).as("spend"))
-        .withColumn("arm", Experiment.arm)
-      val wR = Window.orderBy(col("spend"), col("user_id"))
-      val wAll = Window.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      val ranked = per
-        .withColumn("rn", row_number().over(wR).cast("long"))
-        .withColumn("n", count(lit(1)).over(wAll))
+      val ranked = rankedSpend(s, dir)
         .localCheckpoint(true) // threshold fold + arm rollup
       val thr = ranked
         .agg(min(when(col("rn") * 1000 >= col("n") * 50, col("spend")))
@@ -5547,10 +5570,7 @@ object Events {
     (s, dir) => {
       val wR = Window.partitionBy("arm").orderBy(col("spend"), col("user_id"))
       val wN = Window.partitionBy("arm")
-      val picks = events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(sum(round(col("value") * 100, 0).cast("long")).as("spend"))
-        .withColumn("arm", Experiment.arm)
+      val picks = userSpend(s, dir)
         .withColumn("rn", row_number().over(wR).cast("long"))
         .withColumn("n", count(lit(1)).over(wN).cast("long"))
         .select(col("arm"), col("spend"), col("rn"), col("n"),
@@ -5622,15 +5642,7 @@ object Events {
         Window.unboundedFollowing)
       val wCum = Window.orderBy("t")
         .rowsBetween(Window.unboundedPreceding, 0)
-      val perUser = events(s, dir)
-        .where(col("event_type").isin("view", "purchase"))
-        .groupBy(col("user_id"))
-        .agg(
-          min(when(col("event_type") === "view",
-            date_trunc("day", col("ts")).cast("date"))).as("fv"),
-          min(when(col("event_type") === "purchase",
-            date_trunc("day", col("ts")).cast("date"))).as("fp"))
-        .where(col("fv").isNotNull)
+      val perUser = firstViewPurchase(s, dir)
         .withColumn("arm", Experiment.arm)
       val horizon = events(s, dir)
         .agg(max(date_trunc("day", col("ts")).cast("date")).as("hmax"))
@@ -6122,15 +6134,7 @@ object Events {
   private val x384 = GQuery(
     "x384_funnel_window_curve", "ext-events funnel window sensitivity",
     (s, dir) =>
-      events(s, dir)
-        .where(col("event_type").isin("view", "purchase"))
-        .groupBy(col("user_id"))
-        .agg(
-          min(when(col("event_type") === "view",
-            date_trunc("day", col("ts")).cast("date"))).as("fv"),
-          min(when(col("event_type") === "purchase",
-            date_trunc("day", col("ts")).cast("date"))).as("fp"))
-        .where(col("fv").isNotNull)
+      firstViewPurchase(s, dir)
         .select(col("fv"), col("fp"),
           explode(expr("array(1L, 3L, 7L)")).as("w_days"))
         .groupBy(col("w_days"))
@@ -6419,16 +6423,7 @@ object Events {
   private val x394 = GQuery(
     "x394_winsor_threshold_curve", "ext-events experiment winsor sensitivity",
     (s, dir) => {
-      val per = events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(sum(round(col("value") * 100, 0).cast("long")).as("spend"))
-        .withColumn("arm", Experiment.arm)
-      val wR = Window.orderBy(col("spend"), col("user_id"))
-      val wAll = Window.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      val ranked = per
-        .withColumn("rn", row_number().over(wR).cast("long"))
-        .withColumn("n", count(lit(1)).over(wAll))
+      val ranked = rankedSpend(s, dir)
         .localCheckpoint(true) // threshold fold + clipped rollup
       val thr = ranked
         .select(col("rn"), col("n"), col("spend"),

@@ -94,6 +94,11 @@ object Graph {
     */
   private def dropCheckpoint(df: DataFrame): Unit = graft.Checkpoints.drop(df)
 
+  /** Every co-purchase edge (pa, pb) in both directions, as (src, dst). */
+  private def bothWays(e: DataFrame): DataFrame =
+    e.select(col("pa").as("src"), col("pb").as("dst"))
+      .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+
   /** Run `f` with AQE off, restoring the session setting after. The
     * superstep loops below run entirely without AQE, for two reasons:
     * (1) AQE's plan wrapper hides the final outputPartitioning from the
@@ -320,8 +325,7 @@ object Graph {
   private def rankSupersteps(e: DataFrame, iters: Int,
       init: Column => Column, restart: Column => Column): DataFrame =
     withSuperstepConfs(e.sparkSession, superstepPartitions(e)) {
-      val directed = e.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+      val directed = bothWays(e)
       val deg = directed.groupBy("src").agg(count(lit(1)).as("outdeg"))
       val adj = adjacencyBySrc(directed, deg)
       var ckpt = deg
@@ -352,8 +356,7 @@ object Graph {
     */
   private[queries] def superstepForSpec(e: DataFrame): DataFrame =
     withSuperstepConfs(e.sparkSession, superstepPartitions(e)) {
-      val directed = e.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+      val directed = bothWays(e)
       val deg = directed.groupBy("src").agg(count(lit(1)).as("outdeg"))
       val adj = adjacencyBySrc(directed, deg)
       val ranks = deg
@@ -529,11 +532,6 @@ object Graph {
     * codebook), and ranks stay exact BIGINTs so eight unrolled CTEs in
     * DuckDB replay them bit-identically.
     */
-  def personalizedPagerank(li: DataFrame, iters: Int): DataFrame = {
-    val e = copurchaseEdges(li)
-    personalizedPagerankOn(e, degrees(e), iters)
-  }
-
   private[queries] def personalizedPagerankOn(
       e: DataFrame, deg: DataFrame, iters: Int): DataFrame = {
     val seed = deg.orderBy(col("deg").desc, col("node"))
@@ -607,8 +605,7 @@ object Graph {
     val past = nodePastBroadcast(deg)
     val cand = deg.orderBy(col("deg").desc, col("node")).limit(candN)
       .select(col("node"))
-    val directed = e.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+    val directed = bothWays(e)
       // only adjacency rows ENDING in a candidate can form a ranked pair.
       // cand is candN-bounded (a query parameter, not node-sized), so its
       // broadcast never outgrows an executor — but it rides the same gate
@@ -744,8 +741,7 @@ object Graph {
 
   private[queries] def labelPropagationOnEdges(e: DataFrame, iters: Int): DataFrame =
     withSuperstepConfs(e.sparkSession, superstepPartitions(e)) {
-    val directed = e.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+    val directed = bothWays(e)
     val deg = directed.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val adj = adjacencyBySrc(directed, deg)
     var labels = deg
@@ -987,10 +983,42 @@ object Graph {
   def hopDistance(li: DataFrame, hops: Int): DataFrame =
     hopDistanceOnEdges(copurchaseEdges(li), hops)
 
+  /** The delta-frontier BFS rounds of x139 and the multi-source table:
+    * from the settled table `start` (`carry` keys, node, dist), each of
+    * `hops` rounds pushes dist+1 from last round's arrivals only (see
+    * hopDistanceOnEdges). Returns the settled table; `adj` and every
+    * superseded generation are dropped.
+    */
+  private def deltaFrontier(adj: DataFrame, start: DataFrame,
+      carry: Seq[String], hops: Int): DataFrame = {
+    val keys = carry :+ "node"
+    var dist = start
+    var delta = dist
+    for (_ <- 1 to hops) {
+      // PUSH form: newly-reached nodes send dist+1 down their neighbor
+      // lists; the groupBy dedups multi-path arrivals (all carry the
+      // same dist this round)
+      val arrivals = adj.join(delta.hint("shuffle_hash"), col("src") === col("node"))
+        .select(carry.map(col) ++ Seq(explode(col("dsts")).as("node"),
+          (col("dist") + 1L).as("dist")): _*)
+        .groupBy(keys.map(col): _*).agg(min(col("dist")).as("dist"))
+      val newDelta = arrivals
+        .join(dist, keys, "left_anti")
+        .localCheckpoint(true)
+      val next = dist.unionAll(newDelta).localCheckpoint(true)
+      if (!(delta eq dist)) dropCheckpoint(delta)
+      dropCheckpoint(dist)
+      dist = next
+      delta = newDelta
+    }
+    dropCheckpoint(adj)
+    dropCheckpoint(delta)
+    dist
+  }
+
   private[queries] def hopDistanceOnEdges(e: DataFrame, hops: Int): DataFrame =
     withSuperstepConfs(e.sparkSession, superstepPartitions(e)) {
-    val directed = e.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+    val directed = bothWays(e)
     val deg = directed.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val adj = adjacencyBySrc(directed, deg)
     // DELTA frontier (round 15, guide §2.4 "don't compute things you
@@ -1002,29 +1030,11 @@ object Graph {
     // settled table and the new arrivals are key-disjoint by the
     // anti-join, so the round's union needs no re-aggregation at all.
     // Same rows out as the full-expansion form, bit-identical.
-    var dist = e.agg(min(col("pa")).as("node"))
+    val dist = e.agg(min(col("pa")).as("node"))
       .select(col("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
-    var delta = dist
-    for (_ <- 1 to hops) {
-      // PUSH form: newly-reached nodes send dist+1 down their neighbor
-      // lists; the groupBy dedups multi-path arrivals (all carry the
-      // same dist this round)
-      val arrivals = adj.join(delta.hint("shuffle_hash"), col("src") === col("node"))
-        .select(explode(col("dsts")).as("node"), (col("dist") + 1L).as("dist"))
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-      val newDelta = arrivals
-        .join(dist, Seq("node"), "left_anti")
-        .localCheckpoint(true)
-      val next = dist.unionAll(newDelta).localCheckpoint(true)
-      if (!(delta eq dist)) dropCheckpoint(delta)
-      dropCheckpoint(dist)
-      dist = next
-      delta = newDelta
-    }
-    dropCheckpoint(adj)
-    dropCheckpoint(delta)
-    dist.select(col("node").as("part"), col("dist"))
+    deltaFrontier(adj, dist, Nil, hops)
+      .select(col("node").as("part"), col("dist"))
       .orderBy("part")
     }
 
@@ -1348,8 +1358,7 @@ object Graph {
       val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val e = storedEdges(s, dir)
       val deg = storedDegrees(s, dir)
-      val directed = e.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+      val directed = bothWays(e)
       val m = directed
         .join(deg.select(col("node").as("src"), col("deg").as("da")), "src")
         .join(deg.select(col("node").as("dst"), col("deg").as("db")), "dst")
@@ -1427,8 +1436,7 @@ object Graph {
     // slices dedup far less — and the row got slower. The narrow loop
     // IS the partial-agg sweet spot here.
     withSuperstepConfs(e.sparkSession, superstepPartitions(e)) {
-      val directed = e.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+      val directed = bothWays(e)
       val deg = directed.groupBy("src").agg(count(lit(1)).as("outdeg"))
       val adj = adjacencyBySrc(directed, deg)
       // DELTA frontier — the x139 note applies verbatim, per (seed,
@@ -1438,29 +1446,11 @@ object Graph {
       // table this is the bigger win: the late rounds re-aggregated
       // seeds× the whole graph (~18 M contribution rows at sf0.1) to
       // change almost nothing.
-      var dist = deg.orderBy(col("outdeg").desc, col("src")).limit(seeds)
+      val dist = deg.orderBy(col("outdeg").desc, col("src")).limit(seeds)
         .select(col("src").as("seed"), col("src").as("node"),
           lit(0L).as("dist"))
         .localCheckpoint(true)
-      var delta = dist
-      for (_ <- 1 to hops) {
-        val arrivals = adj
-          .join(delta.hint("shuffle_hash"), col("src") === col("node"))
-          .select(col("seed"), explode(col("dsts")).as("node"),
-            (col("dist") + 1L).as("dist"))
-          .groupBy("seed", "node").agg(min(col("dist")).as("dist"))
-        val newDelta = arrivals
-          .join(dist, Seq("seed", "node"), "left_anti")
-          .localCheckpoint(true)
-        val next = dist.unionAll(newDelta).localCheckpoint(true)
-        if (!(delta eq dist)) dropCheckpoint(delta)
-        dropCheckpoint(dist)
-        dist = next
-        delta = newDelta
-      }
-      dropCheckpoint(adj)
-      dropCheckpoint(delta)
-      dist
+      deltaFrontier(adj, dist, Seq("seed"), hops)
     }
 
   private[queries] def closenessProfileOnEdges(

@@ -144,6 +144,38 @@ object HnswAnn {
       .toSeq.sorted
   }
 
+  // base + delta segments union into one node stream; the cogroup key
+  // is (segment, shard) so every per-segment graph is restored whole
+  private def segmentNodes(s: SparkSession, indexDir: String, segs: Seq[String]): DataFrame =
+    segs.map { seg =>
+      s.read.parquet(s"$indexDir/$seg")
+        .select(lit(seg).as("seg"), col("shard"), col("local_id"),
+          col("vec_id"), col("embedding"), col("neighbors"), col("entry"),
+          col("top_level"))
+    }.reduce(_ unionAll _)
+
+  // every query routed to every (segment, shard); the shard lists come
+  // from the partition column only: payload-free scans
+  private def routedQueries(s: SparkSession, indexDir: String, segs: Seq[String],
+      queries: DataFrame): Dataset[SegQuery] = {
+    import s.implicits._
+    val shardIds = segs.map { seg =>
+      s.read.parquet(s"$indexDir/$seg")
+        .select(lit(seg).as("seg"), col("shard")).distinct()
+    }.reduce(_ unionAll _)
+    queries.crossJoin(shardIds)
+      .select(col("seg"), col("shard"), col("q_id"), col("qvec"))
+      .as[SegQuery]
+  }
+
+  // the merge: bounded-heap grouped top-k over the per-shard results
+  private def topKPerQuery(perShard: DataFrame, k: Int): DataFrame = {
+    GroupedTopKOps.ensureInstalled(perShard.sparkSession)
+    GroupedTopKOps.groupedTopK(perShard, Seq(col("q_id")),
+      Seq(col("sim").desc, col("vec_id")), k)
+      .orderBy(col("q_id"), col("sim").desc, col("vec_id"))
+  }
+
   /** Distributed probe: top-`k` (q_id, vec_id, sim) per query in
     * `queries` (columns `q_id`, `qvec: array<double>`), searched with
     * candidate-list width `ef` per shard. See the object scaladoc for the
@@ -155,23 +187,9 @@ object HnswAnn {
     import s.implicits._
     val segs = segmentsOf(indexDir)
     require(segs.nonEmpty, s"no committed segments under $indexDir")
-    // base + delta segments union into one node stream; the cogroup key
-    // is (segment, shard) so every per-segment graph is restored whole
-    val graph = segs.map { seg =>
-      s.read.parquet(s"$indexDir/$seg")
-        .select(lit(seg).as("seg"), col("shard"), col("local_id"),
-          col("vec_id"), col("embedding"), col("neighbors"), col("entry"),
-          col("top_level"))
-    }.reduce(_ unionAll _)
+    val graph = segmentNodes(s, indexDir, segs)
       .as[SegNode]
-    // shard lists from the partition column only: payload-free scans
-    val shardIds = segs.map { seg =>
-      s.read.parquet(s"$indexDir/$seg")
-        .select(lit(seg).as("seg"), col("shard")).distinct()
-    }.reduce(_ unionAll _)
-    val routed = queries.crossJoin(shardIds)
-      .select(col("seg"), col("shard"), col("q_id"), col("qvec"))
-      .as[SegQuery]
+    val routed = routedQueries(s, indexDir, segs, queries)
     val perShard = graph.groupByKey(n => (n.seg, n.shard))
       .cogroup(routed.groupByKey(q => (q.seg, q.shard))) { (_, nodeRows, qs) =>
         val ns = nodeRows.toArray
@@ -190,10 +208,7 @@ object HnswAnn {
         }
       }
       .toDF("q_id", "vec_id", "sim")
-    GroupedTopKOps.ensureInstalled(s)
-    GroupedTopKOps.groupedTopK(perShard, Seq(col("q_id")),
-      Seq(col("sim").desc, col("vec_id")), k)
-      .orderBy(col("q_id"), col("sim").desc, col("vec_id"))
+    topKPerQuery(perShard, k)
   }
 
   /** FILTERED distributed probe — the graph-tier row of the filtered-
@@ -222,24 +237,13 @@ object HnswAnn {
     val allow = allowed.select(
       col(allowed.columns(0)).cast("long").as("vec_id"),
       lit(true).as("ok0"))
-    val graph = segs.map { seg =>
-      s.read.parquet(s"$indexDir/$seg")
-        .select(lit(seg).as("seg"), col("shard"), col("local_id"),
-          col("vec_id"), col("embedding"), col("neighbors"), col("entry"),
-          col("top_level"))
-    }.reduce(_ unionAll _)
+    val graph = segmentNodes(s, indexDir, segs)
       .join(allow, Seq("vec_id"), "left")
       .select(col("seg"), col("shard"), col("local_id"), col("vec_id"),
         col("embedding"), col("neighbors"), col("entry"), col("top_level"),
         coalesce(col("ok0"), lit(false)).as("ok"))
       .as[SegNodeF]
-    val shardIds = segs.map { seg =>
-      s.read.parquet(s"$indexDir/$seg")
-        .select(lit(seg).as("seg"), col("shard")).distinct()
-    }.reduce(_ unionAll _)
-    val routed = queries.crossJoin(shardIds)
-      .select(col("seg"), col("shard"), col("q_id"), col("qvec"))
-      .as[SegQuery]
+    val routed = routedQueries(s, indexDir, segs, queries)
     val width = math.max(ef, 4 * k)
     val perShard = graph.groupByKey(n => (n.seg, n.shard))
       .cogroup(routed.groupByKey(q => (q.seg, q.shard))) { (_, nodeRows, qs) =>
@@ -261,10 +265,7 @@ object HnswAnn {
         }
       }
       .toDF("q_id", "vec_id", "sim")
-    GroupedTopKOps.ensureInstalled(s)
-    GroupedTopKOps.groupedTopK(perShard, Seq(col("q_id")),
-      Seq(col("sim").desc, col("vec_id")), k)
-      .orderBy(col("q_id"), col("sim").desc, col("vec_id"))
+    topKPerQuery(perShard, k)
   }
 
   /** SQL serving surface for the graph tier — the [[Similarity.sqlRegisterBatch]]

@@ -461,18 +461,26 @@ object Lakehouse {
     stats.where(col("min_id") <= hi && col("max_id") >= lo)
       .select(col("file")).collect().map(_.getString(0)).toSeq
 
+  /** (doc_id, source, n_chars) of the documents with ids in
+    * [max/loDiv, max/hiDiv], read from only the files the zone map
+    * selects (x174, x182).
+    */
+  private def zoneLookup(s: SparkSession, dir: String, stats: DataFrame,
+      loDiv: Int, hiDiv: Int): DataFrame = {
+    val maxId = Tables(s, dir, "documents")
+      .agg(max(col("doc_id"))).collect()(0).getLong(0)
+    val (lo, hi) = (maxId / loDiv, maxId / hiDiv)
+    s.read.parquet(zoneSelect(stats, lo, hi): _*)
+      .where(col("doc_id") >= lo && col("doc_id") <= hi)
+      .select(col("doc_id"), col("source"), col("n_chars"))
+      .orderBy("doc_id")
+  }
+
   private val x174 = GQuery(
     "x174_zonemap_lookup", "ext-lakehouse data-skipping file-stats",
     (s, dir) => {
       val (_, stats) = ensureZoneIndex(s, dir)
-      val maxId = Tables(s, dir, "documents")
-        .agg(max(col("doc_id"))).collect()(0).getLong(0)
-      val (lo, hi) = (maxId / 4, maxId / 2)
-      val files = zoneSelect(stats, lo, hi)
-      s.read.parquet(files: _*)
-        .where(col("doc_id") >= lo && col("doc_id") <= hi)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy("doc_id")
+      zoneLookup(s, dir, stats, 4, 2)
     },
     Some("""SELECT doc_id, source, n_chars FROM documents
             WHERE doc_id >= (SELECT MAX(doc_id) FROM documents) // 4
@@ -570,14 +578,7 @@ object Lakehouse {
     "x182_zonemap_append", "ext-lakehouse incremental-index stats-merge",
     (s, dir) => {
       val (_, _, stats) = ensureIncZone(s, dir)
-      val maxId = Tables(s, dir, "documents")
-        .agg(max(col("doc_id"))).collect()(0).getLong(0)
-      val (lo, hi) = (maxId / 8, maxId / 3)
-      val files = zoneSelect(stats, lo, hi)
-      s.read.parquet(files: _*)
-        .where(col("doc_id") >= lo && col("doc_id") <= hi)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy("doc_id")
+      zoneLookup(s, dir, stats, 8, 3)
     },
     Some("""SELECT doc_id, source, n_chars FROM documents
             WHERE doc_id >= (SELECT MAX(doc_id) FROM documents) // 8

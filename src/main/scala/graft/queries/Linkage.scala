@@ -203,16 +203,23 @@ object Linkage {
   // different tail" signature).
   private val Win = 2
 
+  /** x146/x160's blocking: the 24-char normalized prefix `norm` of each
+    * document, keyed by its first 8 chars; [[blockOrder]] sorts a block.
+    */
+  private def blockKeyed(s: SparkSession, dir: String): DataFrame = docs(s, dir)
+    .select(col("doc_id"),
+      substring(regexp_replace(lower(col("text")), "[^a-z0-9]", ""), 1, 24)
+        .as("norm"))
+    .withColumn("key", substring(col("norm"), 1, 8))
+
+  private def blockOrder = org.apache.spark.sql.expressions.Window
+    .partitionBy(col("key")).orderBy(col("norm"), col("doc_id"))
+
   private val x146 = GQuery(
     "x146_sorted_neighborhood", "ext-linkage sorted-neighborhood",
     (s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("key")).orderBy(col("norm"), col("doc_id"))
-      val keyed = docs(s, dir)
-        .select(col("doc_id"),
-          substring(regexp_replace(lower(col("text")), "[^a-z0-9]", ""), 1, 24)
-            .as("norm"))
-        .withColumn("key", substring(col("norm"), 1, 8))
+      val w = blockOrder
+      val keyed = blockKeyed(s, dir)
       val paired = (1 to Win).map { d =>
         keyed
           .withColumn("doc2", lead(col("doc_id"), d).over(w))
@@ -317,13 +324,8 @@ object Linkage {
   private val x160 = GQuery(
     "x160_entity_resolution", "ext-linkage entity-resolution composite",
     (s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("key")).orderBy(col("norm"), col("doc_id"))
-      val keyed = docs(s, dir)
-        .select(col("doc_id"),
-          substring(regexp_replace(lower(col("text")), "[^a-z0-9]", ""), 1, 24)
-            .as("norm"))
-        .withColumn("key", substring(col("norm"), 1, 8))
+      val w = blockOrder
+      val keyed = blockKeyed(s, dir)
       val jw = graft.functions.HashFunctions.jaroWinkler(col("norm"), col("norm2"))
       val edges = (1 to Win).map { d =>
         keyed

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{GQuery, Tables}
 import graft.functions.VectorOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (array<float>[64]).
@@ -21,6 +21,69 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   private def emb(s: SparkSession, dir: String): DataFrame = Tables(s, dir, "embeddings")
+
+  /** Vector `id` of `e`, collected to the driver as a probe query. */
+  private def queryVec(e: DataFrame, id: Int): Array[Double] =
+    e.where(col("vec_id") === id)
+      .select(col("embedding").cast("array<double>"))
+      .head().getSeq[Double](0).toArray
+
+  /** The batch-serving rows' 8-query batch. */
+  private def batchQueries(e: DataFrame): DataFrame =
+    e.where(col("vec_id") < 8).select(col("vec_id"), col("embedding"))
+
+  /** Per-query top-10 of a batch probe's candidates, self excluded. */
+  private def batchTop10(cands: DataFrame, sim: String): DataFrame = {
+    import graft.plans.GroupedTopKOps
+    GroupedTopKOps.ensureInstalled(cands.sparkSession)
+    GroupedTopKOps.groupedTopK(cands.where(col("vec_id") =!= col("q_id")),
+      Seq(col("q_id")), Seq(col(sim).desc, col("vec_id")), k = 10)
+      .orderBy(col("q_id"), col(sim).desc, col("vec_id"))
+  }
+
+  // The stored indexes the serving rows share, each built on first touch.
+  private def ivfStore(e: => DataFrame, dir: String): String = {
+    val store = graft.StoredArtifacts.dir(dir, "ivf_index_v1")
+    if (!graft.StoredArtifacts.ready(s"$store/cells")) writeIvfIndex(e, store, iters = 2)
+    store
+  }
+
+  private def ivfPqStore(e: DataFrame, dir: String): String = {
+    val store = graft.StoredArtifacts.dir(dir, "ivfpq_index_v2")
+    if (!graft.StoredArtifacts.ready(s"$store/codes"))
+      writeIvfPqIndex(e, store, iters = 2, m = 8, kSub = 16)
+    store
+  }
+
+  private def ivfPqResidualStore(e: DataFrame, dir: String): String = {
+    val store = graft.StoredArtifacts.dir(dir, "ivfpqr_index_v2")
+    if (!graft.StoredArtifacts.ready(s"$store/codes"))
+      writeIvfPqResidualIndex(e, store, iters = 2, m = 8, kSub = 16)
+    store
+  }
+
+  private def ivfSq8Store(e: DataFrame, dir: String): String = {
+    val store = graft.StoredArtifacts.dir(dir, "ivf_sq8_index_v1")
+    if (!graft.StoredArtifacts.ready(s"$store/codes")) writeIvfSq8Index(e, store, iters = 2)
+    store
+  }
+
+  /** x07/x109's LSH index rows: (vec_id, tbl, bucket) over `nTables`
+    * tables of 4 hyperplanes.
+    */
+  private def lshBucketed(e: DataFrame, nTables: Int): DataFrame = e
+    .select(col("vec_id"),
+      posexplode(VectorOps.lshBuckets(col("embedding"), nPlanes = 4, nTables = nTables)))
+    .select(col("vec_id"), col("pos").as("tbl"), col("col").as("bucket"))
+
+  /** Exact cosine top-20 of the LSH candidates against vector 0. */
+  private def scoreTop20(candIds: DataFrame, e: DataFrame): DataFrame =
+    candIds.join(e, Seq("vec_id"))
+      .join(broadcast(querySide(e)))
+      .select(col("vec_id"),
+        VectorOps.cosinePreNorm(col("embedding"), col("qvec"), col("qnorm")).as("sim"))
+      .orderBy(col("sim").desc, col("vec_id"))
+      .limit(20)
 
   /** Broadcast-ready query side: vector plus hoisted norm. */
   private def querySide(e: DataFrame): DataFrame =
@@ -69,21 +132,13 @@ object Similarity {
     "x07_ann_lsh_topk", "ext-similarity-ann",
     (s, dir) => {
       val e = emb(s, dir)
-      val bucketed = e
-        .select(col("vec_id"),
-          posexplode(VectorOps.lshBuckets(col("embedding"), nPlanes = 4, nTables = 16)))
-        .select(col("vec_id"), col("pos").as("tbl"), col("col").as("bucket"))
+      val bucketed = lshBucketed(e, nTables = 16)
       val qBuckets = bucketed.where(col("vec_id") === 0).select("tbl", "bucket")
       val candIds = bucketed.join(broadcast(qBuckets), Seq("tbl", "bucket"))
         .where(col("vec_id") =!= 0)
         .select("vec_id")
         .distinct()
-      candIds.join(e, Seq("vec_id"))
-        .join(broadcast(querySide(e)))
-        .select(col("vec_id"),
-          VectorOps.cosinePreNorm(col("embedding"), col("qvec"), col("qnorm")).as("sim"))
-        .orderBy(col("sim").desc, col("vec_id"))
-        .limit(20)
+      scoreTop20(candIds, e)
     },
     None) // approximate (hash-seeded planes): rows-only check + SimilaritySpec
 
@@ -121,17 +176,9 @@ object Similarity {
     "x109_ann_lsh_multiprobe", "ext-similarity-ann multiprobe",
     (s, dir) => {
       val e = emb(s, dir)
-      val bucketed = e
-        .select(col("vec_id"),
-          posexplode(VectorOps.lshBuckets(col("embedding"), nPlanes = 4, nTables = 8)))
-        .select(col("vec_id"), col("pos").as("tbl"), col("col").as("bucket"))
+      val bucketed = lshBucketed(e, nTables = 8)
       val candIds = multiprobeCandidates(bucketed, qId = 0L, nPlanes = 4)
-      candIds.join(e, Seq("vec_id"))
-        .join(broadcast(querySide(e)))
-        .select(col("vec_id"),
-          VectorOps.cosinePreNorm(col("embedding"), col("qvec"), col("qnorm")).as("sim"))
-        .orderBy(col("sim").desc, col("vec_id"))
-        .limit(20)
+      scoreTop20(candIds, e)
     },
     None) // approximate (hash-seeded planes): rows-only check + SimilaritySpec
 
@@ -237,19 +284,42 @@ object Similarity {
     * shuffle and never move again.
     */
   def writeIvfIndex(e: DataFrame, outDir: String, iters: Int): Unit = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val vecs = e.select(col("vec_id"), col("embedding"))
-    val seed = graft.operators.KMeans.seedFromGroups(
-      e.select(col("label"), col("embedding")), "label", "embedding")
-    val (_, centroids, _) = graft.operators.KMeans.refine(vecs, seed, iters)
-    centroids.zipWithIndex.map { case (c, j) => (j, c) }
-      .toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/centroids")
-    graft.operators.KMeans.assign(vecs, centroids)
+    val centroids = writeCoarse(e, outDir, iters)
+    graft.operators.KMeans.assign(e.select(col("vec_id"), col("embedding")), centroids)
       .select(col("id").as("vec_id"), col("vec").as("embedding"), col("cluster"))
       .write.mode("overwrite").partitionBy("cluster").parquet(s"$outDir/cells")
   }
+
+  /** Every IVF writer's coarse quantizer: k-means over `e`'s (vec_id,
+    * embedding), seeded by per-label means, refined `iters` rounds and
+    * written to `<outDir>/centroids` (cluster, centroid).
+    */
+  private def writeCoarse(e: DataFrame, outDir: String, iters: Int): Seq[Array[Double]] = {
+    import graft.operators.KMeans
+    val seed = KMeans.seedFromGroups(
+      e.select(col("label"), col("embedding")), "label", "embedding")
+    val (_, coarse, _) = KMeans.refine(e.select(col("vec_id"), col("embedding")), seed, iters)
+    centroidTable(e.sparkSession, coarse)
+      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/centroids")
+    coarse
+  }
+
+  private def centroidTable(s: SparkSession, coarse: Seq[Array[Double]]): DataFrame = {
+    import s.implicits._
+    coarse.zipWithIndex.map { case (c, j) => (j, c) }.toDF("cluster", "centroid")
+  }
+
+  /** Byte-packed PQ codes of `vec` per row, stored cluster-partitioned
+    * under `<outDir>/codes` — the IVF-PQ, OPQ and residual writers' one
+    * encode step.
+    */
+  private def writePqCodes(rows: DataFrame, id: Column, vec: Column,
+      cb: graft.operators.ProductQuantizer.Codebooks, outDir: String): Unit =
+    rows.select(id.as("vec_id"),
+        VectorOps.pqEncode(vec, cb.m, cb.dsub, cb.flat.toSeq, packed = true).as("codes"),
+        col("cluster"))
+      .write.mode("overwrite").partitionBy("cluster")
+      .parquet(s"$outDir/codes")
 
   /** Stored coarse quantizer, restored to the driver in cluster order —
     * the k×dim move, required anyway to inline centroids as assign/probe
@@ -302,6 +372,24 @@ object Similarity {
       .parquet(s"$indexDir/$segment")
   }
 
+  /** The compactions' re-cell step: `all` (vec_id, embedding) assigned to
+    * the centroids warm-started from `warm` and refined `iters` rounds
+    * (0 keeps `warm`), written as cluster-partitioned cells to `cellsDir`
+    * and the centroids to `centroidsDir`.
+    */
+  private[queries] def writeRecelled(all: DataFrame, warm: Seq[Array[Double]], iters: Int,
+      cellsDir: String, centroidsDir: String): Unit = {
+    val cs =
+      if (iters == 0) warm
+      else graft.operators.KMeans.refine(all, warm, iters)._2
+    graft.operators.KMeans.assign(all, cs)
+      .select(col("id").as("vec_id"), col("vec").as("embedding"), col("cluster"))
+      .write.mode("overwrite").partitionBy("cluster")
+      .parquet(cellsDir)
+    centroidTable(all.sparkSession, cs)
+      .coalesce(1).write.mode("overwrite").parquet(centroidsDir)
+  }
+
   /** Compact the index's segments into a new base generation — the
     * maintenance step that bounds x65's delta accumulation: union the
     * segments, optionally re-refine the coarse quantizer WARM-STARTED from
@@ -332,18 +420,8 @@ object Similarity {
         s.read.parquet(s"$indexDir/$seg").select(col("vec_id"), col("embedding")))
       .reduce(_ unionAll _)
       .localCheckpoint(true) // sever lineage from the dirs about to be replaced
-    val warm = readIvfCentroids(s, indexDir)
-    val cs =
-      if (iters == 0) warm
-      else graft.operators.KMeans.refine(all, warm, iters)._2
-    import s.implicits._
-    graft.operators.KMeans.assign(all, cs)
-      .select(col("id").as("vec_id"), col("vec").as("embedding"), col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$indexDir/cells_next")
-    cs.zipWithIndex.map { case (c, j) => (j, c) }
-      .toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids_next")
+    writeRecelled(all, readIvfCentroids(s, indexDir), iters,
+      s"$indexDir/cells_next", s"$indexDir/centroids_next")
     val root = java.nio.file.Paths.get(indexDir)
     graft.StoredArtifacts.deleteTree(root.resolve("cells").toString)
     java.nio.file.Files.move(root.resolve("cells_next"), root.resolve("cells"))
@@ -402,6 +480,25 @@ object Similarity {
     }.reduce(_ unionAll _)
   }
 
+  /** The batch probes' one query-batch read: (id, vector) rows collected
+    * to the driver, rejected when empty, above the 10⁴-query serving
+    * constant, or when a vector's length differs from the index dim.
+    */
+  private def queryBatch(queries: DataFrame, dim: Int): Array[(Long, Array[Double])] = {
+    val qRows = queries.select(
+        col(queries.columns(0)).cast("long"),
+        col(queries.columns(1)).cast("array<double>"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+    require(qRows.nonEmpty, "empty query batch")
+    require(qRows.length <= 10000,
+      s"batch of ${qRows.length}: the query batch must stay a driver-sized " +
+        "serving constant (micro-batch larger streams into <= 10000-query calls)")
+    qRows.foreach { case (id, q) =>
+      require(q.length == dim, s"query $id dim ${q.length} != index dim $dim")
+    }
+    qRows
+  }
+
   /** BATCH serving probe — [[probeStoredIvf]] generalized from one
     * driver-resident query vector to a whole query TABLE, the shape real
     * serving runs (thousands of queries per pass, not one `.head()`):
@@ -441,18 +538,7 @@ object Similarity {
       nprobe: Int, segments: Seq[String] = Seq("cells")): DataFrame = {
     val coarse = readIvfCentroids(s, indexDir)
     require(coarse.nonEmpty, s"empty centroid table under $indexDir")
-    val qRows = queries.select(
-        col(queries.columns(0)).cast("long"),
-        col(queries.columns(1)).cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-    require(qRows.nonEmpty, "empty query batch")
-    require(qRows.length <= 10000,
-      s"batch of ${qRows.length}: the query batch must stay a driver-sized " +
-        "serving constant (micro-batch larger streams into <= 10000-query calls)")
-    qRows.foreach { case (id, q) =>
-      require(q.length == coarse.head.length,
-        s"query $id dim ${q.length} != index dim ${coarse.head.length}")
-    }
+    val qRows = queryBatch(queries, coarse.head.length)
     val qnorms = qRows.map { case (_, q) => math.sqrt(dotd(q, q)) }
     val probeRows = qRows.zipWithIndex.flatMap { case ((qid, q), qi) =>
       selectCells(coarse, q, qnorms(qi), nprobe)
@@ -482,12 +568,8 @@ object Similarity {
     "x62_ann_ivf_stored", "ext-similarity-ann stored-artifact serving-path",
     (s, dir) => {
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivf_index_v1")
-      if (!graft.StoredArtifacts.ready(s"$store/cells"))
-        writeIvfIndex(e, store, iters = 2)
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val store = ivfStore(e, dir)
+      val qvec = queryVec(e, 0)
       probeStoredIvf(s, store, qvec, nprobe = 6)
         .where(col("vec_id") =!= 0)
         .orderBy(col("sim").desc, col("vec_id"))
@@ -860,9 +942,7 @@ object Similarity {
         writeIvfIndex(e.where(col("vec_id") < 250), store, iters = 2)
       if (!graft.StoredArtifacts.ready(s"$store/delta"))
         appendIvfDelta(e.where(col("vec_id") >= 250), store, "delta")
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val qvec = queryVec(e, 0)
       probeStoredIvf(s, store, qvec, nprobe = 6, segments = Seq("cells", "delta"))
         .where(col("vec_id") =!= 0)
         .orderBy(col("sim").desc, col("vec_id"))
@@ -895,9 +975,7 @@ object Similarity {
           store)
       }
       val cb = ProductQuantizer.readCodebooks(s, store)
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val qvec = queryVec(e, 0)
       s.read.parquet(s"$store/codes")
         .where(col("vec_id") =!= 0)
         .select(col("vec_id"),
@@ -928,9 +1006,7 @@ object Similarity {
           store)
       }
       val model = ScalarQuantizer.readModel(s, store)
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val qvec = queryVec(e, 0)
       s.read.parquet(s"$store/codes")
         .where(col("vec_id") =!= 0)
         .select(col("vec_id"),
@@ -955,12 +1031,7 @@ object Similarity {
     val s = e.sparkSession
     import s.implicits._
     val vecs = e.select(col("vec_id"), col("embedding"))
-    val seed = KMeans.seedFromGroups(
-      e.select(col("label"), col("embedding")), "label", "embedding")
-    val (_, coarse, _) = KMeans.refine(vecs, seed, iters)
-    coarse.zipWithIndex.map { case (c, j) => (j, c) }
-      .toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/centroids")
+    val coarse = writeCoarse(e, outDir, iters)
     val model = ScalarQuantizer.train(vecs)
     model.mins.indices.map(d => (d, model.mins(d), model.deltas(d)))
       .toDF("d", "mn", "dl")
@@ -997,18 +1068,26 @@ object Similarity {
     "x86_ann_ivf_sq8", "ext-similarity-ann compression stored-artifact",
     (s, dir) => {
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivf_sq8_index_v1")
-      if (!graft.StoredArtifacts.ready(s"$store/codes"))
-        writeIvfSq8Index(e, store, iters = 2)
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val store = ivfSq8Store(e, dir)
+      val qvec = queryVec(e, 0)
       probeIvfSq8(s, store, qvec, nprobe = 6)
         .where(col("vec_id") =!= 0)
         .orderBy(col("sim_sq8").desc, col("vec_id"))
         .limit(20)
     },
     None) // quantized + probe subset: gated by Sq8Spec's IVF composition
+
+  /** The batch code probes' one pruned scan: the code directories of
+    * every probed cell, joined to the broadcast (q_id, q_idx, cluster)
+    * pairs the kernel scores.
+    */
+  private def probedCodes(s: SparkSession, indexDir: String,
+      pairs: Array[(Long, Int, Int)]): DataFrame = {
+    import s.implicits._
+    s.read.parquet(s"$indexDir/codes")
+      .where(col("cluster").isin(pairs.map(_._3).distinct.sorted: _*))
+      .join(broadcast(pairs.toSeq.toDF("q_id", "q_idx", "cluster")), Seq("cluster"))
+  }
 
   /** BATCH IVF-SQ8 probe — [[probeIvfPqBatch]]'s one-scan batch shape at
     * the near-lossless tier, completing the batch-serving matrix across
@@ -1036,15 +1115,8 @@ object Similarity {
     import graft.operators.ScalarQuantizer
     val model = ScalarQuantizer.readModel(s, indexDir)
     val coarse = readIvfCentroids(s, indexDir)
-    val qRows = queries.select(
-        col(queries.columns(0)).cast("long"),
-        col(queries.columns(1)).cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-    require(qRows.nonEmpty, "empty query batch")
-    require(qRows.length <= 10000,
-      s"batch of ${qRows.length}: the query batch must stay a driver-sized " +
-        "serving constant (micro-batch larger streams into <= 10000-query calls)")
     val dim = model.dim
+    val qRows = queryBatch(queries, dim)
     // per-query folded tables from the SAME loop as the single probe
     val aDot = new Array[Double](qRows.length * dim)
     val dotBase = new Array[Double](qRows.length)
@@ -1052,8 +1124,7 @@ object Similarity {
     var nLin: Array[Double] = null
     var nQuad: Array[Double] = null
     var n2Base = 0.0
-    for (((id, q), qi) <- qRows.zipWithIndex) {
-      require(q.length == dim, s"query $id dim ${q.length} != index dim $dim")
+    for (((_, q), qi) <- qRows.zipWithIndex) {
       val (ad, nl, nq, db, n2, qn) = ScalarQuantizer.adcTables(model, q)
       System.arraycopy(ad, 0, aDot, qi * dim, dim)
       dotBase(qi) = db; qnorms(qi) = qn
@@ -1065,12 +1136,7 @@ object Similarity {
       selectCells(coarse, qRows(qi)._2, qnorms(qi), nprobe)
         .map(cell => (qid, qi, cell))
     }
-    import s.implicits._
-    val pairsDf = pairs.toSeq.toDF("q_id", "q_idx", "cluster")
-    val cells = pairs.map(_._3).distinct.sorted
-    s.read.parquet(s"$indexDir/codes")
-      .where(col("cluster").isin(cells: _*))
-      .join(broadcast(pairsDf), Seq("cluster"))
+    probedCodes(s, indexDir, pairs)
       .select(col("q_id"), col("vec_id"),
         VectorOps.sq8AdcScoreMulti(col("codes"), col("q_idx"),
           aDot.toSeq, nLin.toSeq, nQuad.toSeq, dotBase.toSeq, n2Base,
@@ -1124,12 +1190,8 @@ object Similarity {
     "x91_ann_filtered", "ext-similarity-ann stored-artifact filtered-serving",
     (s, dir) => {
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivf_index_v1") // x62's index
-      if (!graft.StoredArtifacts.ready(s"$store/cells"))
-        writeIvfIndex(e, store, iters = 2)
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val store = ivfStore(e, dir)
+      val qvec = queryVec(e, 0)
       val allowed = e.where(pmod(col("label"), lit(2)) === 0 &&
         col("vec_id") =!= 0).select(col("vec_id"))
       probeStoredIvfFiltered(s, store, qvec, nprobe = 6, allowed)
@@ -1149,19 +1211,10 @@ object Similarity {
     "x88_ann_ivf_sq8_batch",
     "ext-similarity-ann compression stored-artifact batch-serving",
     (s, dir) => {
-      import graft.plans.GroupedTopKOps
-      GroupedTopKOps.ensureInstalled(s)
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivf_sq8_index_v1")
-      if (!graft.StoredArtifacts.ready(s"$store/codes"))
-        writeIvfSq8Index(e, store, iters = 2)
-      val queries = e.where(col("vec_id") < 8)
-        .select(col("vec_id"), col("embedding"))
-      val cands = probeIvfSq8Batch(s, store, queries, nprobe = 6)
-        .where(col("vec_id") =!= col("q_id"))
-      GroupedTopKOps.groupedTopK(cands, Seq(col("q_id")),
-        Seq(col("sim_sq8").desc, col("vec_id")), k = 10)
-        .orderBy(col("q_id"), col("sim_sq8").desc, col("vec_id"))
+      val store = ivfSq8Store(e, dir)
+      val queries = batchQueries(e)
+      batchTop10(probeIvfSq8Batch(s, store, queries, nprobe = 6), "sim_sq8")
     },
     None) // quantized + probe subset: gated by Sq8Spec, rows-only here
 
@@ -1178,26 +1231,13 @@ object Similarity {
       m: Int, kSub: Int): Unit = {
     import graft.operators.{KMeans, ProductQuantizer}
     val s = e.sparkSession
-    import s.implicits._
     val vecs = e.select(col("vec_id"), col("embedding"))
-    val seed = KMeans.seedFromGroups(
-      e.select(col("label"), col("embedding")), "label", "embedding")
-    val (_, coarse, _) = KMeans.refine(vecs, seed, iters)
-    coarse.zipWithIndex.map { case (c, j) => (j, c) }
-      .toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/centroids")
+    val coarse = writeCoarse(e, outDir, iters)
     val cb = ProductQuantizer.train(vecs, m, kSub, iters)
     ProductQuantizer.writeCodebooks(s, cb, s"$outDir/codebooks")
     // one narrow pass computes BOTH the cell (argmin vs coarse literals)
     // and the code (PqEncode) — the vector is read once and never stored
-    KMeans.assign(vecs, coarse)
-      .select(col("id").as("vec_id"),
-        graft.functions.VectorOps
-          .pqEncode(col("vec"), cb.m, cb.dsub, cb.flat.toSeq, packed = true)
-          .as("codes"),
-        col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$outDir/codes")
+    writePqCodes(KMeans.assign(vecs, coarse), col("id"), col("vec"), cb, outDir)
   }
 
   /** IVF-PQ probe: nprobe partition-pruned code directories, ADC-scored —
@@ -1249,18 +1289,7 @@ object Similarity {
     import graft.operators.ProductQuantizer
     val cb = ProductQuantizer.readCodebooks(s, indexDir)
     val coarse = readIvfCentroids(s, indexDir)
-    val qRows = queries.select(
-        col(queries.columns(0)).cast("long"),
-        col(queries.columns(1)).cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-    require(qRows.nonEmpty, "empty query batch")
-    require(qRows.length <= 10000,
-      s"batch of ${qRows.length}: the query batch must stay a driver-sized " +
-        "serving constant (micro-batch larger streams into <= 10000-query calls)")
-    qRows.foreach { case (id, q) =>
-      require(q.length == cb.m * cb.dsub,
-        s"query $id dim ${q.length} != index dim ${cb.m * cb.dsub}")
-    }
+    val qRows = queryBatch(queries, cb.m * cb.dsub)
     // one norm per query, shared by cell selection AND the kernel divisor
     val qnorms = qRows.map { case (_, q) => math.sqrt(q.map(x => x * x).sum) }
     // per-query nprobe cells: B×k driver dots, same tie-break as the
@@ -1290,12 +1319,7 @@ object Similarity {
         lutDot(qi * mk + sub * cb.k + c) = d0
       }
     }
-    import s.implicits._
-    val pairsDf = pairs.toSeq.toDF("q_id", "q_idx", "cluster")
-    val cells = pairs.map(_._3).distinct.sorted
-    s.read.parquet(s"$indexDir/codes")
-      .where(col("cluster").isin(cells: _*))
-      .join(broadcast(pairsDf), Seq("cluster"))
+    probedCodes(s, indexDir, pairs)
       .select(col("q_id"), col("vec_id"),
         VectorOps.pqAdcScoreMulti(col("codes"), col("q_idx"), cb.k,
           lutDot.toSeq, lutNorm.toSeq, qnorms.toSeq).as("sim_adc"))
@@ -1311,19 +1335,10 @@ object Similarity {
   private val x75 = GQuery(
     "x75_ann_ivfpq_batch", "ext-similarity-ann compression stored-artifact batch-serving",
     (s, dir) => {
-      import graft.plans.GroupedTopKOps
-      GroupedTopKOps.ensureInstalled(s)
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivfpq_index_v2")
-      if (!graft.StoredArtifacts.ready(s"$store/codes"))
-        writeIvfPqIndex(e, store, iters = 2, m = 8, kSub = 16)
-      val queries = e.where(col("vec_id") < 8)
-        .select(col("vec_id"), col("embedding"))
-      val cands = probeIvfPqBatch(s, store, queries, nprobe = 6)
-        .where(col("vec_id") =!= col("q_id"))
-      GroupedTopKOps.groupedTopK(cands, Seq(col("q_id")),
-        Seq(col("sim_adc").desc, col("vec_id")), k = 10)
-        .orderBy(col("q_id"), col("sim_adc").desc, col("vec_id"))
+      val store = ivfPqStore(e, dir)
+      val queries = batchQueries(e)
+      batchTop10(probeIvfPqBatch(s, store, queries, nprobe = 6), "sim_adc")
     },
     None) // quantized + probe subset: gated by PqSpec, rows-only here
 
@@ -1429,7 +1444,6 @@ object Similarity {
       m: Int, kSub: Int, opqIters: Int): Unit = {
     import graft.operators.{KMeans, Opq, ProductQuantizer}
     val s = e.sparkSession
-    import s.implicits._
     val vecs = e.select(col("vec_id"), col("embedding"))
     val (model, cb, trace) = Opq.train(vecs, m, kSub, pqIters = iters,
       opqIters = opqIters)
@@ -1441,21 +1455,9 @@ object Similarity {
     ProductQuantizer.writeCodebooks(s, cb, s"$outDir/codebooks")
     val rotated = e.select(col("vec_id"),
       model.rotateCol(col("embedding")).as("embedding"), col("label"))
-    val seed = KMeans.seedFromGroups(
-      rotated.select(col("label"), col("embedding")), "label", "embedding")
-    val (_, coarse, _) = KMeans.refine(
-      rotated.select(col("vec_id"), col("embedding")), seed, iters)
-    coarse.zipWithIndex.map { case (c, j) => (j, c) }
-      .toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/centroids")
-    KMeans.assign(rotated.select(col("vec_id"), col("embedding")), coarse)
-      .select(col("id").as("vec_id"),
-        graft.functions.VectorOps
-          .pqEncode(col("vec"), cb.m, cb.dsub, cb.flat.toSeq, packed = true)
-          .as("codes"),
-        col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$outDir/codes")
+    val coarse = writeCoarse(rotated, outDir, iters)
+    writePqCodes(KMeans.assign(rotated.select(col("vec_id"), col("embedding")), coarse),
+      col("id"), col("vec"), cb, outDir)
   }
 
   /** OPQ probe: rotate the query driver-side (the ONLY OPQ-specific move
@@ -1496,9 +1498,7 @@ object Similarity {
       val store = graft.StoredArtifacts.dir(dir, "ivfopq_index_v2")
       if (!graft.StoredArtifacts.ready(s"$store/codes"))
         writeIvfOpqIndex(e, store, iters = 2, m = 8, kSub = 16, opqIters = 3)
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val qvec = queryVec(e, 0)
       probeIvfOpq(s, store, qvec, nprobe = 6)
         .where(col("vec_id") =!= 0)
         .orderBy(col("sim_adc").desc, col("vec_id"))
@@ -1518,21 +1518,14 @@ object Similarity {
       m: Int, kSub: Int): Unit = {
     import graft.operators.{KMeans, ProductQuantizer}
     val s = e.sparkSession
-    import s.implicits._
     val vecs = e.select(col("vec_id"), col("embedding"))
-    val seed = KMeans.seedFromGroups(
-      e.select(col("label"), col("embedding")), "label", "embedding")
-    val (_, coarse, _) = KMeans.refine(vecs, seed, iters)
-    val centroidsDf = coarse.zipWithIndex.map { case (c, j) => (j, c) }
-      .toDF("cluster", "centroid")
-    centroidsDf
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/centroids")
+    val coarse = writeCoarse(e, outDir, iters)
     // residual = vec − cell centroid via a BROADCAST join on the cluster
     // key (the centroid table is k-sized — broadcastable by the IVF
     // contract), not an element_at over a k×dim plan literal: the last
     // build-side plan payload that grew with the quantizer
     val resid = KMeans.assign(vecs, coarse)
-      .join(broadcast(centroidsDf), Seq("cluster"))
+      .join(broadcast(centroidTable(s, coarse)), Seq("cluster"))
       .select(col("id").as("vec_id"),
         zip_with(col("vec").cast("array<double>"),
           col("centroid"),
@@ -1541,13 +1534,7 @@ object Similarity {
       .localCheckpoint(true) // residuals feed trainer AND encoder
     val cb = ProductQuantizer.train(resid.select(col("vec_id"), col("resid")), m, kSub, iters)
     ProductQuantizer.writeCodebooks(s, cb, s"$outDir/codebooks")
-    resid.select(col("vec_id"),
-        graft.functions.VectorOps
-          .pqEncode(col("resid"), cb.m, cb.dsub, cb.flat.toSeq, packed = true)
-          .as("codes"),
-        col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$outDir/codes")
+    writePqCodes(resid, col("vec_id"), col("resid"), cb, outDir)
   }
 
   /** Residual IVF-PQ probe: cell selection is PURE DRIVER arithmetic (the
@@ -1623,18 +1610,7 @@ object Similarity {
     import graft.operators.ProductQuantizer
     val cb = ProductQuantizer.readCodebooks(s, indexDir)
     val coarse = readIvfCentroids(s, indexDir)
-    val qRows = queries.select(
-        col(queries.columns(0)).cast("long"),
-        col(queries.columns(1)).cast("array<double>"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-    require(qRows.nonEmpty, "empty query batch")
-    require(qRows.length <= 10000,
-      s"batch of ${qRows.length}: the query batch must stay a driver-sized " +
-        "serving constant (micro-batch larger streams into <= 10000-query calls)")
-    qRows.foreach { case (id, q) =>
-      require(q.length == cb.m * cb.dsub,
-        s"query $id dim ${q.length} != index dim ${cb.m * cb.dsub}")
-    }
+    val qRows = queryBatch(queries, cb.m * cb.dsub)
     val qnorms = qRows.map { case (_, q) => math.sqrt(q.map(x => x * x).sum) }
     val perQueryCells = qRows.zipWithIndex.map { case ((_, q), qi) =>
       selectCells(coarse, q, qnorms(qi), nprobe)
@@ -1675,14 +1651,10 @@ object Similarity {
       for ((cell, ci) <- cells.zipWithIndex)
         qDotCell(qi * cells.length + ci) = dotd(q, coarse(cell))
     }
-    import s.implicits._
     val pairs = qRows.zipWithIndex.flatMap { case ((qid, _), qi) =>
       perQueryCells(qi).map(cell => (qid, qi, cell))
     }
-    val pairsDf = pairs.toSeq.toDF("q_id", "q_idx", "cluster")
-    s.read.parquet(s"$indexDir/codes")
-      .where(col("cluster").isin(cells: _*))
-      .join(broadcast(pairsDf), Seq("cluster"))
+    probedCodes(s, indexDir, pairs)
       .select(col("q_id"), col("vec_id"),
         VectorOps.pqAdcResidualScoreMulti(col("codes"), col("cluster"),
           col("q_idx"), cb.k, cells, lutDot.toSeq, lutResidNorm.toSeq,
@@ -1700,19 +1672,10 @@ object Similarity {
     "x77_ann_ivfpqr_batch",
     "ext-similarity-ann compression stored-artifact batch-serving",
     (s, dir) => {
-      import graft.plans.GroupedTopKOps
-      GroupedTopKOps.ensureInstalled(s)
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivfpqr_index_v2")
-      if (!graft.StoredArtifacts.ready(s"$store/codes"))
-        writeIvfPqResidualIndex(e, store, iters = 2, m = 8, kSub = 16)
-      val queries = e.where(col("vec_id") < 8)
-        .select(col("vec_id"), col("embedding"))
-      val cands = probeIvfPqResidualBatch(s, store, queries, nprobe = 6)
-        .where(col("vec_id") =!= col("q_id"))
-      GroupedTopKOps.groupedTopK(cands, Seq(col("q_id")),
-        Seq(col("sim_adc").desc, col("vec_id")), k = 10)
-        .orderBy(col("q_id"), col("sim_adc").desc, col("vec_id"))
+      val store = ivfPqResidualStore(e, dir)
+      val queries = batchQueries(e)
+      batchTop10(probeIvfPqResidualBatch(s, store, queries, nprobe = 6), "sim_adc")
     },
     None) // quantized + probe subset: gated by PqSpec, rows-only here
 
@@ -1813,12 +1776,8 @@ object Similarity {
     "x92_ann_mmr_rerank", "ext-similarity-ann filtered-serving diversity",
     (s, dir) => {
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivf_index_v1") // x62's index
-      if (!graft.StoredArtifacts.ready(s"$store/cells"))
-        writeIvfIndex(e, store, iters = 2)
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val store = ivfStore(e, dir)
+      val qvec = queryVec(e, 0)
       val cands = probeStoredIvf(s, store, qvec, nprobe = 6)
         .where(col("vec_id") =!= 0)
       mmrRerank(s, cands, e.select(col("vec_id"), col("embedding")),
@@ -1870,11 +1829,8 @@ object Similarity {
       import graft.plans.GroupedTopKOps
       GroupedTopKOps.ensureInstalled(s)
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivf_index_v1") // x62's index
-      if (!graft.StoredArtifacts.ready(s"$store/cells"))
-        writeIvfIndex(e, store, iters = 2)
-      val queries = e.where(col("vec_id") < 8)
-        .select(col("vec_id"), col("embedding"))
+      val store = ivfStore(e, dir)
+      val queries = batchQueries(e)
       val probed = probeStoredIvfBatch(s, store, queries, nprobe = 6)
         .where(col("vec_id") =!= col("q_id"))
       val approxTop = GroupedTopKOps.groupedTopK(probed, Seq(col("q_id")),
@@ -2523,9 +2479,7 @@ object Similarity {
       val store = graft.StoredArtifacts.dir(dir, "hash_cells_serve_v1")
       if (!graft.StoredArtifacts.ready(s"$store/cells"))
         writeHashCellsServe(e, store)
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val qvec = queryVec(e, 0)
       val qn = math.sqrt(qvec.map(x => x * x).sum)
       val qb = md5Bucket16(0L)
       val cells = (0 until 6).map(i => (qb + i) % 16)
@@ -2642,11 +2596,8 @@ object Similarity {
       import graft.plans.GroupedTopKOps
       GroupedTopKOps.ensureInstalled(s)
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivfpq_index_v2")
-      if (!graft.StoredArtifacts.ready(s"$store/codes"))
-        writeIvfPqIndex(e, store, iters = 2, m = 8, kSub = 16)
-      val queries = e.where(col("vec_id") < 8)
-        .select(col("vec_id"), col("embedding"))
+      val store = ivfPqStore(e, dir)
+      val queries = batchQueries(e)
       val cands = probeIvfPqBatch(s, store, queries, nprobe = 6)
         .where(col("vec_id") =!= col("q_id"))
       val exact = rerankExactBatch(
@@ -2668,12 +2619,8 @@ object Similarity {
     "x72_ann_pq_rerank", "ext-similarity-ann serving-path two-stage stored-artifact",
     (s, dir) => {
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivfpq_index_v2")
-      if (!graft.StoredArtifacts.ready(s"$store/codes"))
-        writeIvfPqIndex(e, store, iters = 2, m = 8, kSub = 16)
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val store = ivfPqStore(e, dir)
+      val qvec = queryVec(e, 0)
       val cands = probeIvfPq(s, store, qvec, nprobe = 6)
         .where(col("vec_id") =!= 0)
       rerankExact(e.select(col("vec_id"), col("embedding")), cands, qvec, topC = 100)
@@ -2692,12 +2639,8 @@ object Similarity {
     "x70_ann_ivfpq_residual", "ext-similarity-ann compression stored-artifact",
     (s, dir) => {
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivfpqr_index_v2")
-      if (!graft.StoredArtifacts.ready(s"$store/codes"))
-        writeIvfPqResidualIndex(e, store, iters = 2, m = 8, kSub = 16)
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val store = ivfPqResidualStore(e, dir)
+      val qvec = queryVec(e, 0)
       probeIvfPqResidual(s, store, qvec, nprobe = 6)
         .where(col("vec_id") =!= 0)
         .orderBy(col("sim_adc").desc, col("vec_id"))
@@ -2715,12 +2658,8 @@ object Similarity {
     "x68_ann_ivfpq", "ext-similarity-ann compression stored-artifact",
     (s, dir) => {
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivfpq_index_v2")
-      if (!graft.StoredArtifacts.ready(s"$store/codes"))
-        writeIvfPqIndex(e, store, iters = 2, m = 8, kSub = 16)
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val store = ivfPqStore(e, dir)
+      val qvec = queryVec(e, 0)
       probeIvfPq(s, store, qvec, nprobe = 6)
         .where(col("vec_id") =!= 0)
         .orderBy(col("sim_adc").desc, col("vec_id"))
@@ -2738,19 +2677,10 @@ object Similarity {
   private val x71 = GQuery(
     "x71_ann_ivf_batch", "ext-similarity-ann stored-artifact serving-path batch-serving",
     (s, dir) => {
-      import graft.plans.GroupedTopKOps
-      GroupedTopKOps.ensureInstalled(s)
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivf_index_v1")
-      if (!graft.StoredArtifacts.ready(s"$store/cells"))
-        writeIvfIndex(e, store, iters = 2)
-      val queries = e.where(col("vec_id") < 8)
-        .select(col("vec_id"), col("embedding"))
-      val cands = probeStoredIvfBatch(s, store, queries, nprobe = 6)
-        .where(col("vec_id") =!= col("q_id"))
-      GroupedTopKOps.groupedTopK(cands, Seq(col("q_id")),
-        Seq(col("sim").desc, col("vec_id")), k = 10)
-        .orderBy(col("q_id"), col("sim").desc, col("vec_id"))
+      val store = ivfStore(e, dir)
+      val queries = batchQueries(e)
+      batchTop10(probeStoredIvfBatch(s, store, queries, nprobe = 6), "sim")
     },
     None) // approximate (probe subset): rows-only check + StoredAnnSpec
 
@@ -2782,11 +2712,8 @@ object Similarity {
     "x100_ann_range_search", "ext-similarity-ann stored-artifact serving-path range-query",
     (s, dir) => {
       val e = emb(s, dir)
-      val store = graft.StoredArtifacts.dir(dir, "ivf_index_v1")
-      if (!graft.StoredArtifacts.ready(s"$store/cells"))
-        writeIvfIndex(e, store, iters = 2)
-      val queries = e.where(col("vec_id") < 8)
-        .select(col("vec_id"), col("embedding"))
+      val store = ivfStore(e, dir)
+      val queries = batchQueries(e)
       rangeSearchBatch(s, store, queries, nprobe = 6, tau = 0.3)
         .where(col("vec_id") =!= col("q_id"))
         .orderBy(col("q_id"), col("sim").desc, col("vec_id"))
@@ -2826,10 +2753,7 @@ object Similarity {
   private val x105 = GQuery(
     "x105_ann_index_stats", "ext-similarity-ann stored-artifact index-monitor",
     (s, dir) => {
-      val store = graft.StoredArtifacts.dir(dir, "ivf_index_v1")
-      if (!graft.StoredArtifacts.ready(s"$store/cells"))
-        writeIvfIndex(emb(s, dir), store, iters = 2)
-      ivfIndexStats(s, store)
+      ivfIndexStats(s, ivfStore(emb(s, dir), dir))
     },
     None) // k-means-derived index contents: gated by IndexStatsSpec
 
@@ -2913,9 +2837,7 @@ object Similarity {
         AnnManifest.append(e.where(col("vec_id") >= 250), store, "delta_1")
         AnnManifest.compact(s, store, iters = 1)
       }
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val qvec = queryVec(e, 0)
       AnnManifest.probe(s, store, qvec, nprobe = 6)
         .where(col("vec_id") =!= 0)
         .orderBy(col("sim").desc, col("vec_id"))
@@ -2940,9 +2862,7 @@ object Similarity {
         AnnManifest.delete(
           e.where(col("vec_id") % 7 === 0).select(col("vec_id")), store, "mod7")
       }
-      val qvec = e.where(col("vec_id") === 1)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val qvec = queryVec(e, 1)
       AnnManifest.probe(s, store, qvec, nprobe = 6)
         .where(col("vec_id") =!= 1)
         .orderBy(col("sim").desc, col("vec_id"))
@@ -2977,9 +2897,7 @@ object Similarity {
             iters = 2, maxSegments = 1)
           .awaitTermination()
       }
-      val qvec = e.where(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val qvec = queryVec(e, 0)
       AnnManifest.probe(s, index, qvec, nprobe = 6)
         .where(col("vec_id") =!= 0)
         .orderBy(col("sim").desc, col("vec_id"))

@@ -705,6 +705,35 @@ object Text {
               COUNT(*) AS n_docs, MIN(n) AS min_len, MAX(n) AS max_len
             FROM d GROUP BY 1, 2 ORDER BY lang, bucket_lo"""))
 
+  // The BPE rows' shared stages: word occurrences per document, the
+  // word-count vocabulary, and the per-document symbol rollup. x56's fold
+  // applies the merges per occurrence; x61/x63 segment the vocab once and
+  // join back (segmentedRollup); BpeSpec compares the two paths.
+  private def bpeWords(s: SparkSession, dir: String): DataFrame = docs(s, dir)
+    .select(col("doc_id"), explode(tokens).as("word"))
+    .where(length(col("word")) >= 1)
+
+  private def wordCounts(words: DataFrame): DataFrame =
+    words.groupBy(col("word")).agg(count(lit(1)).as("n"))
+
+  private def bpeRollup(perWord: DataFrame): DataFrame = perWord
+    .groupBy(col("doc_id"))
+    .agg(count(lit(1)).as("n_words"),
+      sum(col("n_chars")).as("n_char_syms"),
+      sum(col("n_syms")).as("n_bpe_syms"))
+    .orderBy("doc_id")
+
+  private def segmentedRollup(words: DataFrame, vocab: DataFrame,
+      merges: Seq[graft.operators.Bpe.BpeMerge]): DataFrame =
+    bpeRollup(words.join(bpeSegLengths(vocab, merges), "word"))
+
+  /** (word, n_chars, n_syms) of each vocab word under the merge table. */
+  private def bpeSegLengths(vocab: DataFrame,
+      merges: Seq[graft.operators.Bpe.BpeMerge]): DataFrame =
+    graft.operators.Bpe.segmentVocab(vocab, "word", merges)
+      .select(col("word"), length(col("word")).cast("long").as("n_chars"),
+        size(col("syms")).cast("long").as("n_syms"))
+
   // BPE vocabulary learning + application, end to end: learn 10 merges from
   // the corpus word-count table (graft.operators.Bpe — the CC-style
   // iterative pattern), then tokenize the corpus with the learned table and
@@ -727,20 +756,13 @@ object Text {
     "x56_bpe_vocab", "ext-text vocab-trainer custom-operator iterative",
     (s, dir) => {
       import graft.operators.Bpe
-      val words = docs(s, dir)
-        .select(col("doc_id"), explode(tokens).as("word"))
-        .where(length(col("word")) >= 1)
-      val vocab = words.groupBy(col("word")).agg(count(lit(1)).as("n"))
+      val words = bpeWords(s, dir)
+      val vocab = wordCounts(words)
       val merges = Bpe.learn(vocab, nMerges = 10)
-      words
+      bpeRollup(words
         .select(col("doc_id"), length(col("word")).cast("long").as("n_chars"),
           size(Bpe.applyMerges(Bpe.charSymbols(col("word")), merges))
-            .cast("long").as("n_syms"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_words"),
-          sum(col("n_chars")).as("n_char_syms"),
-          sum(col("n_syms")).as("n_bpe_syms"))
-        .orderBy("doc_id")
+            .cast("long").as("n_syms")))
     },
     None) // iterative driver-coordinated trainer: gated by BpeSpec
 
@@ -760,20 +782,9 @@ object Text {
     "x61_bpe_tokenize_scale", "ext-text vocab-apply scale-path",
     (s, dir) => {
       import graft.operators.Bpe
-      val words = docs(s, dir)
-        .select(col("doc_id"), explode(tokens).as("word"))
-        .where(length(col("word")) >= 1)
-      val vocab = words.groupBy(col("word")).agg(count(lit(1)).as("n"))
-      val merges = Bpe.learn(vocab, nMerges = 10)
-      val seg = Bpe.segmentVocab(vocab, "word", merges)
-        .select(col("word"), length(col("word")).cast("long").as("n_chars"),
-          size(col("syms")).cast("long").as("n_syms"))
-      words.join(seg, "word")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_words"),
-          sum(col("n_chars")).as("n_char_syms"),
-          sum(col("n_syms")).as("n_bpe_syms"))
-        .orderBy("doc_id")
+      val words = bpeWords(s, dir)
+      val vocab = wordCounts(words)
+      segmentedRollup(words, vocab, Bpe.learn(vocab, nMerges = 10))
     },
     None) // gated by BpeSpec: row-identical to x56 + bounded-plan pin
 
@@ -791,25 +802,12 @@ object Text {
     "x63_bpe_tokenize_stored", "ext-text vocab-apply stored-artifact serving-path",
     (s, dir) => {
       import graft.operators.Bpe
-      val words = docs(s, dir)
-        .select(col("doc_id"), explode(tokens).as("word"))
-        .where(length(col("word")) >= 1)
+      val words = bpeWords(s, dir)
       val store = graft.StoredArtifacts.dir(dir, "bpe_merges_v1")
       if (!graft.StoredArtifacts.ready(store)) {
-        val vocab = words.groupBy(col("word")).agg(count(lit(1)).as("n"))
-        Bpe.writeMerges(s, Bpe.learn(vocab, nMerges = 10), store)
+        Bpe.writeMerges(s, Bpe.learn(wordCounts(words), nMerges = 10), store)
       }
-      val merges = Bpe.readMerges(s, store)
-      val vocab = words.groupBy(col("word")).agg(count(lit(1)).as("n"))
-      val seg = Bpe.segmentVocab(vocab, "word", merges)
-        .select(col("word"), length(col("word")).cast("long").as("n_chars"),
-          size(col("syms")).cast("long").as("n_syms"))
-      words.join(seg, "word")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_words"),
-          sum(col("n_chars")).as("n_char_syms"),
-          sum(col("n_syms")).as("n_bpe_syms"))
-        .orderBy("doc_id")
+      segmentedRollup(words, wordCounts(words), Bpe.readMerges(s, store))
     },
     None) // gated by StoredIndexSpec: row-identical to x61, read-only serving path
 
@@ -848,7 +846,7 @@ object Text {
       .where(length(col("word")) >= 1)
     val mergeStore = graft.StoredArtifacts.dir(dir, "bpe_merges_v1")
     if (!graft.StoredArtifacts.ready(mergeStore)) {
-      val vocab = words.groupBy(col("word")).agg(count(lit(1)).as("n"))
+      val vocab = wordCounts(words)
       Bpe.writeMerges(s, Bpe.learn(vocab, nMerges = 10), mergeStore)
     }
     val merges = Bpe.readMerges(s, mergeStore)
@@ -1105,13 +1103,8 @@ object Text {
     */
   def tokenizerFertility(d: DataFrame,
       merges: Seq[graft.operators.Bpe.BpeMerge]): DataFrame = {
-    import graft.operators.Bpe
     val words = fertilityWords(d)
-    val vocab = words.groupBy(col("word")).agg(count(lit(1)).as("n"))
-    val seg = Bpe.segmentVocab(vocab, "word", merges)
-      .select(col("word"), length(col("word")).cast("long").as("n_chars"),
-        size(col("syms")).cast("long").as("n_syms"))
-    fertilityRollup(words, seg)
+    fertilityRollup(words, bpeSegLengths(wordCounts(words), merges))
   }
 
   private def fertilityWords(d: DataFrame): DataFrame =
@@ -1140,7 +1133,7 @@ object Text {
       model: graft.operators.UnigramLm.UnigramVocab): DataFrame = {
     import graft.operators.UnigramLm
     val words = fertilityWords(d)
-    val vocab = words.groupBy(col("word")).agg(count(lit(1)).as("n"))
+    val vocab = wordCounts(words)
     val seg = UnigramLm.segmentVocab(vocab, "word", model)
       .select(col("word"), length(col("word")).cast("long").as("n_chars"),
         size(col("pieces")).cast("long").as("n_syms"))
@@ -1173,41 +1166,30 @@ object Text {
     * cross-engine check of the kernel), then strip control characters
     * (C0 except tab/newline, DEL) and zero-width/BOM code points, then
     * collapse whitespace runs and trim — x02's proven regex discipline.
-    * Output carries the cleaned fingerprint and before/after lengths, so
+    * x110 outputs the cleaned fingerprint and before/after lengths, so
     * the op audits itself (changed = any byte moved).
     *
     * Scale shape: pure narrow projection — one scan, no shuffle but the
     * output sort; the kernel short-circuits already-NFC (ASCII) rows
     * without allocation.
     */
-  def cleanText(d: DataFrame): DataFrame = {
+  private def cleanedText: Column = {
     val nfc = HashFunctions.nfcNormalize(col("text"))
     val stripped = regexp_replace(
       regexp_replace(nfc, "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", ""),
       "[\\x{200B}\\x{200C}\\x{200D}\\x{FEFF}]", "")
-    val clean = trim(regexp_replace(stripped, "\\s+", " "))
-    d.select(col("doc_id"), clean.as("clean"))
-      .select(col("doc_id"), md5(col("clean")).as("clean_md5"),
-        length(col("clean")).cast("long").as("n_clean_chars"))
-      .orderBy("doc_id")
+    trim(regexp_replace(stripped, "\\s+", " "))
   }
 
   private val x110 = GQuery(
     "x110_text_normalize", "ext-text cleanup custom-operator",
-    (s, dir) => {
-      val nfc = HashFunctions.nfcNormalize(col("text"))
-      val stripped = regexp_replace(
-        regexp_replace(nfc, "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", ""),
-        "[\\x{200B}\\x{200C}\\x{200D}\\x{FEFF}]", "")
-      val clean = trim(regexp_replace(stripped, "\\s+", " "))
-      docs(s, dir)
-        .select(col("doc_id"), clean.as("clean"), col("text"))
-        .select(col("doc_id"), md5(col("clean")).as("clean_md5"),
-          length(col("clean")).cast("long").as("n_clean_chars"),
-          length(col("text")).cast("long").as("n_raw_chars"),
-          (md5(col("text")) =!= md5(col("clean"))).as("changed"))
-        .orderBy("doc_id")
-    },
+    (s, dir) => docs(s, dir)
+      .select(col("doc_id"), cleanedText.as("clean"), col("text"))
+      .select(col("doc_id"), md5(col("clean")).as("clean_md5"),
+        length(col("clean")).cast("long").as("n_clean_chars"),
+        length(col("text")).cast("long").as("n_raw_chars"),
+        (md5(col("text")) =!= md5(col("clean"))).as("changed"))
+      .orderBy("doc_id"),
     Some("""WITH c AS (
               SELECT doc_id, text,
                 trim(regexp_replace(
@@ -1257,7 +1239,7 @@ object Text {
       vocab: graft.operators.WordPiece.WpVocab): DataFrame = {
     import graft.operators.WordPiece
     val words = fertilityWords(d)
-    val wv = words.groupBy(col("word")).agg(count(lit(1)).as("n"))
+    val wv = wordCounts(words)
     val seg = WordPiece.segmentVocab(wv, "word", vocab)
       .select(col("word"), length(col("word")).cast("long").as("n_chars"),
         size(col("pieces")).cast("long").as("n_syms"))
@@ -2236,6 +2218,16 @@ object Text {
               AND ub.t = string_split(b, ' ')[2]
             ORDER BY lift_milli DESC, bigram LIMIT 32"""))
 
+  /** (doc_id, g): each document's distinct word 6-grams — the bloom
+    * decontamination rows' (x334, x350) shingle side.
+    */
+  private def word6grams(s: SparkSession, dir: String): DataFrame = docs(s, dir)
+    .select(col("doc_id"), split(col("text"), " ").as("w"))
+    .where(size(col("w")) >= 6)
+    .select(col("doc_id"), explode(expr(
+      """array_distinct(transform(sequence(0, size(w) - 6),
+           i -> concat_ws(' ', slice(w, i + 1, 6))))""")).as("g"))
+
   // ------------------------------------------------------------------ x334
   // Bloom decontamination, ORACLED EXACT TWIN of x39: the same
   // filter-shaped decision — build a fixed-memory bit set from the
@@ -2259,12 +2251,7 @@ object Text {
   private val x334 = GQuery(
     "x334_bloom_decontam_exact", "ext-text decontamination oracled-twin",
     (s, dir) => {
-      val sh = docs(s, dir)
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .where(size(col("w")) >= 6)
-        .select(col("doc_id"), explode(expr(
-          """array_distinct(transform(sequence(0, size(w) - 6),
-               i -> concat_ws(' ', slice(w, i + 1, 6))))""")).as("g"))
+      val sh = word6grams(s, dir)
       val pos = sh.select(col("doc_id"), col("g"), explode(expr(
         """transform(sequence(0, 3), j -> CAST(
              CAST(conv(substring(md5(concat(j, ':', g)), 17, 16), 16, 10)
@@ -2605,12 +2592,7 @@ object Text {
       // round 15: fan-out measured and REVERTED here (2.18 -> 2.72 s —
       // the bitset/probe stages downstream are distinct-bounded and the
       // wider shingle stage bought nothing)
-      val sh = docs(s, dir)
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .where(size(col("w")) >= 6)
-        .select(col("doc_id"), explode(expr(
-          """array_distinct(transform(sequence(0, size(w) - 6),
-               i -> concat_ws(' ', slice(w, i + 1, 6))))""")).as("g"))
+      val sh = word6grams(s, dir)
       val benchG = sh.where(col("doc_id") < BenchBound)
         .select("g").distinct().localCheckpoint(true)
       val probeG = sh.where(col("doc_id") >= BenchBound)
@@ -2848,6 +2830,31 @@ object Text {
             FROM win JOIN cum ON cum.len = win.max_len
             ORDER BY p_milli"""))
 
+  // The one per-language length Gini of x399 and x403 (the histogram
+  // rank-walk; the scaladocs below give the identity and scale shape).
+  private def lengthGini(d: DataFrame): DataFrame = {
+    val wPrev = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("lang")).orderBy(col("n_chars"))
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    d
+      .groupBy(col("lang"), col("n_chars"))
+      .agg(count(lit(1)).as("c"))
+      .withColumn("cprev", coalesce(sum(col("c")).over(wPrev), lit(0L)))
+      .groupBy(col("lang"))
+      .agg(sum(col("c")).as("n_docs"),
+        sum(col("n_chars").cast("long") * col("c")).as("total_chars"),
+        sum(expr("""cast(n_chars as decimal(38,0))
+              * (c * cast(cprev as decimal(38,0))
+                 + (cast(c as decimal(38,0)) * (c + 1)) div 2)"""))
+          .as("wsum"))
+      .select(col("lang"), col("n_docs"), col("total_chars"),
+        expr("""cast((2000 * wsum)
+                  div (cast(n_docs as decimal(38,0)) * total_chars)
+                - (1000 * (n_docs + 1)) div n_docs as bigint)""")
+          .as("gini_milli"))
+      .orderBy("lang")
+  }
+
   // ------------------------------------------------------------------- x399
   // Per-language length-inequality profile (Gini 1912, via the exact
   // rank-sum identity G = 2·Σᵢ i·xᵢ / (n·Σx) − (n+1)/n over values
@@ -2874,28 +2881,7 @@ object Text {
   // the original window form) hash-checks the substitution.
   private val x399 = GQuery(
     "x399_doc_length_gini", "ext-text corpus length-inequality gini",
-    (s, dir) => {
-      val wPrev = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("lang")).orderBy(col("n_chars"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      docs(s, dir)
-        .groupBy(col("lang"), col("n_chars"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("cprev", coalesce(sum(col("c")).over(wPrev), lit(0L)))
-        .groupBy(col("lang"))
-        .agg(sum(col("c")).as("n_docs"),
-          sum(col("n_chars").cast("long") * col("c")).as("total_chars"),
-          sum(expr("""cast(n_chars as decimal(38,0))
-                * (c * cast(cprev as decimal(38,0))
-                   + (cast(c as decimal(38,0)) * (c + 1)) div 2)"""))
-            .as("wsum"))
-        .select(col("lang"), col("n_docs"), col("total_chars"),
-          expr("""cast((2000 * wsum)
-                    div (cast(n_docs as decimal(38,0)) * total_chars)
-                  - (1000 * (n_docs + 1)) div n_docs as bigint)""")
-            .as("gini_milli"))
-        .orderBy("lang")
-    },
+    (s, dir) => lengthGini(docs(s, dir)),
     Some("""WITH r AS (
               SELECT lang, n_chars,
                 CAST(ROW_NUMBER() OVER (PARTITION BY lang
@@ -2936,28 +2922,7 @@ object Text {
   // length language) and on the rank·chars sum, BIGINT output casts.
   private val x403 = GQuery(
     "x403_length_gini_hist", "ext-text corpus length-gini histogram-rank-walk",
-    (s, dir) => {
-      val wPrev = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("lang")).orderBy(col("n_chars"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      docs(s, dir)
-        .groupBy(col("lang"), col("n_chars"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("cprev", coalesce(sum(col("c")).over(wPrev), lit(0L)))
-        .groupBy(col("lang"))
-        .agg(sum(col("c")).as("n_docs"),
-          sum(col("n_chars").cast("long") * col("c")).as("total_chars"),
-          sum(expr("""cast(n_chars as decimal(38,0))
-                * (c * cast(cprev as decimal(38,0))
-                   + (cast(c as decimal(38,0)) * (c + 1)) div 2)"""))
-            .as("wsum"))
-        .select(col("lang"), col("n_docs"), col("total_chars"),
-          expr("""cast((2000 * wsum)
-                    div (cast(n_docs as decimal(38,0)) * total_chars)
-                  - (1000 * (n_docs + 1)) div n_docs as bigint)""")
-            .as("gini_milli"))
-        .orderBy("lang")
-    },
+    (s, dir) => lengthGini(docs(s, dir)),
     Some("""WITH h AS (
               SELECT lang, n_chars, CAST(COUNT(*) AS BIGINT) AS c
               FROM documents GROUP BY 1, 2),

@@ -60,18 +60,13 @@ object AnnIngestStream {
       checkpointDir: String, iters: Int = 2, maxSegments: Int = 4,
       maxFilesPerTrigger: Int = 1,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(arrivalSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .queryName("ann-ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, indexDir, batchId, iters, maxSegments)
-      }
-      .start()
+    Streams.foldBatches("ann-ingest", checkpointDir, trigger,
+      spark.readStream
+        .schema(arrivalSchema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .parquet(sourceDir)) { (batch, batchId) =>
+      ingestBatch(batch, indexDir, batchId, iters, maxSegments)
+    }
 
   /** True iff `batchId` is already absorbed by the live generation —
     * either its `batch_<id>` segment survives, or the base watermark

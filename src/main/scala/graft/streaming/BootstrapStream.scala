@@ -52,18 +52,13 @@ object BootstrapStream {
       schema: StructType,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes"),
       pathGlobFilter: String = "*.parquet"): StreamingQuery = {
-    spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .parquet(arrivalsDir)
-      .writeStream
-      .queryName("bootstrap-monitor")
-      .option("checkpointLocation", s"$stateDir/bootstrap_ckpt")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        update(spark, batch, stateDir, batchId)
-      }
-      .start()
+    Streams.foldBatches("bootstrap-monitor", s"$stateDir/bootstrap_ckpt", trigger,
+      spark.readStream
+        .schema(schema)
+        .option("pathGlobFilter", pathGlobFilter)
+        .parquet(arrivalsDir)) { (batch, batchId) =>
+      update(spark, batch, stateDir, batchId)
+    }
   }
 
   /** One incremental update: delta accumulators from THE BATCH ROWS ONLY,
@@ -76,15 +71,14 @@ object BootstrapStream {
       gen: Long): Unit = {
     val dir = monitorDir(stateDir)
     val genName = s"gen_$gen"
-    if (StoredManifest.exists(dir) && StoredManifest.read(dir)._1 == genName)
-      return
+    if (StoredManifest.isLive(dir, genName)) return
     StoredManifest.sweepUnreachable(dir)
     val rows = asKernelInput(batch).localCheckpoint(true)
     val deltaAcc = accumulate(rows)
     val deltaTot = totals(rows)
     val (acc, tot) =
       if (StoredManifest.exists(dir)) {
-        val live = StoredManifest.read(dir)._1
+        val live = StoredManifest.live(dir)
         val prevAcc = spark.read.parquet(s"$dir/$live/acc")
         val prevTot = spark.read.parquet(s"$dir/$live/tot")
         (prevAcc.unionAll(deltaAcc).groupBy("b")
@@ -115,14 +109,8 @@ object BootstrapStream {
     StoredManifest.exists(monitorDir(stateDir))
 
   def read(spark: SparkSession, stateDir: String,
-      segment: String = "verdict"): DataFrame = {
-    val dir = monitorDir(stateDir)
-    val (gen, segments) = StoredManifest.read(dir)
-    require(segments.contains(segment),
-      s"unknown segment '$segment'; published: ${segments.mkString(", ")}")
-    spark.read.parquet(s"$dir/$gen/$segment")
-  }
+      segment: String = "verdict"): DataFrame =
+    StoredManifest.readSegment(spark, monitorDir(stateDir), segment)
 
-  def liveGeneration(stateDir: String): String =
-    StoredManifest.read(monitorDir(stateDir))._1
+  def liveGeneration(stateDir: String): String = StoredManifest.live(monitorDir(stateDir))
 }

@@ -35,17 +35,12 @@ object ConstraintGateStream {
       outDir: String, ckpt: String,
       rules: Seq[(String, Column)] = Lakehouse.eventConstraints,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(srcDir)
-      .writeStream
-      .queryName("constraint-gate")
-      .option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        gate(batch, outDir, batchId, rules)
-      }
-      .start()
+    Streams.foldBatches("constraint-gate", ckpt, trigger,
+      spark.readStream
+        .schema(schema)
+        .parquet(srcDir)) { (batch, batchId) =>
+      gate(batch, outDir, batchId, rules)
+    }
 
   /** Split one micro-batch. Idempotent per (outDir, batchId). */
   def gate(batch: DataFrame, outDir: String, batchId: Long,

@@ -46,19 +46,14 @@ object DashboardStream {
   /** Start the refresh stream over the history table. */
   def start(spark: SparkSession, cfg: GraftConfig,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery = {
-    spark.readStream
-      .schema(PipelineRunner.HistorySchema)
-      .parquet(s"${cfg.stateDir}/history")
-      .writeStream
-      .queryName("dashboard-refresh")
-      .option("checkpointLocation", s"${cfg.stateDir}/dashboard_ckpt")
-      .trigger(trigger)
-      .foreachBatch { (_: DataFrame, batchId: Long) =>
-        // the batch rows are the signal; the panels recompute over the
-        // full (metadata-sized) history — see scaladoc
-        refresh(spark, cfg, batchId)
-      }
-      .start()
+    Streams.foldBatches("dashboard-refresh", s"${cfg.stateDir}/dashboard_ckpt", trigger,
+      spark.readStream
+        .schema(PipelineRunner.HistorySchema)
+        .parquet(s"${cfg.stateDir}/history")) { (_, batchId) =>
+      // the batch rows are the signal; the panels recompute over the
+      // full (metadata-sized) history — see scaladoc
+      refresh(spark, cfg, batchId)
+    }
   }
 
   /** One refresh: sweep unreachable generations, write all panels under a
@@ -75,12 +70,7 @@ object DashboardStream {
   def refresh(spark: SparkSession, cfg: GraftConfig, gen: Long): Unit = {
     val dir = dashDir(cfg)
     val genName = s"gen_$gen"
-    // foreachBatch is at-least-once: a crash between the manifest flip and
-    // the checkpoint commit re-delivers the SAME batchId, and rewriting
-    // the now-live generation in place would un-publish it mid-overwrite.
-    // An already-live generation means this refresh already succeeded.
-    if (StoredManifest.exists(dir) && StoredManifest.read(dir)._1 == genName)
-      return
+    if (StoredManifest.isLive(dir, genName)) return
     StoredManifest.sweepUnreachable(dir)
     def publish(): Seq[String] = {
       val panels = RunAnalytics.dashboard(spark, cfg)
@@ -103,17 +93,10 @@ object DashboardStream {
 
   def published(cfg: GraftConfig): Boolean = StoredManifest.exists(dashDir(cfg))
 
-  /** Read one published panel through the manifest — always a complete
-    * refresh generation, never a mid-write mixture.
-    */
-  def readPanel(spark: SparkSession, cfg: GraftConfig, panel: String): DataFrame = {
-    val dir = dashDir(cfg)
-    val (gen, segments) = StoredManifest.read(dir)
-    require(segments.contains(panel),
-      s"unknown panel '$panel'; published: ${segments.mkString(", ")}")
-    spark.read.parquet(s"$dir/$gen/$panel")
-  }
+  /** Read one published panel through the manifest. */
+  def readPanel(spark: SparkSession, cfg: GraftConfig, panel: String): DataFrame =
+    StoredManifest.readSegment(spark, dashDir(cfg), panel)
 
   /** The live refresh generation (for staleness checks / tests). */
-  def liveGeneration(cfg: GraftConfig): String = StoredManifest.read(dashDir(cfg))._1
+  def liveGeneration(cfg: GraftConfig): String = StoredManifest.live(dashDir(cfg))
 }

@@ -104,16 +104,11 @@ object DedupIngestStream {
   def start(spark: SparkSession, sourceDir: String, indexDir: String,
       pairsDir: String, checkpointDir: String, maxFilesPerTrigger: Int = 1,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(arrivalSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .queryName("dedup-ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, indexDir, pairsDir, batchId)
-      }
-      .start()
+    Streams.foldBatches("dedup-ingest", checkpointDir, trigger,
+      spark.readStream
+        .schema(arrivalSchema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .parquet(sourceDir)) { (batch, batchId) =>
+      ingestBatch(batch, indexDir, pairsDir, batchId)
+    }
 }

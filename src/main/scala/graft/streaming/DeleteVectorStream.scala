@@ -53,18 +53,13 @@ object DeleteVectorStream {
   def start(spark: SparkSession, sourceDir: String, layout: String,
       dvDir: String, checkpointDir: String, maxFilesPerTrigger: Int = 1,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(arrivalSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .queryName("dv-ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, layout, dvDir, batchId)
-      }
-      .start()
+    Streams.foldBatches("dv-ingest", checkpointDir, trigger,
+      spark.readStream
+        .schema(arrivalSchema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .parquet(sourceDir)) { (batch, batchId) =>
+      applyBatch(batch, layout, dvDir, batchId)
+    }
 
   /** The serving scan over the streamed sidecar — exactly x229's read
     * (it deduplicates the sidecar, so overlapping delete batches across

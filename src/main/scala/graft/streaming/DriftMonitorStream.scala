@@ -53,18 +53,13 @@ object DriftMonitorStream {
       driftMilli: Long, schema: StructType,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes"),
       pathGlobFilter: String = "*.parquet"): StreamingQuery = {
-    spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .parquet(eventsDir)
-      .writeStream
-      .queryName("drift-monitor")
-      .option("checkpointLocation", s"$stateDir/drift_ckpt")
-      .trigger(trigger)
-      .foreachBatch { (_: DataFrame, batchId: Long) =>
-        refresh(spark, eventsDir, stateDir, driftMilli, batchId, pathGlobFilter)
-      }
-      .start()
+    Streams.foldBatches("drift-monitor", s"$stateDir/drift_ckpt", trigger,
+      spark.readStream
+        .schema(schema)
+        .option("pathGlobFilter", pathGlobFilter)
+        .parquet(eventsDir)) { (_, batchId) =>
+      refresh(spark, eventsDir, stateDir, driftMilli, batchId, pathGlobFilter)
+    }
   }
 
   /** One refresh: recompute the drift grid over everything in `eventsDir`,
@@ -75,7 +70,7 @@ object DriftMonitorStream {
       pathGlobFilter: String = "*.parquet"): Unit = {
     val dir = monitorDir(stateDir)
     val genName = s"gen_$gen"
-    if (StoredManifest.exists(dir) && StoredManifest.read(dir)._1 == genName)
+    if (StoredManifest.isLive(dir, genName))
       return // at-least-once re-delivery of an already-published refresh
     StoredManifest.sweepUnreachable(dir)
     val events = normalizeTs(
@@ -92,14 +87,8 @@ object DriftMonitorStream {
     StoredManifest.exists(monitorDir(stateDir))
 
   /** Read a published segment ("drift" or "alarms") through the manifest. */
-  def read(spark: SparkSession, stateDir: String, segment: String): DataFrame = {
-    val dir = monitorDir(stateDir)
-    val (gen, segments) = StoredManifest.read(dir)
-    require(segments.contains(segment),
-      s"unknown segment '$segment'; published: ${segments.mkString(", ")}")
-    spark.read.parquet(s"$dir/$gen/$segment")
-  }
+  def read(spark: SparkSession, stateDir: String, segment: String): DataFrame =
+    StoredManifest.readSegment(spark, monitorDir(stateDir), segment)
 
-  def liveGeneration(stateDir: String): String =
-    StoredManifest.read(monitorDir(stateDir))._1
+  def liveGeneration(stateDir: String): String = StoredManifest.live(monitorDir(stateDir))
 }

@@ -37,21 +37,16 @@ object FreqMaintainStream {
 
   def start(spark: SparkSession, docsDir: String, dir: String, ckpt: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
-    spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType))))
-      .parquet(docsDir)
-      .writeStream
-      .queryName("mg-freq-maintain")
-      .option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintain(spark, batch, dir, batchId)
-      }
-      .start()
+    Streams.foldBatches("mg-freq-maintain", ckpt, trigger,
+      spark.readStream
+        .schema(org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("doc_id",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("text",
+            org.apache.spark.sql.types.StringType))))
+        .parquet(docsDir)) { (batch, batchId) =>
+      maintain(spark, batch, dir, batchId)
+    }
 
   /** Fold one batch of documents into the live summary generation. */
   def maintain(spark: SparkSession, batch: DataFrame, dir: String,
@@ -65,7 +60,7 @@ object FreqMaintainStream {
       // dir outlives its streaming checkpoint (a fresh checkpoint
       // restarts batchId at 0): earlier batches would re-fold into the
       // existing summary and double every count silently.
-      val live = StoredManifest.read(dir)._1
+      val live = StoredManifest.live(dir)
       val liveId = scala.util.Try(live.stripPrefix("gen_").toLong).toOption
       if (liveId.exists(batchId <= _) || live == gen) return
     }
@@ -84,7 +79,7 @@ object FreqMaintainStream {
 
   def current(spark: SparkSession, dir: String): Option[DataFrame] =
     if (StoredManifest.exists(dir))
-      Some(spark.read.parquet(summaryPath(dir, StoredManifest.read(dir)._1)))
+      Some(spark.read.parquet(summaryPath(dir, StoredManifest.live(dir))))
     else None
 
   /** The live heavy-hitter table, most frequent first. */

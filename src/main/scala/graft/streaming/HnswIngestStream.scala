@@ -32,18 +32,13 @@ object HnswIngestStream {
       checkpointDir: String, shards: Int = 2, maxSegments: Int = 4,
       maxFilesPerTrigger: Int = 1,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(AnnIngestStream.arrivalSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .queryName("hnsw-ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, indexDir, batchId, shards, maxSegments)
-      }
-      .start()
+    Streams.foldBatches("hnsw-ingest", checkpointDir, trigger,
+      spark.readStream
+        .schema(AnnIngestStream.arrivalSchema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .parquet(sourceDir)) { (batch, batchId) =>
+      ingestBatch(batch, indexDir, batchId, shards, maxSegments)
+    }
 
   private def watermarkPath(indexDir: String) =
     java.nio.file.Paths.get(indexDir, "watermark")

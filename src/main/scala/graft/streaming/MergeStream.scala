@@ -33,16 +33,11 @@ object MergeStream {
       mergeDir: String, dvDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 1,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(arrivalSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .queryName("merge-ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Lakehouse.mergeMoR(batch, layout, mergeDir, dvDir, s"b$batchId")
-      }
-      .start()
+    Streams.foldBatches("merge-ingest", checkpointDir, trigger,
+      spark.readStream
+        .schema(arrivalSchema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .parquet(sourceDir)) { (batch, batchId) =>
+      Lakehouse.mergeMoR(batch, layout, mergeDir, dvDir, s"b$batchId")
+    }
 }

@@ -52,23 +52,18 @@ object MvMaintainStream {
   /** Start the maintenance stream over `factDir`. */
   def start(spark: SparkSession, factDir: String, mvDir: String, ckpt: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
-    spark.readStream
-      .schema(factSchema)
-      .parquet(factDir)
-      .writeStream
-      .queryName("mv-maintain")
-      .option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintain(spark, batch, mvDir, batchId)
-      }
-      .start()
+    Streams.foldBatches("mv-maintain", ckpt, trigger,
+      spark.readStream
+        .schema(factSchema)
+        .parquet(factDir)) { (batch, batchId) =>
+      maintain(spark, batch, mvDir, batchId)
+    }
 
   /** Fold one micro-batch into the summary under the manifest protocol. */
   def maintain(spark: SparkSession, batch: DataFrame, mvDir: String,
       batchId: Long): Unit = {
     val gen = s"gen_$batchId"
-    if (StoredManifest.exists(mvDir) && StoredManifest.read(mvDir)._1 == gen)
+    if (StoredManifest.isLive(mvDir, gen))
       return // re-delivered after a successful flip: already published
     StoredManifest.sweepUnreachable(mvDir)
     val partials = Lakehouse.summarize(batch)
@@ -84,7 +79,7 @@ object MvMaintainStream {
   /** The live generation's summary, if any generation has been published. */
   def currentSummary(spark: SparkSession, mvDir: String): Option[DataFrame] =
     if (StoredManifest.exists(mvDir))
-      Some(spark.read.parquet(summaryPath(mvDir, StoredManifest.read(mvDir)._1)))
+      Some(spark.read.parquet(summaryPath(mvDir, StoredManifest.live(mvDir))))
     else None
 
   /** (Re-)install the rewrite rule against the live generation, so
@@ -122,7 +117,7 @@ object MvMaintainStream {
       factSnapshot: DataFrame, mvDir: String, batchId: Long): Unit = {
     import org.apache.spark.sql.functions._
     val gen = s"gen_$batchId"
-    if (StoredManifest.exists(mvDir) && StoredManifest.read(mvDir)._1 == gen)
+    if (StoredManifest.isLive(mvDir, gen))
       return
     StoredManifest.sweepUnreachable(mvDir)
     val inserts = changelog.where(col("op") === "I")

@@ -48,19 +48,14 @@ object RankDriftStream {
       stateDir: String, alarmMicro: Long, schema: StructType,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes"),
       pathGlobFilter: String = "*.parquet"): StreamingQuery = {
-    spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .parquet(arrivalsDir)
-      .writeStream
-      .queryName("rank-drift-monitor")
-      .option("checkpointLocation", s"$stateDir/rank_drift_ckpt")
-      .trigger(trigger)
-      .foreachBatch { (_: DataFrame, batchId: Long) =>
-        refresh(spark, arrivalsDir, referenceDir, stateDir, alarmMicro,
-          batchId, pathGlobFilter)
-      }
-      .start()
+    Streams.foldBatches("rank-drift-monitor", s"$stateDir/rank_drift_ckpt", trigger,
+      spark.readStream
+        .schema(schema)
+        .option("pathGlobFilter", pathGlobFilter)
+        .parquet(arrivalsDir)) { (_, batchId) =>
+      refresh(spark, arrivalsDir, referenceDir, stateDir, alarmMicro,
+        batchId, pathGlobFilter)
+    }
   }
 
   /** One refresh: recompute the FULL drift report over everything in
@@ -76,7 +71,7 @@ object RankDriftStream {
       pathGlobFilter: String = "*.parquet"): Unit = {
     val dir = monitorDir(stateDir)
     val genName = s"gen_$gen"
-    if (StoredManifest.exists(dir) && StoredManifest.read(dir)._1 == genName)
+    if (StoredManifest.isLive(dir, genName))
       return // at-least-once re-delivery of an already-published refresh
     StoredManifest.sweepUnreachable(dir)
     val cur = spark.read.option("pathGlobFilter", pathGlobFilter)
@@ -111,14 +106,8 @@ object RankDriftStream {
     * manifest.
     */
   def read(spark: SparkSession, stateDir: String,
-      segment: String = "verdict"): DataFrame = {
-    val dir = monitorDir(stateDir)
-    val (gen, segments) = StoredManifest.read(dir)
-    require(segments.contains(segment),
-      s"unknown segment '$segment'; published: ${segments.mkString(", ")}")
-    spark.read.parquet(s"$dir/$gen/$segment")
-  }
+      segment: String = "verdict"): DataFrame =
+    StoredManifest.readSegment(spark, monitorDir(stateDir), segment)
 
-  def liveGeneration(stateDir: String): String =
-    StoredManifest.read(monitorDir(stateDir))._1
+  def liveGeneration(stateDir: String): String = StoredManifest.live(monitorDir(stateDir))
 }

@@ -28,23 +28,18 @@ object SketchMaintainStream {
 
   def start(spark: SparkSession, factDir: String, dir: String, ckpt: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
-    spark.readStream
-      .schema(MvMaintainStream.factSchema.add("user_id",
-        org.apache.spark.sql.types.LongType))
-      .parquet(factDir)
-      .writeStream
-      .queryName("hll-sketch-maintain")
-      .option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintain(spark, batch, dir, batchId)
-      }
-      .start()
+    Streams.foldBatches("hll-sketch-maintain", ckpt, trigger,
+      spark.readStream
+        .schema(MvMaintainStream.factSchema.add("user_id",
+          org.apache.spark.sql.types.LongType))
+        .parquet(factDir)) { (batch, batchId) =>
+      maintain(spark, batch, dir, batchId)
+    }
 
   def maintain(spark: SparkSession, batch: DataFrame, dir: String,
       batchId: Long): Unit = {
     val gen = s"gen_$batchId"
-    if (StoredManifest.exists(dir) && StoredManifest.read(dir)._1 == gen)
+    if (StoredManifest.isLive(dir, gen))
       return
     StoredManifest.sweepUnreachable(dir)
     val partials = Events.hllDailySketch(batch)
@@ -58,7 +53,7 @@ object SketchMaintainStream {
 
   def current(spark: SparkSession, dir: String): Option[DataFrame] =
     if (StoredManifest.exists(dir))
-      Some(spark.read.parquet(sketchPath(dir, StoredManifest.read(dir)._1)))
+      Some(spark.read.parquet(sketchPath(dir, StoredManifest.live(dir))))
     else None
 
   /** Per-day distinct estimates from the live generation. */

@@ -44,21 +44,16 @@ object SrmMaintainStream {
   def start(spark: SparkSession, eventsDir: String, dir: String,
       ckpt: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
-    spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType))))
-      .parquet(eventsDir)
-      .writeStream
-      .queryName("srm-maintain")
-      .option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintain(spark, batch, dir, batchId)
-      }
-      .start()
+    Streams.foldBatches("srm-maintain", ckpt, trigger,
+      spark.readStream
+        .schema(org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("user_id",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("event_type",
+            org.apache.spark.sql.types.StringType))))
+        .parquet(eventsDir)) { (batch, batchId) =>
+      maintain(spark, batch, dir, batchId)
+    }
 
   /** Fold one batch of events into the live counts generation. */
   def maintain(spark: SparkSession, batch: DataFrame, dir: String,
@@ -79,7 +74,7 @@ object SrmMaintainStream {
       // == 0, fresh restart lands on batchId == 0): indistinguishable
       // from a replay of batch 0 and still skipped — reset the output
       // dir whenever the checkpoint is reset.
-      val live = StoredManifest.read(dir)._1
+      val live = StoredManifest.live(dir)
       val liveId = scala.util.Try(live.stripPrefix("gen_").toLong).toOption
       require(!liveId.exists(batchId < _),
         s"batch id $batchId regressed below live generation $live: " +
@@ -108,7 +103,7 @@ object SrmMaintainStream {
 
   def current(spark: SparkSession, dir: String): Option[DataFrame] =
     if (StoredManifest.exists(dir))
-      Some(spark.read.parquet(countsPath(dir, StoredManifest.read(dir)._1)))
+      Some(spark.read.parquet(countsPath(dir, StoredManifest.live(dir))))
     else None
 
   /** The live guard table — a HOMOGENEITY check, deliberately not the

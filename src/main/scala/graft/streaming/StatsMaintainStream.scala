@@ -49,17 +49,12 @@ object StatsMaintainStream {
   def start(spark: SparkSession, tableDir: String, schema: StructType,
       statsDir: String, ckpt: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(tableDir)
-      .writeStream
-      .queryName("stats-maintain")
-      .option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintain(spark, batch, statsDir, batchId)
-      }
-      .start()
+    Streams.foldBatches("stats-maintain", ckpt, trigger,
+      spark.readStream
+        .schema(schema)
+        .parquet(tableDir)) { (batch, batchId) =>
+      maintain(spark, batch, statsDir, batchId)
+    }
 
   private def numericCols(df: DataFrame): Seq[String] =
     df.schema.fields.filter(_.dataType.isInstanceOf[NumericType]).map(_.name).toSeq
@@ -191,7 +186,7 @@ object StatsMaintainStream {
   def maintain(spark: SparkSession, batch: DataFrame, statsDir: String,
       batchId: Long): Unit = {
     val gen = s"gen_$batchId"
-    if (StoredManifest.exists(statsDir) && StoredManifest.read(statsDir)._1 == gen)
+    if (StoredManifest.isLive(statsDir, gen))
       return // re-delivered after a successful flip
     StoredManifest.sweepUnreachable(statsDir)
     val (prevScalar, prevRegs) =

@@ -43,18 +43,13 @@ object ZoneIndexStream {
   def start(spark: SparkSession, sourceDir: String, indexDir: String,
       checkpointDir: String, maxSegments: Int = 4,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(arrivalSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sourceDir)
-      .writeStream
-      .queryName("zone-index-ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, indexDir, batchId, maxSegments)
-      }
-      .start()
+    Streams.foldBatches("zone-index-ingest", checkpointDir, trigger,
+      spark.readStream
+        .schema(arrivalSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(sourceDir)) { (batch, batchId) =>
+      ingestBatch(batch, indexDir, batchId, maxSegments)
+    }
 
   /** True iff `batchId` is already absorbed by the live generation. */
   def applied(indexDir: String, batchId: Long): Boolean =

@@ -78,6 +78,14 @@ class BenchEmitSpec extends AnyFunSuite {
     assert(ms > 0.0 && ms < 10000.0, s"probe $ms ms out of range")
   }
 
+  test("a probe point lowers the settle gate's kernel floor to at most its reading") {
+    // the floor starts unset; a probe point's runs must reach it, not only
+    // the settle gate's own runs right after the hygiene GC
+    Bench.kernelFloorMs = Double.MaxValue
+    val ms = Bench.calibrationProbeMs()
+    assert(Bench.kernelFloorMs <= ms, s"floor ${Bench.kernelFloorMs} above probe point $ms")
+  }
+
   test("metric line carries the multi-core probe fields") {
     val results = mkResults(100)
     val line = Bench.fitMetricLine(results, 42.0, 7L, 1.05, "sf0.1",
