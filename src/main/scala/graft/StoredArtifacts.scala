@@ -37,11 +37,9 @@ object StoredArtifacts {
     * artifact format or training behavior changes.
     */
   def dir(sfDir: String, name: String): String = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(sfDir)
     val state =
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.list(p).iterator().asScala.toSeq.sortBy(_.toString)
+      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sfDir)))
+        list(sfDir).sortBy(_.toString)
           .map(f => s"${f.getFileName}:${java.nio.file.Files.size(f)}:" +
             s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}")
           .mkString("|")
@@ -69,14 +67,13 @@ object StoredArtifacts {
     java.nio.file.Files.createDirectories(curDir)
     touchLease(curDir)
     val cutoff = System.currentTimeMillis() - SweepGraceMs
-    if (java.nio.file.Files.isDirectory(root))
-      java.nio.file.Files.list(root).iterator().asScala.toSeq
-        .filter { d =>
-          val n = d.getFileName.toString
-          n.startsWith(s"${pathKey}_") && n != current &&
-            lastLeaseMillis(d) < cutoff
-        }
-        .foreach(d => deleteTree(d.toString))
+    list(root.toString)
+      .filter { d =>
+        val n = d.getFileName.toString
+        n.startsWith(s"${pathKey}_") && n != current &&
+          lastLeaseMillis(d) < cutoff
+      }
+      .foreach(d => deleteTree(d.toString))
     s"$root/$current/$name"
   }
 
@@ -109,12 +106,31 @@ object StoredArtifacts {
   def ready(path: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))
 
-  /** Recursively delete a directory tree (no-op if absent). */
+  /** The entries of directory `dir` (empty if it is not one). The listing
+    * stream is closed before returning: an unclosed one holds its file
+    * descriptor until the JVM happens to finalize it.
+    */
+  def list(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val p = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.isDirectory(p)) Nil
+    else {
+      val stream = java.nio.file.Files.list(p)
+      try stream.iterator().asScala.toList finally stream.close()
+    }
+  }
+
+  /** Recursively delete a file tree, deepest entries first (no-op if
+    * absent); the walk is closed before returning.
+    */
   def deleteTree(path: String): Unit = {
     import scala.jdk.CollectionConverters._
     val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+    if (java.nio.file.Files.exists(p)) {
+      val stream = java.nio.file.Files.walk(p)
+      try stream.iterator().asScala.toList.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))
+      finally stream.close()
+    }
   }
 }

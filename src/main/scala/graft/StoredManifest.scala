@@ -5,10 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The atomic pointer-file commit shared by every generation-directory
   * artifact (the IVF index's [[graft.queries.AnnManifest]], the streaming
-  * dashboard's published panels): immutable generation directories plus one
-  * `MANIFEST` file naming the live generation and its segment list,
-  * replaced atomically (write `MANIFEST.tmp`, `ATOMIC_MOVE` over
-  * `MANIFEST`). A reader resolving through the manifest sees one complete
+  * dashboard's published panels, the ingest streams' [[SegmentLog]]):
+  * immutable generation directories plus one `MANIFEST` file naming the
+  * live generation and its segment list, replaced atomically (write
+  * `MANIFEST.tmp`, `ATOMIC_MOVE` over `MANIFEST`). A reader resolving through the manifest sees one complete
   * generation at every instant; writers publish only after their
   * generation is fully on disk. Single WRITER assumed (two concurrent
   * publishers would race the pointer); on a cluster the same protocol is
@@ -142,21 +142,94 @@ object StoredManifest {
     * flip can still finish its read.
     */
   def sweepUnreachable(dir: String, prefix: String = "gen_"): Unit = {
-    import scala.jdk.CollectionConverters._
     if (!exists(dir)) return
     val (live, _) = read(dir)
-    val root = Paths.get(dir)
-    if (Files.isDirectory(root))
-      Files.list(root).iterator().asScala.toSeq
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith(prefix) &&
-          p.getFileName.toString != live &&
-          !isPinned(dir, p.getFileName.toString))
-        .foreach { p =>
-          val gen = p.getFileName.toString
-          StoredArtifacts.deleteTree(p.toString)
-          Files.deleteIfExists(snapshotPath(dir, gen))
-          Files.deleteIfExists(pinPath(dir, gen))
-        }
+    StoredArtifacts.list(dir)
+      .filter(p => Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith(prefix) &&
+        p.getFileName.toString != live &&
+        !isPinned(dir, p.getFileName.toString))
+      .foreach { p =>
+        val gen = p.getFileName.toString
+        StoredArtifacts.deleteTree(p.toString)
+        Files.deleteIfExists(snapshotPath(dir, gen))
+        Files.deleteIfExists(pinPath(dir, gen))
+      }
+  }
+
+  /** The generation a compaction of `gen` (`gen_<n>`) commits: `gen_<n+1>`. */
+  def successor(gen: String): String = s"gen_${gen.stripPrefix("gen_").toInt + 1}"
+}
+
+/** The one replay and compaction rule of a stream-maintained segment log,
+  * committed through [[StoredManifest]]. The IVF
+  * ([[graft.streaming.AnnIngestStream]]), zone-map
+  * ([[graft.streaming.ZoneIndexStream]]) and HNSW
+  * ([[graft.streaming.HnswIngestStream]]) ingest streams all call it; how
+  * a segment is written or merged stays each stream's own.
+  *
+  * Layout: `dir/MANIFEST` names the live generation `gen_<n>` and its
+  * segments, and segment `s` lives at `dir/gen_<n>/s`.
+  *   - Stream batch `id` lands as segment `base_<id>` of `gen_0` when the
+  *     log is empty, else as `batch_<id>` of the live generation. The
+  *     segment is written completely, then one manifest commit names it.
+  *   - Compaction merges the live segments into `base_<max absorbed id>`
+  *     of `gen_<n+1>`, commits that generation, then deletes the
+  *     superseded one: the directory holding every segment it absorbed.
+  *   - Batch `id` is [[applied]] when `batch_<id>` is live or a live
+  *     `base_<w>` has `w >= id`. Stream batch ids are monotonic, so a base's
+  *     id is a watermark over the ids its compaction erased.
+  *
+  * So at-least-once `foreachBatch` becomes exactly-once with no side
+  * ledger: every crash point leaves nothing committed (the batch is
+  * redone), or a committed manifest whose names make the re-delivered
+  * batch a no-op. Readers resolve the manifest once and see one complete
+  * generation. Single writer: a streaming query's `foreachBatch` calls are
+  * serialized, which is the manifest's single-writer requirement.
+  */
+object SegmentLog {
+
+  /** Writes the merged segment: (live generation dir, its segments,
+    * next generation dir, merged segment name).
+    */
+  type Merge = (String, Seq[String], String, String) => Unit
+
+  private def idOf(segment: String): Long =
+    segment.stripPrefix("batch_").stripPrefix("base_").toLong
+
+  def applied(dir: String, id: Long): Boolean =
+    StoredManifest.exists(dir) && StoredManifest.read(dir)._2.exists { seg =>
+      seg == s"batch_$id" || (seg.startsWith("base_") && idOf(seg) >= id)
+    }
+
+  /** Deliver stream batch `id`: unless [[applied]], `write(genDir, segment)`
+    * writes its segment and one commit names it; then compact when more
+    * than `maxSegments` segments are live.
+    */
+  def ingest(dir: String, id: Long, maxSegments: Int)(
+      write: (String, String) => Unit)(merge: Merge): Unit = {
+    if (applied(dir, id)) return
+    val (gen, live) =
+      if (StoredManifest.exists(dir)) StoredManifest.read(dir) else ("gen_0", Nil)
+    val seg = if (live.isEmpty) s"base_$id" else s"batch_$id"
+    StoredArtifacts.deleteTree(s"$dir/$gen/$seg") // an uncommitted earlier try
+    write(s"$dir/$gen", seg)
+    StoredManifest.write(dir, gen, live :+ seg)
+    if (live.length + 1 > maxSegments)
+      compactionSteps(dir, merge).foreach { case (_, step) => step() }
+  }
+
+  /** Compaction as named steps, so a spec can stop after any prefix. */
+  def compactionSteps(dir: String, merge: Merge): Seq[(String, () => Unit)] = {
+    val (gen, segments) = StoredManifest.read(dir)
+    val next = StoredManifest.successor(gen)
+    val base = s"base_${segments.map(idOf).max}"
+    Seq(
+      "write-segment" -> { () =>
+        StoredArtifacts.deleteTree(s"$dir/$next") // orphan of an interrupted try
+        merge(s"$dir/$gen", segments, s"$dir/$next", base)
+      },
+      "commit-manifest" -> { () => StoredManifest.write(dir, next, Seq(base)) },
+      "delete-absorbed" -> { () => StoredManifest.sweepUnreachable(dir) })
   }
 }

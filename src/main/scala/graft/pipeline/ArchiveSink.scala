@@ -62,7 +62,7 @@ object ArchiveSink {
         case ex: Exception => Files.deleteIfExists(tmp); throw ex // (:432-437)
       }
       val archiveBytes = Files.size(fin) // arc_size (:417)
-      if (cfg.deleteOrig) Discovery.deleteRecursive(src) // (:426-431)
+      if (cfg.deleteOrig) graft.StoredArtifacts.deleteTree(src.toString) // (:426-431)
       s.copy(archived = true, origBytes = origBytes, archiveBytes = archiveBytes)
     } catch {
       case ex: Exception =>
@@ -71,14 +71,11 @@ object ArchiveSink {
   }
 
   /** Prior archives of this base: `{base}-*.tar[.gz]` (:391-393). */
-  private def existingArchives(dir: Path, base: String): Seq[Path] = {
-    val stream = Files.list(dir)
-    try stream.iterator().asScala.filter { p =>
+  private def existingArchives(dir: Path, base: String): Seq[Path] =
+    graft.StoredArtifacts.list(dir.toString).filter { p =>
       val n = p.getFileName.toString
       n.startsWith(base + "-") && (n.endsWith(".tar") || n.endsWith(".tar.gz"))
-    }.toList
-    finally stream.close()
-  }
+    }
 
   private def writeTar(src: Path, dest: Path, gzip: Boolean): Unit = {
     val raw = new BufferedOutputStream(Files.newOutputStream(dest))
@@ -107,7 +104,4 @@ object ArchiveSink {
     */
   private def commitTar(tmp: Path, fin: Path): Unit =
     Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
-
-  private[pipeline] def listArchives(dir: Path, base: String): Seq[Path] =
-    if (Files.isDirectory(dir)) existingArchives(dir, base) else Seq.empty
 }

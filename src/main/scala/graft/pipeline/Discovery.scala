@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -19,16 +18,13 @@ object Discovery {
   /** A1-A5: list runs as RunRecord(path, plateRel, base). */
   def discover(spark: SparkSession, cfg: GraftConfig): Dataset[RunRecord] = {
     import spark.implicits._
-    val watch = Paths.get(cfg.watchDir)
     // A4: never rescan our own outputs (reference compares names, :197-199)
     val excluded = Set(Paths.get(cfg.outputDir).getFileName.toString,
       Paths.get(cfg.archiveDir).getFileName.toString)
-    val plates: Seq[String] =
-      if (!Files.isDirectory(watch)) Seq.empty
-      else listDir(watch)
-        .filter(Files.isDirectory(_)) // A2
-        .filterNot(p => excluded.contains(p.getFileName.toString))
-        .map(_.toString).sorted
+    val plates: Seq[String] = graft.StoredArtifacts.list(cfg.watchDir)
+      .filter(Files.isDirectory(_)) // A2
+      .filterNot(p => excluded.contains(p.getFileName.toString))
+      .map(_.toString).sorted
     if (plates.isEmpty) spark.emptyDataset[RunRecord]
     else
       spark.createDataset(plates)
@@ -45,18 +41,8 @@ object Discovery {
 
   /** One level of `.d` directories inside a plate (A2, A3). */
   private def listRuns(plate: Path): Seq[Path] =
-    if (!Files.isDirectory(plate)) Seq.empty
-    else listDir(plate)
+    graft.StoredArtifacts.list(plate.toString)
       .filter(p => Files.isDirectory(p) && p.getFileName.toString.endsWith(".d"))
-
-  /** Strict directory listing that closes the underlying Files.list stream
-    * (JDK requires explicit close for timely fd disposal — a long-running
-    * poller would otherwise leak one handle per cycle per directory).
-    */
-  private def listDir(p: Path): Seq[Path] = {
-    val stream = Files.list(p)
-    try stream.iterator().asScala.toList finally stream.close()
-  }
 
   /** A6-A8: dedup anti-join against the converted ledger + skip set, then the
     * deterministic sorted batch cap (pending.sort()[:MAX_MAP], :212-220).
@@ -98,11 +84,4 @@ object Discovery {
     total
   }
 
-  /** Remove a file tree, deepest entries first; a missing path is a no-op. */
-  private[pipeline] def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p)) {
-      val stream = Files.walk(p)
-      try stream.sorted(java.util.Comparator.reverseOrder()).forEach(Files.deleteIfExists(_))
-      finally stream.close()
-    }
 }

@@ -16,7 +16,6 @@ package graft.pipeline
   * @param deleteOrig    delete original after archive (DELETE_ORIG, :40)
   * @param archivePolicy "skip" | "replace" prior archives (ARCHIVE_POLICY, :41-43)
   * @param quietS        seconds of size stability required (QUIET_S=120, :46)
-  * @param checkIntS     size poll resolution (CHECK_INT_S=5, :47)
   * @param maxMap        per-cycle work cap (MAX_MAP=1024, :63)
   * @param maxAttempts   failures before permanent skip (MAX_ATTEMPTS=3, :133)
   * @param failThreshold batch failure tolerance (FAIL_THRESHOLD=10, :64)
@@ -40,7 +39,6 @@ final case class GraftConfig(
     deleteOrig: Boolean = false,
     archivePolicy: String = "skip",
     quietS: Int = 120,
-    checkIntS: Int = 5,
     maxMap: Int = 1024,
     maxAttempts: Int = 3,
     failThreshold: Int = 10,

@@ -120,11 +120,11 @@ final class LedgerStore(spark: SparkSession, stateDir: String, maxAttempts: Int 
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     val live = Paths.get(livePath)
     if (Files.exists(live)) {
-      Discovery.deleteRecursive(old) // left by a crash after the second rename
+      graft.StoredArtifacts.deleteTree(old.toString) // left by a crash after the second rename
       Files.move(live, old)
     }
     Files.move(Paths.get(tmp), live, StandardCopyOption.ATOMIC_MOVE)
-    Discovery.deleteRecursive(old)
+    graft.StoredArtifacts.deleteTree(old.toString)
   }
 }
 

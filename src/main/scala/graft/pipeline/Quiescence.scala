@@ -4,9 +4,9 @@ package graft.pipeline
   * wait_for_quiet (dags/msconvert_dag.py:92-100): a run is ready only after
   * its recursive byte size has been unchanged for `quietS` seconds.
   *
-  * The reference blocks a task polling every `checkIntS`; a distributed
-  * engine must not block executors, so the same state machine runs
-  * non-blocking across observations (SURVEY.md §7.4.1, hard part #1):
+  * The reference blocks a task polling every CHECK_INT_S seconds; a
+  * distributed engine must not block executors, so the same state machine
+  * runs non-blocking across observations (SURVEY.md §7.4.1, hard part #1):
   * per-cycle in batch mode (PipelineRunner folds it over each cycle's
   * observed sizes; LedgerStore keeps the clocks between cycles) and
   * per-event in streaming mode (flatMapGroupsWithState keyed by run path —

@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.StoredManifest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Manifest-pointer commit protocol for the stored IVF index — the fix for
-  * [[Similarity.compactIvfIndex]]'s documented crash window (cells swap
-  * before centroids, so a concurrent probe between the two renames could
-  * pair NEW cells with OLD centroids).
+/** Manifest-pointer commit protocol for the stored IVF index: no probe
+  * can pair one generation's cells with another's centroids, at any crash
+  * point or at any instant of a concurrent compaction.
   *
   * Layout: the index root holds immutable GENERATION directories plus one
   * `MANIFEST` file naming the live generation and its segment list:
@@ -18,8 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Every reader resolves paths through the manifest; every writer builds
   * its output COMPLETELY under a new path and then publishes it with ONE
-  * atomic manifest replace (write `MANIFEST.tmp`, `ATOMIC_MOVE` over
-  * `MANIFEST`). No crash point can publish an incomplete generation:
+  * atomic manifest replace ([[graft.StoredManifest.write]]). No crash
+  * point can publish an incomplete generation:
   *   - append: the delta directory is fully written (parquet `_SUCCESS`)
   *     before the manifest adds it; a crash before the commit leaves an
   *     orphan directory readers never resolve.
@@ -33,31 +33,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * atomically-replaced object (rename on HDFS, put-if-match on S3) — the
   * standard table-format commit (Iceberg/Delta do exactly this at file
   * granularity). Single-writer is still assumed for WRITERS (two
-  * concurrent compactions would race the pointer); readers are now safe
-  * at any point, which is what the non-manifest layout could not give.
-  * ManifestAnnSpec drives the crash windows: it stops compaction after
-  * every step prefix and proves a probe always serves one complete
-  * generation.
+  * concurrent compactions would race the pointer); readers are safe at
+  * any point. ManifestAnnSpec drives the crash windows: it stops
+  * compaction after every step prefix and proves a probe always serves
+  * one complete generation.
   */
 object AnnManifest {
-
-  /** Atomically publish (generation, segments) — [[graft.StoredManifest]],
-    * which this index shares with every other generation-directory
-    * artifact (e.g. the streaming dashboard).
-    */
-  def writeManifest(indexDir: String, gen: String, segments: Seq[String]): Unit =
-    graft.StoredManifest.write(indexDir, gen, segments)
-
-  /** The live (generation, segments) — what every read path resolves. */
-  def readManifest(indexDir: String): (String, Seq[String]) =
-    graft.StoredManifest.read(indexDir)
-
-  def exists(indexDir: String): Boolean = graft.StoredManifest.exists(indexDir)
 
   /** Build generation 0 and publish it. */
   def init(e: DataFrame, indexDir: String, iters: Int): Unit = {
     Similarity.writeIvfIndex(e, s"$indexDir/gen_0", iters)
-    writeManifest(indexDir, "gen_0", Seq("cells"))
+    StoredManifest.write(indexDir, "gen_0", Seq("cells"))
   }
 
   /** Append a batch as a delta segment of the LIVE generation: the segment
@@ -68,10 +54,10 @@ object AnnManifest {
     * crash-before-commit case, where the orphan directory is unreachable).
     */
   def append(batch: DataFrame, indexDir: String, segment: String): Unit = {
-    val (gen, segments) = readManifest(indexDir)
+    val (gen, segments) = StoredManifest.read(indexDir)
     if (segments.contains(segment)) return
     Similarity.appendIvfDelta(batch, s"$indexDir/$gen", segment)
-    writeManifest(indexDir, gen, segments :+ segment)
+    StoredManifest.write(indexDir, gen, segments :+ segment)
   }
 
   /** Tombstone segment prefix: a segment named `tomb_*` holds deleted
@@ -96,13 +82,13 @@ object AnnManifest {
   def delete(ids: DataFrame, indexDir: String, tag: String): Unit = {
     require(!tag.startsWith(TombPrefix), s"pass the bare tag, not $TombPrefix$tag")
     val segment = s"$TombPrefix$tag"
-    val (gen, segments) = readManifest(indexDir)
+    val (gen, segments) = StoredManifest.read(indexDir)
     if (segments.contains(segment)) return
     import org.apache.spark.sql.functions.col
     ids.select(col(ids.columns.head).cast("long").as("vec_id")).distinct()
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$indexDir/$gen/$segment")
-    writeManifest(indexDir, gen, segments :+ segment)
+    StoredManifest.write(indexDir, gen, segments :+ segment)
   }
 
   /** Deleted-id frame for an ALREADY-RESOLVED (generation, tombstone
@@ -113,20 +99,20 @@ object AnnManifest {
     * (still holding logically-deleted rows) with the new generation's
     * empty tombstone set and resurface deleted ids.
     */
-  private def tombstonesOf(s: SparkSession, indexDir: String, gen: String,
+  private def tombstonesOf(s: SparkSession, genDir: String,
       tombs: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
     if (tombs.isEmpty)
       s.range(0).select(col("id").as("vec_id"))
-    else tombs.map(t => s.read.parquet(s"$indexDir/$gen/$t"))
+    else tombs.map(t => s.read.parquet(s"$genDir/$t"))
       .reduce(_ unionAll _).distinct()
   }
 
   /** The live generation's deleted-id set (empty frame if none). */
   def tombstones(s: SparkSession, indexDir: String): DataFrame = {
-    val (gen, segments) = readManifest(indexDir)
+    val (gen, segments) = StoredManifest.read(indexDir)
     val (_, tombs) = splitSegments(segments)
-    tombstonesOf(s, indexDir, gen, tombs)
+    tombstonesOf(s, s"$indexDir/$gen", tombs)
   }
 
   /** Probe through the manifest — always one complete generation, minus
@@ -137,7 +123,7 @@ object AnnManifest {
     */
   def probe(s: SparkSession, indexDir: String, qvec: Array[Double],
       nprobe: Int): DataFrame =
-    probeResolved(s, indexDir, readManifest(indexDir), qvec, nprobe)
+    probeResolved(s, indexDir, StoredManifest.read(indexDir), qvec, nprobe)
 
   /** TIME-TRAVEL probe: serve a PINNED (or still-retained) generation
     * exactly as its snapshot recorded it, while the live pointer is free
@@ -148,7 +134,7 @@ object AnnManifest {
     */
   def probePinned(s: SparkSession, indexDir: String, gen: String,
       qvec: Array[Double], nprobe: Int): DataFrame =
-    probeResolved(s, indexDir, graft.StoredManifest.readGen(indexDir, gen),
+    probeResolved(s, indexDir, StoredManifest.readGen(indexDir, gen),
       qvec, nprobe)
 
   private def probeResolved(s: SparkSession, indexDir: String,
@@ -159,7 +145,7 @@ object AnnManifest {
     val (data, tombs) = splitSegments(segments)
     val hits = Similarity.probeStoredIvf(s, s"$indexDir/$gen", qvec, nprobe, data)
     if (tombs.isEmpty) hits
-    else hits.join(broadcast(tombstonesOf(s, indexDir, gen, tombs)),
+    else hits.join(broadcast(tombstonesOf(s, s"$indexDir/$gen", tombs)),
       Seq("vec_id"), "left_anti")
   }
 
@@ -169,7 +155,7 @@ object AnnManifest {
     * and the next compaction's gc collects it.
     */
   def rollback(indexDir: String, gen: String): Unit =
-    graft.StoredManifest.rollback(indexDir, gen)
+    StoredManifest.rollback(indexDir, gen)
 
   /** Compaction as an explicit step list so the crash-window spec can stop
     * after any prefix; [[compact]] runs them all. Steps:
@@ -181,48 +167,51 @@ object AnnManifest {
     *      manifest just before that flip one full compaction cycle to
     *      finish its read — there is no drop-right-after-commit step for
     *      exactly that reason;
-    *   2. write-next-gen: merge the live segments into a COMPLETE next
-    *      generation (re-assigned cells + refreshed centroids), warm-
-    *      started from the live centroids;
+    *   2. write-next-gen: [[mergeGeneration]] into a COMPLETE next
+    *      generation;
     *   3. commit-manifest: one atomic pointer flip to the next generation
     *      (the superseded generation stays on disk until the next gc).
     */
   def compactionSteps(s: SparkSession, indexDir: String,
-      iters: Int, baseSegment: String = "cells"): Seq[(String, () => Unit)] = {
-    import org.apache.spark.sql.functions.col
-    val (gen, segments) = readManifest(indexDir)
-    val genNum = gen.stripPrefix("gen_").toInt
-    val next = s"gen_${genNum + 1}"
+      iters: Int): Seq[(String, () => Unit)] = {
+    val (gen, segments) = StoredManifest.read(indexDir)
+    val next = StoredManifest.successor(gen)
     Seq(
-      "gc" -> { () => graft.StoredManifest.sweepUnreachable(indexDir) },
+      "gc" -> { () => StoredManifest.sweepUnreachable(indexDir) },
       "write-next-gen" -> { () =>
-        // physical delete: merge only DATA segments, subtract committed
-        // tombstones — the next generation starts tombstone-free
-        val (dataSegs, tombSegs) = splitSegments(segments)
-        val merged = dataSegs.map(seg =>
-            s.read.parquet(s"$indexDir/$gen/$seg")
-              .select(col("vec_id"), col("embedding")))
-          .reduce(_ unionAll _)
-        val all = (if (tombSegs.isEmpty) merged
-          else merged.join(
-            org.apache.spark.sql.functions.broadcast(tombstones(s, indexDir)),
-            Seq("vec_id"), "left_anti"))
-          .localCheckpoint(true)
-        Similarity.writeRecelled(all, Similarity.readIvfCentroids(s, s"$indexDir/$gen"),
-          iters, s"$indexDir/$next/$baseSegment", s"$indexDir/$next/centroids")
+        mergeGeneration(s, s"$indexDir/$gen", segments, iters,
+          s"$indexDir/$next", "cells")
       },
-      "commit-manifest" -> { () => writeManifest(indexDir, next, Seq(baseSegment)) })
+      "commit-manifest" -> { () => StoredManifest.write(indexDir, next, Seq("cells")) })
+  }
+
+  /** Merge one resolved generation (`genDir` and its `segments`) into a
+    * complete generation at `nextDir`: segment `base` holds the re-assigned
+    * cells, `centroids` the coarse quantizer re-refined warm-started from
+    * the generation's own. Physical delete: only DATA segments merge, minus
+    * the generation's committed tombstones, so the next generation starts
+    * tombstone-free. [[compactionSteps]] and
+    * [[graft.streaming.AnnIngestStream]]'s compaction both write with it.
+    */
+  private[graft] def mergeGeneration(s: SparkSession, genDir: String,
+      segments: Seq[String], iters: Int, nextDir: String, base: String): Unit = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val (dataSegs, tombSegs) = splitSegments(segments)
+    val merged = dataSegs.map(seg =>
+        s.read.parquet(s"$genDir/$seg").select(col("vec_id"), col("embedding")))
+      .reduce(_ unionAll _)
+    val all = (if (tombSegs.isEmpty) merged
+      else merged.join(broadcast(tombstonesOf(s, genDir, tombSegs)),
+        Seq("vec_id"), "left_anti"))
+      .localCheckpoint(true)
+    Similarity.writeRecelled(all, Similarity.readIvfCentroids(s, genDir),
+      iters, s"$nextDir/$base", s"$nextDir/centroids")
   }
 
   /** Merge the live generation's segments into the next one and flip the
     * manifest pointer — delta accumulation bounded, readers safe at every
-    * instant. `baseSegment` names the merged generation's single segment:
-    * "cells" for the plain index, a watermark name (e.g. `base_<batchId>`)
-    * for [[graft.streaming.AnnIngestStream]], which folds its at-least-once
-    * dedup state into the segment names the manifest already commits.
+    * instant.
     */
-  def compact(s: SparkSession, indexDir: String, iters: Int,
-      baseSegment: String = "cells"): Unit =
-    compactionSteps(s, indexDir, iters, baseSegment)
-      .foreach { case (_, step) => step() }
+  def compact(s: SparkSession, indexDir: String, iters: Int): Unit =
+    compactionSteps(s, indexDir, iters).foreach { case (_, step) => step() }
 }

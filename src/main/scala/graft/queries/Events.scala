@@ -1306,15 +1306,19 @@ object Events {
     * streaming sketch maintainer, and any future sketch consumer.
     */
   def hllRegisterRows(ev: DataFrame): DataFrame =
-    hllRho(ev, date_trunc("day", col("ts")).as("day"))
+    hllRho(ev, Seq(date_trunc("day", col("ts")).as("day"), col("user_id")),
+      col("user_id").cast("string"))
 
-  /** `key`, user_id and the user's HLL register (`reg`, first 2 hex of
-    * md5) and rank `rho` (leading zero bits of the next 32, plus one;
-    * 33 when all are zero).
+  /** `keys` plus the HLL register of string `v`: `reg`, the first 2 hex
+    * digits of md5(v), and rank `rho`, the leading zero bits of the next
+    * 32 plus one (33 when all are zero). The one register derivation of
+    * the user sketches here and of [[graft.streaming.StatsMaintainStream]]'s
+    * per-column sketches.
     */
-  private def hllRho(ev: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val h = md5(col("user_id").cast("string"))
-    ev.select(key, col("user_id"), substring(h, 1, 2).as("reg"), substring(h, 3, 8).as("suf"))
+  private[graft] def hllRho(df: DataFrame, keys: Seq[org.apache.spark.sql.Column],
+      v: org.apache.spark.sql.Column): DataFrame = {
+    val h = md5(v)
+    df.select(keys :+ substring(h, 1, 2).as("reg") :+ substring(h, 3, 8).as("suf"): _*)
       .withColumn("zrun", length(regexp_extract(col("suf"), "^0*", 0)))
       .withColumn("c", expr("substring(suf, zrun + 1, 1)"))
       .withColumn("rho", when(col("zrun") === 8, lit(33)).otherwise(
@@ -2181,7 +2185,8 @@ object Events {
   // (checkpointed artifact); everything downstream — pair lattice, union
   // merge, estimates, the error join — is sketch-domain-sized.
   def sketchOverlap(ev: DataFrame): DataFrame = {
-    val regRows = hllRho(ev, col("event_type"))
+    val regRows = hllRho(ev, Seq(col("event_type"), col("user_id")),
+      col("user_id").cast("string"))
     val sk = regRows.groupBy(col("event_type"), col("reg"))
       .agg(max(col("rho")).as("mr"))
       .localCheckpoint(true) // the stored artifact: type x 256 registers

@@ -83,17 +83,6 @@ object Graph {
     s.read.parquet(store)
   }
 
-  /** Unpersist a superseded localCheckpoint'd table. The iterative
-    * operators below checkpoint once per superstep; without this, every
-    * invocation would strand iters×(edge-table) blocks in executor
-    * storage until the context cleaner happens to collect them — at
-    * bench/Verify registry scale that is real memory pressure (the
-    * ADVICE-r7 retention note, fixed at the source). Only SUPERSEDED
-    * generations are dropped: the final checkpoint backs the returned
-    * DataFrame and stays.
-    */
-  private def dropCheckpoint(df: DataFrame): Unit = graft.Checkpoints.drop(df)
-
   /** Every co-purchase edge (pa, pb) in both directions, as (src, dst). */
   private def bothWays(e: DataFrame): DataFrame =
     e.select(col("pa").as("src"), col("pb").as("dst"))
@@ -294,24 +283,6 @@ object Graph {
       .select(col("dst").as("node"),
         (restart(col("dst")) + expr("(850 * c) div 1000")).as("rank"))
 
-  /** Supersteps per eager checkpoint. 1 — and deliberately so: chaining
-    * K supersteps lazily into one job makes the checkpointed adjacency
-    * LogicalRDD appear K times in a single plan, and attribute
-    * deduplication re-instances every occurrence after the first with
-    * fresh expr-ids WITHOUT rewriting the recorded outputPartitioning
-    * (verified on Spark 4.1.2) — so supersteps 2..K silently re-shuffle
-    * the side the layout already satisfies. One materialization per
-    * superstep keeps each plan's single adjacency occurrence
-    * partitioning-pinned; with the node-sized adjacency join this is two
-    * short stages per superstep. Round 15 re-tested cadence 2 here (the
-    * r14 VERDICT's task 4, extending x130's measured win to the rank
-    * loops): NEUTRAL-TO-NEGATIVE for them (x124 2.14 → 2.25 s median) —
-    * the re-shuffled second adjacency occurrence costs what the saved
-    * checkpoint job recovers — so the rank loops keep cadence 1 while
-    * x130's argmax loop keeps its measured cadence 2.
-    */
-  private val CkptEvery = 1
-
   /** The shared integer-rank superstep loop over ANY undirected edge list
     * `(pa, pb)` — node type agnostic (x124 ranks part ids; x138 ranks
     * words; x168 seeds restart mass on one node). Returns (node, rank)
@@ -331,20 +302,13 @@ object Graph {
       var ckpt = deg
         .select(col("src").as("node"), init(col("src")).as("rank"))
         .localCheckpoint(true)
-      var cur = ckpt
-      var pending = 0
-      for (i <- 1 to iters) {
-        cur = rankSuperstep(adj, cur, restart)
-        pending += 1
-        if (pending == CkptEvery || i == iters) {
-          val next = cur.localCheckpoint(true)
-          dropCheckpoint(ckpt)
-          ckpt = next
-          cur = next
-          pending = 0
-        }
+      for (_ <- 1 to iters) {
+        // checkpoint every superstep: cadence 2 was neutral-to-negative (x124 2.14 → 2.25 s)
+        val next = rankSuperstep(adj, ckpt, restart).localCheckpoint(true)
+        graft.Checkpoints.drop(ckpt)
+        ckpt = next
       }
-      dropCheckpoint(adj)
+      graft.Checkpoints.drop(adj)
       ckpt
     }
 
@@ -773,11 +737,11 @@ object Graph {
       // serialization jobs. Lineage stays bounded at two supersteps.
       if (it % 2 == 0 || it == iters) {
         labels = step.localCheckpoint(true)
-        dropCheckpoint(lastCk)
+        graft.Checkpoints.drop(lastCk)
         lastCk = labels
       } else labels = step
     }
-    dropCheckpoint(adj)
+    graft.Checkpoints.drop(adj)
     labels.select(col("node").as("part"), col("label").as("community"))
       .orderBy("part")
     }
@@ -858,7 +822,7 @@ object Graph {
       val nextCount = next.count()
       stable = nextCount == prevCount
       prevCount = nextCount
-      dropCheckpoint(edges)
+      graft.Checkpoints.drop(edges)
       edges = next
       round += 1
     }
@@ -1006,13 +970,13 @@ object Graph {
         .join(dist, keys, "left_anti")
         .localCheckpoint(true)
       val next = dist.unionAll(newDelta).localCheckpoint(true)
-      if (!(delta eq dist)) dropCheckpoint(delta)
-      dropCheckpoint(dist)
+      if (!(delta eq dist)) graft.Checkpoints.drop(delta)
+      graft.Checkpoints.drop(dist)
       dist = next
       delta = newDelta
     }
-    dropCheckpoint(adj)
-    dropCheckpoint(delta)
+    graft.Checkpoints.drop(adj)
+    graft.Checkpoints.drop(delta)
     dist
   }
 
@@ -1219,10 +1183,10 @@ object Graph {
           .select(col("dst").as("node"),
             (lit(150000L) + expr("(850 * c) div 1000")).as("rank"))
           .localCheckpoint(true)
-        dropCheckpoint(ranks)
+        graft.Checkpoints.drop(ranks)
         ranks = next
       }
-      dropCheckpoint(adj)
+      graft.Checkpoints.drop(adj)
       rankedParts(ranks)
     }
 

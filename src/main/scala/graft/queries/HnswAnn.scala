@@ -73,18 +73,17 @@ object HnswAnn {
   /** Append a DELTA segment — the incremental ingest path (the x65/LSM
     * move, graph-tier edition): a new batch builds its OWN per-shard
     * graphs under `seg_<name>` and the base segment is never reopened —
-    * per-batch cost is O(batch·log batch), not O(corpus). [[probeHnsw]]
-    * discovers and unions every committed segment, so new vectors serve
-    * immediately; overwrite mode keeps re-delivery of a batch
-    * idempotent. Periodic compaction = rebuild base from the union and
-    * drop the deltas (exactly the IVF tier's
-    * [[Similarity.compactIvfIndex]] role).
+    * per-batch cost is O(batch·log batch), not O(corpus). A probe that
+    * lists the segment serves its vectors at once; overwrite mode keeps
+    * re-delivery of a batch idempotent. A stream-maintained index
+    * compacts its segments through [[graft.streaming.HnswIngestStream]].
     */
   def appendHnswSegment(batch: DataFrame, indexDir: String, segment: String,
       shards: Int): Unit =
     writeSegment(batch, s"$indexDir/seg_$segment", shards)
 
-  private def writeSegment(e: DataFrame, dir: String, shards: Int): Unit = {
+  /** Write one segment directory: per-shard graphs over `e`. */
+  private[graft] def writeSegment(e: DataFrame, dir: String, shards: Int): Unit = {
     val s = e.sparkSession
     import s.implicits._
     e.select(pmod(col("vec_id"), lit(shards.toLong)).cast("int").as("shard"),
@@ -101,47 +100,6 @@ object HnswAnn {
       }
       .toDF()
       .write.mode("overwrite").partitionBy("shard").parquet(dir)
-  }
-
-  /** Compact all committed segments into a fresh base build — the
-    * maintenance step that bounds delta accumulation (each delta adds one
-    * graph per shard to every probe; compaction returns the index to
-    * ONE graph per shard, rebuilt over the union). Write-then-swap
-    * ordering: the next base is fully built under a temp name before the
-    * old base and the deltas are removed, so no crash point loses data —
-    * the same recovery contract as [[Similarity.compactIvfIndex]], with
-    * the same single-writer caveat (a manifest pointer is the concurrent-
-    * reader answer, as in [[AnnManifest]]).
-    */
-  def compactHnswIndex(s: SparkSession, indexDir: String, shards: Int): Unit = {
-    val segs = segmentsOf(indexDir)
-    require(segs.nonEmpty, s"nothing to compact under $indexDir")
-    val union = segs.map(seg =>
-        s.read.parquet(s"$indexDir/$seg").select(col("vec_id"), col("embedding")))
-      .reduce(_ unionAll _)
-      .localCheckpoint(true) // sever lineage from the dirs about to go
-    writeSegment(union, s"$indexDir/graph_next", shards)
-    StoredArtifacts.deleteTree(s"$indexDir/graph")
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$indexDir/graph_next"),
-      java.nio.file.Paths.get(s"$indexDir/graph"))
-    segs.filter(_.startsWith("seg_"))
-      .foreach(seg => StoredArtifacts.deleteTree(s"$indexDir/$seg"))
-  }
-
-  /** Segment directory names under `indexDir`, sorted for determinism:
-    * the base `graph` plus any committed `seg_*` delta (a half-written
-    * segment without the committer `_SUCCESS` marker stays invisible —
-    * the StoredArtifacts.ready discipline).
-    */
-  private def segmentsOf(indexDir: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.list(java.nio.file.Paths.get(indexDir))
-      .iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => (n == "graph" || n.startsWith("seg_")) &&
-        StoredArtifacts.ready(s"$indexDir/$n"))
-      .toSeq.sorted
   }
 
   // base + delta segments union into one node stream; the cogroup key
@@ -178,18 +136,17 @@ object HnswAnn {
 
   /** Distributed probe: top-`k` (q_id, vec_id, sim) per query in
     * `queries` (columns `q_id`, `qvec: array<double>`), searched with
-    * candidate-list width `ef` per shard. See the object scaladoc for the
-    * cogroup shape; the final merge is the bounded-heap grouped top-k
-    * (≤ k rows per query per partition cross the merge exchange).
+    * candidate-list width `ef` per shard over the listed `segments` under
+    * `indexDir`. See the object scaladoc for the cogroup shape; the final
+    * merge is the bounded-heap grouped top-k (≤ k rows per query per
+    * partition cross the merge exchange).
     */
   def probeHnsw(s: SparkSession, indexDir: String, queries: DataFrame,
-      k: Int, ef: Int): DataFrame = {
+      k: Int, ef: Int, segments: Seq[String] = Seq("graph")): DataFrame = {
     import s.implicits._
-    val segs = segmentsOf(indexDir)
-    require(segs.nonEmpty, s"no committed segments under $indexDir")
-    val graph = segmentNodes(s, indexDir, segs)
+    val graph = segmentNodes(s, indexDir, segments)
       .as[SegNode]
-    val routed = routedQueries(s, indexDir, segs, queries)
+    val routed = routedQueries(s, indexDir, segments, queries)
     val perShard = graph.groupByKey(n => (n.seg, n.shard))
       .cogroup(routed.groupByKey(q => (q.seg, q.shard))) { (_, nodeRows, qs) =>
         val ns = nodeRows.toArray
@@ -230,20 +187,19 @@ object HnswAnn {
     * this API is the ad-hoc-set form.
     */
   def probeHnswFiltered(s: SparkSession, indexDir: String, queries: DataFrame,
-      allowed: DataFrame, k: Int, ef: Int): DataFrame = {
+      allowed: DataFrame, k: Int, ef: Int,
+      segments: Seq[String] = Seq("graph")): DataFrame = {
     import s.implicits._
-    val segs = segmentsOf(indexDir)
-    require(segs.nonEmpty, s"no committed segments under $indexDir")
     val allow = allowed.select(
       col(allowed.columns(0)).cast("long").as("vec_id"),
       lit(true).as("ok0"))
-    val graph = segmentNodes(s, indexDir, segs)
+    val graph = segmentNodes(s, indexDir, segments)
       .join(allow, Seq("vec_id"), "left")
       .select(col("seg"), col("shard"), col("local_id"), col("vec_id"),
         col("embedding"), col("neighbors"), col("entry"), col("top_level"),
         coalesce(col("ok0"), lit(false)).as("ok"))
       .as[SegNodeF]
-    val routed = routedQueries(s, indexDir, segs, queries)
+    val routed = routedQueries(s, indexDir, segments, queries)
     val width = math.max(ef, 4 * k)
     val perShard = graph.groupByKey(n => (n.seg, n.shard))
       .cogroup(routed.groupByKey(q => (q.seg, q.shard))) { (_, nodeRows, qs) =>
@@ -345,7 +301,7 @@ object HnswAnn {
       val queries = e.where(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"),
           col("embedding").cast("array<double>").as("qvec"))
-      probeHnsw(s, store, queries, k = 10, ef = 64)
+      probeHnsw(s, store, queries, k = 10, ef = 64, Seq("graph", "seg_odd"))
         .where(col("q_id") =!= col("vec_id"))
     },
     None) // approximate candidate set: rows-only check + HnswAnnSpec gates

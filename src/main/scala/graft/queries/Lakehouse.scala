@@ -1026,7 +1026,7 @@ object Lakehouse {
     * reproduces identical segments. The append-then-mask order leaves a
     * both-versions window on a crash between the writes (resolved by
     * re-running the tag), never a lost row; collapsing that window needs
-    * the StoredManifest pointer-commit, exactly as AnnIngestStream does.
+    * a pointer commit, as the ingest streams' [[graft.SegmentLog]] makes.
     */
   def mergeMoR(updates: DataFrame, layout: String, mergeDir: String,
       dvDir: String, tag: String): Unit = {

@@ -390,47 +390,6 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(centroidsDir)
   }
 
-  /** Compact the index's segments into a new base generation — the
-    * maintenance step that bounds x65's delta accumulation: union the
-    * segments, optionally re-refine the coarse quantizer WARM-STARTED from
-    * the stored centroids (the serving centroids are already near-optimal,
-    * so one Lloyd step absorbs the deltas' drift — never a cold retrain),
-    * re-assign, and replace `cells`/`centroids` with the merged
-    * generation, dropping the deltas.
-    *
-    * Ordering is chosen so no crash point LOSES data: the full next
-    * generation (`cells_next` + `centroids_next`) is written before
-    * anything is removed, the old generation is swapped out via
-    * delete-then-rename, and the (now-redundant) deltas are deleted LAST
-    * — a crash mid-swap leaves either the complete old inputs or the
-    * complete new generation on disk, recoverable by hand. What this
-    * single-writer form does NOT give is atomicity against CONCURRENT
-    * readers (cells swap before centroids, so a probe between the two
-    * renames can pair NEW cells with OLD centroids): production flips a
-    * manifest pointer to a generation directory instead — implemented as
-    * [[AnnManifest]] (x73, crash windows spec-driven); this in-place form
-    * remains for the plain x62/x65 layout.
-    */
-  def compactIvfIndex(s: SparkSession, indexDir: String, segments: Seq[String],
-      iters: Int): Unit = {
-    require(segments.contains("cells"),
-      s"segments must include the base segment 'cells', got $segments — " +
-        "compacting deltas alone would leave the old base serving stale rows")
-    val all = segments.map(seg =>
-        s.read.parquet(s"$indexDir/$seg").select(col("vec_id"), col("embedding")))
-      .reduce(_ unionAll _)
-      .localCheckpoint(true) // sever lineage from the dirs about to be replaced
-    writeRecelled(all, readIvfCentroids(s, indexDir), iters,
-      s"$indexDir/cells_next", s"$indexDir/centroids_next")
-    val root = java.nio.file.Paths.get(indexDir)
-    graft.StoredArtifacts.deleteTree(root.resolve("cells").toString)
-    java.nio.file.Files.move(root.resolve("cells_next"), root.resolve("cells"))
-    graft.StoredArtifacts.deleteTree(root.resolve("centroids").toString)
-    java.nio.file.Files.move(root.resolve("centroids_next"), root.resolve("centroids"))
-    segments.filter(_ != "cells")
-      .foreach(seg => graft.StoredArtifacts.deleteTree(root.resolve(seg).toString))
-  }
-
   /** Probe-only IVF read path: scores the stored index's nprobe most
     * query-similar cells against a LITERAL query vector and returns
     * (vec_id, sim) candidates — no Lloyd iterations, no scan of the source
@@ -2819,20 +2778,18 @@ object Similarity {
             FROM pc, tot ORDER BY cluster"""))
 
   // Manifest-committed IVF lifecycle — x65's base+delta layout under the
-  // AnnManifest pointer protocol, the production form the compaction
-  // scaladoc names: init (gen_0 + manifest), delta append (segment commit
-  // AFTER the data is complete), compaction (whole next generation, then
-  // ONE atomic pointer flip), all exercised at first touch; every
-  // invocation then probes through the manifest. ManifestAnnSpec kills
-  // compaction after every step prefix and proves a probe always serves
-  // one complete generation — the crash-safety x65's layout documented
-  // as a gap.
+  // AnnManifest pointer protocol: init (gen_0 + manifest), delta append
+  // (segment commit AFTER the data is complete), compaction (whole next
+  // generation, then ONE atomic pointer flip), all exercised at first
+  // touch; every invocation then probes through the manifest.
+  // ManifestAnnSpec kills compaction after every step prefix and proves a
+  // probe always serves one complete generation.
   private val x73 = GQuery(
     "x73_ann_ivf_manifest", "ext-similarity-ann incremental-index stored-artifact crash-safe",
     (s, dir) => {
       val e = emb(s, dir)
       val store = graft.StoredArtifacts.dir(dir, "ivf_manifest_v1")
-      if (!AnnManifest.exists(store)) {
+      if (!graft.StoredManifest.exists(store)) {
         AnnManifest.init(e.where(col("vec_id") < 250), store, iters = 2)
         AnnManifest.append(e.where(col("vec_id") >= 250), store, "delta_1")
         AnnManifest.compact(s, store, iters = 1)
@@ -2857,7 +2814,7 @@ object Similarity {
     (s, dir) => {
       val e = emb(s, dir)
       val store = graft.StoredArtifacts.dir(dir, "ivf_delete_v1")
-      if (!AnnManifest.exists(store)) {
+      if (!graft.StoredManifest.exists(store)) {
         AnnManifest.init(e, store, iters = 2)
         AnnManifest.delete(
           e.where(col("vec_id") % 7 === 0).select(col("vec_id")), store, "mod7")
@@ -2873,8 +2830,8 @@ object Similarity {
   // Streaming ingest into the manifest-committed index — x73's lifecycle
   // driven by Structured Streaming: two embedding arrival files land as
   // separate micro-batches (maxFilesPerTrigger = 1), each foreachBatch
-  // cycle bootstraps/appends through AnnManifest's atomic commit, and
-  // maxSegments = 1 forces the in-loop compaction so the full
+  // cycle bootstraps/appends through graft.SegmentLog's manifest commit,
+  // and maxSegments = 1 forces the in-loop compaction so the full
   // init → append → compact lifecycle runs inside the one stream. The
   // probe serves vectors from BOTH batches through the final manifest.
   // At-least-once re-delivery is deduped by the segment-name watermark
@@ -2886,7 +2843,7 @@ object Similarity {
       val e = emb(s, dir)
       val store = graft.StoredArtifacts.dir(dir, "ann_ingest_v1")
       val index = s"$store/index"
-      if (!AnnManifest.exists(index)) {
+      if (!graft.StoredManifest.exists(index)) {
         val arrivals = s"$store/arrivals"
         e.where(col("vec_id") < 250).coalesce(1)
           .write.mode("append").parquet(arrivals)
@@ -3043,7 +3000,7 @@ object Similarity {
     var centers = Seq((0, seedRow.getLong(0), 0L))
     var curCenter = seedRow.getSeq[Long](1)
     // running min-dist table, one checkpointed generation at a time (the
-    // Graph.dropCheckpoint retention discipline — without the unpersist,
+    // Checkpoints.drop retention discipline — without the unpersist,
     // k generations of the embedding table stay pinned per run)
     var dist = pts.select(col("vec_id"), col("v"),
       d2ToCenter(curCenter).as("d")).localCheckpoint(true)

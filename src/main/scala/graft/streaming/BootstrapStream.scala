@@ -99,7 +99,7 @@ object BootstrapStream {
     // all three checkpoints are superseded by the written parquet — in a
     // weeks-long 5-minute-trigger stream, leaving one batch-sized + two
     // state-sized block sets pinned per micro-batch is real memory
-    // pressure (the Graph.dropCheckpoint retention discipline)
+    // pressure (the Checkpoints.drop retention discipline)
     graft.Checkpoints.drop(rows)
     graft.Checkpoints.drop(accCk)
     graft.Checkpoints.drop(totCk)

@@ -1,30 +1,24 @@
 package graft.streaming
 
+import graft.{SegmentLog, StoredManifest}
 import graft.queries.HnswAnn
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ingest into the sharded-HNSW graph tier — [[AnnIngestStream]]'s
   * role for the graph layout: embedding batches arrive as files, each
-  * micro-batch becomes its own per-shard HNSW delta segment
-  * ([[HnswAnn.appendHnswSegment]] — O(batch) build, base never reopened),
-  * and in-loop compaction bounds how many segment graphs a probe must
-  * traverse.
+  * micro-batch becomes its own per-shard HNSW segment (O(batch) build,
+  * earlier segments never reopened), and in-loop compaction bounds how
+  * many segment graphs a probe must traverse by rebuilding the per-shard
+  * graphs over the union of the live segments.
   *
-  * At-least-once `foreachBatch` → exactly-once, without a side ledger:
-  *   - segment names carry the batch id (`seg_b<id>`); a re-delivered
-  *     batch OVERWRITES its own segment with bit-identical content (the
-  *     per-segment build is a pure function of the batch) — idempotent;
-  *   - compaction erases delta names, so a `watermark` file (the highest
-  *     absorbed batch id, written atomically via tmp+move BEFORE the
-  *     deltas are deleted) covers re-delivery across a compaction:
-  *     monotonic stream ids at or below it are known-absorbed. Crash
-  *     between watermark write and delta delete leaves BOTH defenses
-  *     active; crash before the watermark leaves the delta names intact.
-  * Single writer: the one streaming query (foreachBatch invocations are
-  * serialized). The plain-layout caveat of [[HnswAnn.compactHnswIndex]]
-  * applies: concurrent readers during the compaction swap are the
-  * manifest tier's job, not this layout's.
+  * Segments commit through [[graft.SegmentLog]], like the IVF and
+  * zone-map streams: the first batch lands as `base_<id>`, later ones as
+  * `batch_<id>`, and a compaction publishes `base_<max absorbed id>` in
+  * the next generation before it deletes what it absorbed. [[probe]]
+  * resolves the manifest once, so a reader sees each ingested vector
+  * exactly once at every crash point and during a compaction.
   */
 object HnswIngestStream {
 
@@ -40,59 +34,33 @@ object HnswIngestStream {
       ingestBatch(batch, indexDir, batchId, shards, maxSegments)
     }
 
-  private def watermarkPath(indexDir: String) =
-    java.nio.file.Paths.get(indexDir, "watermark")
-
-  /** Highest batch id known absorbed by a compaction (-1 before any). */
-  def watermark(indexDir: String): Long = {
-    val p = watermarkPath(indexDir)
-    if (java.nio.file.Files.exists(p))
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong
-    else -1L
-  }
-
-  private def writeWatermark(indexDir: String, id: Long): Unit = {
-    val tmp = java.nio.file.Paths.get(indexDir, s"watermark.tmp")
-    java.nio.file.Files.write(tmp, id.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, watermarkPath(indexDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** True iff `batchId` is already absorbed — its delta segment survives,
-    * it bootstrapped the base, or the compaction watermark covers it.
-    */
-  def applied(indexDir: String, batchId: Long): Boolean =
-    batchId <= watermark(indexDir) ||
-      graft.StoredArtifacts.ready(s"$indexDir/seg_b$batchId") ||
-      (batchId == 0L && graft.StoredArtifacts.ready(s"$indexDir/graph"))
-
-  /** One ingest cycle: bootstrap the base (batch 0) or land a delta
-    * segment, then compact when the segment count passes `maxSegments`.
+  /** One ingest cycle: land the batch as a segment, then compact once more
+    * than `maxSegments` segments are live. An empty batch commits nothing.
     */
   def ingestBatch(batch: DataFrame, indexDir: String, batchId: Long,
-      shards: Int, maxSegments: Int): Unit = {
-    if (batch.isEmpty || applied(indexDir, batchId)) return
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
-    if (!graft.StoredArtifacts.ready(s"$indexDir/graph"))
-      HnswAnn.writeHnswIndex(batch, indexDir, shards)
-    else
-      HnswAnn.appendHnswSegment(batch, indexDir, s"b$batchId", shards)
-    maybeCompact(batch.sparkSession, indexDir, batchId, shards, maxSegments)
-  }
+      shards: Int, maxSegments: Int): Unit =
+    if (!batch.isEmpty)
+      SegmentLog.ingest(indexDir, batchId, maxSegments) { (genDir, seg) =>
+        HnswAnn.writeSegment(batch, s"$genDir/$seg", shards)
+      }(merge(batch.sparkSession, shards))
 
-  /** Compact when the live segment count exceeds the bound, recording the
-    * highest absorbed batch id BEFORE the deltas disappear.
-    */
-  def maybeCompact(s: SparkSession, indexDir: String, latestBatchId: Long,
-      shards: Int, maxSegments: Int): Unit = {
-    import scala.jdk.CollectionConverters._
-    val segs = java.nio.file.Files.list(java.nio.file.Paths.get(indexDir))
-      .iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n == "graph" || n.startsWith("seg_")).toSeq
-    if (segs.length > maxSegments) {
-      writeWatermark(indexDir, latestBatchId)
-      HnswAnn.compactHnswIndex(s, indexDir, shards)
-    }
+  /** The log's compaction, step by step ([[graft.SegmentLog.compactionSteps]]). */
+  def compactionSteps(s: SparkSession, indexDir: String,
+      shards: Int): Seq[(String, () => Unit)] =
+    SegmentLog.compactionSteps(indexDir, merge(s, shards))
+
+  private def merge(s: SparkSession, shards: Int): SegmentLog.Merge =
+    (genDir, segments, nextDir, base) =>
+      HnswAnn.writeSegment(
+        segments.map(seg => s.read.parquet(s"$genDir/$seg")
+            .select(col("vec_id"), col("embedding")))
+          .reduce(_ unionAll _),
+        s"$nextDir/$base", shards)
+
+  /** Top-`k` per query over the live generation's segments, resolved once. */
+  def probe(s: SparkSession, indexDir: String, queries: DataFrame, k: Int,
+      ef: Int): DataFrame = {
+    val (gen, segments) = StoredManifest.read(indexDir)
+    HnswAnn.probeHnsw(s, s"$indexDir/$gen", queries, k, ef, segments)
   }
 }

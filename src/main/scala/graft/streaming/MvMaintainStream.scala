@@ -25,8 +25,8 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructType, Timestamp
   * one survives until the next refresh's sweep so in-flight reads across
   * a flip complete.
   *
-  * Exactly-once from at-least-once, with no side ledger (the
-  * HnswIngestStream discipline): the generation name carries the batch id.
+  * Exactly-once from at-least-once, with no side ledger: the generation
+  * name carries the batch id ([[graft.StoredManifest.isLive]]).
   * A crash after the flip but before the checkpoint commit re-delivers the
   * same batch; the maintainer sees the live generation already named
   * `gen_<batchId>` and returns without touching bytes. A crash BEFORE the

@@ -91,8 +91,8 @@ object StatsMaintainStream {
   }
 
   /** Per-batch HLL register partials over every tracked column —
-    * [[Events.hllRegisterRows]]' md5 register arithmetic applied to the
-    * column's string form, one (column, reg, mr) row per register seen.
+    * [[Events.hllRho]] applied to the column's string form, one
+    * (column, reg, mr) row per register seen.
     * ONE pass: columns stack through a generator, so the batch is
     * scanned once however many columns are tracked.
     */
@@ -103,18 +103,7 @@ object StatsMaintainStream {
         struct(lit(c).as("column"), col(c).cast("string").as("v"))): _*)).as("s"))
       .select(col("s.column").as("column"), col("s.v").as("v"))
       .where(col("v").isNotNull)
-    val h = md5(col("v"))
-    stacked
-      .select(col("column"), substring(h, 1, 2).as("reg"),
-        substring(h, 3, 8).as("suf"))
-      .withColumn("zrun", length(regexp_extract(col("suf"), "^0*", 0)))
-      .withColumn("c0", expr("substring(suf, zrun + 1, 1)"))
-      .withColumn("rho", when(col("zrun") === 8, lit(33)).otherwise(
-        lit(4) * col("zrun") + lit(1) +
-          when(col("c0") === "1", 3)
-            .when(col("c0").isin("2", "3"), 2)
-            .when(col("c0").isin("4", "5", "6", "7"), 1)
-            .otherwise(0)))
+    Events.hllRho(stacked, Seq(col("column")), col("v"))
       .groupBy(col("column"), col("reg")).agg(max(col("rho")).as("mr"))
   }
 

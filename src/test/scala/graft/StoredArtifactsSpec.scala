@@ -69,4 +69,34 @@ class StoredArtifactsSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Files.getLastModifiedTime(lease).toMillis >= t0,
       "dir() must refresh the current generation's lease")
   }
+
+  test("dir, deleteTree and sweepUnreachable leave no file descriptor open") {
+    def openFds(): Int = {
+      System.gc()
+      new java.io.File("/proc/self/fd").list().length
+    }
+    val root = Files.createTempDirectory("graft-sa-fds")
+    val fixture = root.resolve("src").toString
+    val manifest = root.resolve("manifest").toString
+    writeFixture(fixture, 1000000L)
+    StoredManifest.write(manifest, "gen_1", Seq("s"))
+    try {
+      StoredArtifacts.dir(fixture, "idx_v1") // first touch: classes, jars
+      val before = openFds()
+      for (i <- 0 until 50) {
+        StoredArtifacts.dir(fixture, "idx_v1")
+        val tree = root.resolve(s"tree_$i")
+        Files.createDirectories(tree.resolve("a/b"))
+        Files.write(tree.resolve("a/b/f"), Array[Byte](1))
+        StoredArtifacts.deleteTree(tree.toString)
+        Files.createDirectories(Paths.get(manifest, "gen_0", "s"))
+        StoredManifest.sweepUnreachable(manifest)
+        assert(!Files.exists(tree) && !Files.exists(Paths.get(manifest, "gen_0")))
+      }
+      // one leaked stream per round would read +50 or more; the slack
+      // absorbs a descriptor another thread of the JVM opens meanwhile
+      val after = openFds()
+      assert(after <= before + 5, s"open descriptors grew from $before to $after")
+    } finally StoredArtifacts.deleteTree(root.toString)
+  }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
-import graft.{SparkEntry, SparkSpec, Tables}
+import graft.{SparkEntry, SparkSpec, StoredManifest, Tables}
 import org.apache.spark.sql.functions._
 
 /** The deletion lifecycle on the manifest-committed IVF index (x108):
@@ -43,7 +43,7 @@ class DeleteAnnSpec extends SparkSpec {
 
       // retried tag is a committed-segment no-op; a different tag composes
       AnnManifest.delete(Seq(999999L).toDF("vec_id"), idx, "mod7")
-      assert(AnnManifest.readManifest(idx)._2.count(_ == "tomb_mod7") == 1,
+      assert(StoredManifest.read(idx)._2.count(_ == "tomb_mod7") == 1,
         "retrying a committed tag must not duplicate or overwrite it")
       AnnManifest.delete(Seq(3L).toDF("vec_id"), idx, "extra")
       val afterExtra = AnnManifest.probe(spark, idx, qvec, nprobe = 6)
@@ -54,7 +54,7 @@ class DeleteAnnSpec extends SparkSpec {
       // segments, the dropped ids are gone from the cells themselves, and
       // the probe result is unchanged
       AnnManifest.compact(spark, idx, iters = 0)
-      val (gen, segments) = AnnManifest.readManifest(idx)
+      val (gen, segments) = StoredManifest.read(idx)
       assert(!segments.exists(_.startsWith("tomb_")),
         s"compacted generation must be tombstone-free: $segments")
       val cellsIds = spark.read.parquet(s"$idx/$gen/cells")
@@ -82,10 +82,10 @@ class DeleteAnnSpec extends SparkSpec {
       // simulate the crash window: segment fully written, manifest never
       // updated — exactly what a kill between the two steps leaves behind
       import spark.implicits._
-      val (gen, segments) = AnnManifest.readManifest(idx)
+      val (gen, segments) = StoredManifest.read(idx)
       Seq(1L, 2L, 3L).toDF("vec_id").coalesce(1)
         .write.mode("overwrite").parquet(s"$idx/$gen/tomb_orphan")
-      assert(AnnManifest.readManifest(idx)._2 == segments,
+      assert(StoredManifest.read(idx)._2 == segments,
         "the orphan segment must not be manifest-visible")
       val after = AnnManifest.probe(spark, idx, qvec, nprobe = 6)
         .collect().map(_.getLong(0)).toSet

@@ -109,6 +109,7 @@ class HnswAnnSpec extends SparkSpec {
   test("x132 incremental append: delta serves immediately, base untouched, idempotent") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-hnsw-inc").toString
+    val segs = Seq("graph", "seg_odd")
     val e = graft.Tables(spark, sf001, "embeddings")
     HnswAnn.writeHnswIndex(e.where(pmod(col("vec_id"), lit(2L)) === 0), dir, shards = 2)
     val baseFiles = {
@@ -129,7 +130,7 @@ class HnswAnnSpec extends SparkSpec {
     assert(afterFiles == baseFiles, "append must never reopen the base segment")
     // every id serves: an odd (delta) query finds itself at sim ~ 1
     val q = Seq((1L, corpus(1L)), (2L, corpus(2L))).toDF("q_id", "qvec")
-    val hits = HnswAnn.probeHnsw(spark, dir, q, k = 5, ef = 64).collect()
+    val hits = HnswAnn.probeHnsw(spark, dir, q, k = 5, ef = 64, segs).collect()
       .groupBy(_.getLong(0))
     for (id <- Seq(1L, 2L)) {
       val self = hits(id).find(_.getLong(1) == id)
@@ -137,40 +138,47 @@ class HnswAnnSpec extends SparkSpec {
         s"query $id must find itself through its segment")
     }
     // union coverage: segments partition the corpus
-    val ids = Seq("graph", "seg_odd").flatMap(seg =>
+    val ids = segs.flatMap(seg =>
       spark.read.parquet(s"$dir/$seg").select("vec_id").collect().map(_.getLong(0)))
     assert(ids.sorted == corpus.keys.toSeq.sorted)
     // idempotent re-delivery: re-appending the same batch changes nothing
-    val before = HnswAnn.probeHnsw(spark, dir, q, k = 5, ef = 64).collect().toSeq
+    val before = HnswAnn.probeHnsw(spark, dir, q, k = 5, ef = 64, segs).collect().toSeq
     HnswAnn.appendHnswSegment(e.where(pmod(col("vec_id"), lit(2L)) === 1), dir,
       "odd", shards = 2)
-    val after = HnswAnn.probeHnsw(spark, dir, q, k = 5, ef = 64).collect().toSeq
+    val after = HnswAnn.probeHnsw(spark, dir, q, k = 5, ef = 64, segs).collect().toSeq
     assert(before == after)
   }
 
   test("compaction folds deltas into one base; rebuild is deterministic") {
     import spark.implicits._
+    import graft.streaming.HnswIngestStream
     val dir = java.nio.file.Files.createTempDirectory("graft-hnsw-cmp").toString
     val e = graft.Tables(spark, sf001, "embeddings")
-    HnswAnn.writeHnswIndex(e.where(pmod(col("vec_id"), lit(2L)) === 0), dir, shards = 2)
-    HnswAnn.appendHnswSegment(e.where(pmod(col("vec_id"), lit(2L)) === 1), dir,
-      "odd", shards = 2)
-    HnswAnn.compactHnswIndex(spark, dir, shards = 4)
+    // two stream batches: the even ids bootstrap base_0, the odd ids land
+    // as batch_1
+    HnswIngestStream.ingestBatch(e.where(pmod(col("vec_id"), lit(2L)) === 0),
+      dir, 0L, shards = 4, maxSegments = 4)
+    HnswIngestStream.ingestBatch(e.where(pmod(col("vec_id"), lit(2L)) === 1),
+      dir, 1L, shards = 4, maxSegments = 4)
+    def compact(): Unit = HnswIngestStream.compactionSteps(spark, dir, shards = 4)
+      .foreach { case (_, step) => step() }
+    compact()
     // deltas gone, one base left, coverage intact
-    import scala.jdk.CollectionConverters._
-    val dirs = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      .iterator().asScala.map(_.getFileName.toString).toSeq.sorted
-    assert(dirs == Seq("graph"), s"compaction must leave only the base, got $dirs")
-    val ids = spark.read.parquet(s"$dir/graph").select("vec_id")
+    assert(graft.StoredManifest.read(dir) == (("gen_1", Seq("base_1"))))
+    val dirs = graft.StoredArtifacts.list(dir)
+      .filter(java.nio.file.Files.isDirectory(_)).map(_.getFileName.toString)
+    assert(dirs == Seq("gen_1"), s"compaction must leave only the base, got $dirs")
+    val ids = spark.read.parquet(s"$dir/gen_1/base_1").select("vec_id")
       .collect().map(_.getLong(0))
     assert(ids.sorted.toSeq == corpus.keys.toSeq.sorted)
     // the compacted index serves, and a SECOND compaction (same union,
     // deterministic build) leaves probe results bit-identical
     val q = Seq((1L, corpus(1L)), (4L, corpus(4L))).toDF("q_id", "qvec")
-    val a = HnswAnn.probeHnsw(spark, dir, q, k = 5, ef = 64).collect().toSeq
+    val a = HnswIngestStream.probe(spark, dir, q, k = 5, ef = 64).collect().toSeq
     assert(a.nonEmpty)
-    HnswAnn.compactHnswIndex(spark, dir, shards = 4)
-    val b = HnswAnn.probeHnsw(spark, dir, q, k = 5, ef = 64).collect().toSeq
+    compact()
+    assert(graft.StoredManifest.read(dir) == (("gen_2", Seq("base_1"))))
+    val b = HnswIngestStream.probe(spark, dir, q, k = 5, ef = 64).collect().toSeq
     assert(a == b, "re-compaction of an already-compacted index must be a fixed point")
   }
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{SparkEntry, SparkSpec, StoredManifest}
 import org.apache.spark.sql.functions._
 
 /** The manifest-pointer commit protocol's correctness claim, driven
@@ -43,11 +43,11 @@ class ManifestAnnSpec extends SparkSpec {
     val idx = base.resolve("ivf").toString
     try {
       AnnManifest.init(standing, idx, iters = 1)
-      assert(AnnManifest.readManifest(idx) == (("gen_0", Seq("cells"))))
+      assert(StoredManifest.read(idx) == (("gen_0", Seq("cells"))))
       assert(probedIds(idx) == allIds -- Seq(500L, 501L), "base generation serves the standing corpus")
 
       AnnManifest.append(batch, idx, "delta_1")
-      assert(AnnManifest.readManifest(idx) == (("gen_0", Seq("cells", "delta_1"))))
+      assert(StoredManifest.read(idx) == (("gen_0", Seq("cells", "delta_1"))))
       assert(probedIds(idx) == allIds, "the committed delta is immediately searchable")
 
       // committed segments are immutable: a retried append is a no-op,
@@ -56,15 +56,24 @@ class ManifestAnnSpec extends SparkSpec {
       assert(probedIds(idx) == allIds, "retried append must not rewrite the live delta")
 
       AnnManifest.compact(spark, idx, iters = 1)
-      assert(AnnManifest.readManifest(idx) == (("gen_1", Seq("cells"))))
+      assert(StoredManifest.read(idx) == (("gen_1", Seq("cells"))))
       assert(probedIds(idx) == allIds, "the compacted generation serves everything")
+      // the warm-started re-cell keeps the coarse quantizer's k, and the
+      // merged base alone serves the former delta vector first
+      assert(Similarity.readIvfCentroids(spark, s"$idx/gen_1").length == 3,
+        "compaction keeps the coarse quantizer's k")
+      val nearest = AnnManifest.probe(spark, idx, Array(1.0, 0, 0, 0, 0, 0), nprobe = 1)
+        .orderBy(col("sim").desc, col("vec_id"))
+        .limit(3).collect().map(_.getLong(0)).toSeq
+      assert(nearest.head == 500L,
+        s"the compacted base must serve the former delta vector first: $nearest")
       // DEFERRED GC: the superseded generation survives the flip (an
       // in-flight reader gets a full cycle), and the NEXT compaction's
       // gc step sweeps it
       assert(Files.exists(base.resolve("ivf").resolve("gen_0")),
         "the superseded generation must survive until the next gc")
       AnnManifest.compact(spark, idx, iters = 0)
-      assert(AnnManifest.readManifest(idx)._1 == "gen_2")
+      assert(StoredManifest.read(idx)._1 == "gen_2")
       assert(!Files.exists(base.resolve("ivf").resolve("gen_0")),
         "the next compaction's gc sweeps the unreachable generation")
       assert(probedIds(idx) == allIds)
@@ -87,7 +96,7 @@ class ManifestAnnSpec extends SparkSpec {
         // flip (prefix < 3), gen_1 after it
         assert(probedIds(idx) == allIds,
           s"after ${steps.take(prefix).map(_._1)} the probe lost rows")
-        val (gen, _) = AnnManifest.readManifest(idx)
+        val (gen, _) = StoredManifest.read(idx)
         assert(gen == (if (prefix < nSteps) "gen_0" else "gen_1"),
           s"prefix $prefix must leave the manifest on the ${if (prefix < nSteps) "old" else "new"} generation, got $gen")
       } finally graft.StoredArtifacts.deleteTree(base.toString)
@@ -107,9 +116,9 @@ class ManifestAnnSpec extends SparkSpec {
       AnnManifest.compactionSteps(spark, idx, iters = 1).take(2)
         .foreach { case (_, run) => run() }
       assert(Files.exists(base.resolve("ivf").resolve("gen_1")), "orphan present")
-      assert(AnnManifest.readManifest(idx)._1 == "gen_0")
+      assert(StoredManifest.read(idx)._1 == "gen_0")
       AnnManifest.compact(spark, idx, iters = 0)
-      assert(AnnManifest.readManifest(idx)._1 == "gen_1")
+      assert(StoredManifest.read(idx)._1 == "gen_1")
       assert(probedIds(idx) == allIds,
         "the recommitted generation serves everything")
     } finally graft.StoredArtifacts.deleteTree(base.toString)
@@ -129,7 +138,7 @@ class ManifestAnnSpec extends SparkSpec {
       // two compactions: without the pin, the SECOND one's gc sweeps gen_0
       AnnManifest.compact(spark, idx, iters = 1)
       AnnManifest.compact(spark, idx, iters = 0)
-      assert(AnnManifest.readManifest(idx)._1 == "gen_2")
+      assert(StoredManifest.read(idx)._1 == "gen_2")
       assert(Files.exists(base.resolve("ivf").resolve("gen_0")),
         "a pinned generation must be sweep-exempt")
       val rPinned = AnnManifest.probePinned(spark, idx, "gen_0", q, nprobe = 3)
@@ -157,10 +166,10 @@ class ManifestAnnSpec extends SparkSpec {
       // the "bad publish": a compaction that (say) shipped broken
       // centroids — the generation is committed and live
       AnnManifest.compact(spark, idx, iters = 1)
-      assert(AnnManifest.readManifest(idx)._1 == "gen_1")
+      assert(StoredManifest.read(idx)._1 == "gen_1")
 
       AnnManifest.rollback(idx, "gen_0")
-      assert(AnnManifest.readManifest(idx) == (("gen_0", Seq("cells", "delta_1"))),
+      assert(StoredManifest.read(idx) == (("gen_0", Seq("cells", "delta_1"))),
         "rollback must restore the generation with its full segment list")
       val after = AnnManifest.probe(spark, idx, q, nprobe = 3)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1).toSeq
@@ -175,7 +184,7 @@ class ManifestAnnSpec extends SparkSpec {
       // ...and the next compaction re-publishes gen_1 FRESH from the
       // restored state (generation names recycle; content does not)
       AnnManifest.compact(spark, idx, iters = 0)
-      assert(AnnManifest.readManifest(idx) == (("gen_1", Seq("cells"))))
+      assert(StoredManifest.read(idx) == (("gen_1", Seq("cells"))))
       assert(probedIds(idx) == allIds)
     } finally graft.StoredArtifacts.deleteTree(base.toString)
   }

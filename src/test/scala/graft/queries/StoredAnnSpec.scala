@@ -107,22 +107,6 @@ class StoredAnnSpec extends SparkSpec {
         .probeStoredIvf(spark, idx, qvec, nprobe = 1)
         .collect().map(_.getLong(0)).toSet
       assert(!baseOnly.contains(500L), "the base segment must not contain the delta")
-
-      // compaction: merge delta into a new base generation (warm-started
-      // re-refinement), drop the delta — after it, the base alone serves
-      // everything and the probe result is unchanged
-      Similarity.compactIvfIndex(spark, idx, Seq("cells", "delta"), iters = 1)
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(idx).resolve("delta")),
-        "compaction must drop the merged delta segment")
-      val compacted = Similarity
-        .probeStoredIvf(spark, idx, qvec, nprobe = 1)
-        .orderBy(col("sim").desc, col("vec_id"))
-        .limit(3).collect().map(_.getLong(0)).toSeq
-      assert(compacted.head == 500L,
-        s"the compacted base must serve the former delta vector first: $compacted")
-      assert(Similarity.readIvfCentroids(spark, idx).length == 3,
-        "compaction keeps the coarse quantizer's k")
     } finally graft.StoredArtifacts.deleteTree(base.toString)
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{SegmentLog, SparkSpec, StoredManifest}
 import graft.queries.AnnManifest
 import org.apache.spark.sql.DataFrame
 
@@ -60,7 +60,7 @@ class StreamingAnnIngestSpec extends SparkSpec {
     writeArrival(standing, arrivals)
     writeArrival(late, arrivals)
     runStream(arrivals, idx, base.resolve("ckpt").toString, maxSegments = 4)
-    assert(AnnManifest.readManifest(idx) == (("gen_0", Seq("base_0", "batch_1"))),
+    assert(StoredManifest.read(idx) == (("gen_0", Seq("base_0", "batch_1"))),
       "batch 0 bootstraps generation 0; batch 1 lands as a named delta")
     assert(probedIds(idx) == allIds)
   }
@@ -72,7 +72,7 @@ class StreamingAnnIngestSpec extends SparkSpec {
     writeArrival(standing, arrivals)
     writeArrival(late, arrivals)
     runStream(arrivals, idx, base.resolve("ckpt").toString, maxSegments = 1)
-    assert(AnnManifest.readManifest(idx) == (("gen_1", Seq("base_1"))),
+    assert(StoredManifest.read(idx) == (("gen_1", Seq("base_1"))),
       "the in-loop compaction merged base_0 + batch_1 into generation 1")
     assert(probedIds(idx) == allIds, "nothing is lost across the in-loop compaction")
   }
@@ -88,19 +88,19 @@ class StreamingAnnIngestSpec extends SparkSpec {
 
     // crash-after-commit re-delivery of batch 1: its batch_1 name is gone
     // (compacted away) but the base_1 watermark covers it
-    assert(AnnIngestStream.applied(idx, 0) && AnnIngestStream.applied(idx, 1))
+    assert(SegmentLog.applied(idx, 0) && SegmentLog.applied(idx, 1))
     AnnIngestStream.ingestBatch(late, idx, batchId = 1, iters = 1, maxSegments = 1)
     assert(manifestLine(idx) == committed, "re-delivered absorbed batch must not recommit")
     assert(probedIds(idx) == allIds, "and must not duplicate rows")
 
     // a genuinely NEW batch id is not covered by the watermark
-    assert(!AnnIngestStream.applied(idx, 2))
+    assert(!SegmentLog.applied(idx, 2))
     import org.apache.spark.sql.functions.{col, lit}
     AnnIngestStream.ingestBatch(
       late.select((col("vec_id") + lit(100L)).as("vec_id"),
         col("embedding"), col("label")),
       idx, batchId = 2, iters = 1, maxSegments = 4)
-    assert(AnnManifest.readManifest(idx) == (("gen_1", Seq("base_1", "batch_2"))))
+    assert(StoredManifest.read(idx) == (("gen_1", Seq("base_1", "batch_2"))))
     assert(probedIds(idx) == allIds ++ Set(600L, 601L))
   }
 
@@ -109,6 +109,6 @@ class StreamingAnnIngestSpec extends SparkSpec {
     val idx = base.resolve("idx").toString
     AnnIngestStream.ingestBatch(standing.limit(0), idx, batchId = 0,
       iters = 1, maxSegments = 4)
-    assert(!AnnManifest.exists(idx), "no manifest may appear for an empty bootstrap")
+    assert(!StoredManifest.exists(idx), "no manifest may appear for an empty bootstrap")
   }
 }

@@ -141,6 +141,20 @@ class StreamingStatsSpec extends SparkSpec {
       val direct = StatsMaintainStream.registerPartials(all)
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toMap
       assert(inc == direct, "incremental registers must equal one-shot registers")
+      // and the registers are the HLL rule, recounted in plain Scala: reg =
+      // first 2 hex digits of md5(v), rho = leading zero bits of the next
+      // 32 plus one (33 when all 32 are zero), max rho per (column, reg)
+      val recount = all.collect().toSeq
+        .flatMap(r => Seq("k" -> r.getLong(0).toString, "s" -> r.getString(1)))
+        .map { case (c, v) =>
+          val hex = java.security.MessageDigest.getInstance("MD5")
+            .digest(v.getBytes("UTF-8")).map("%02x".format(_)).mkString
+          val bits = java.lang.Long.parseLong(hex.substring(2, 10), 16).toInt
+          val rho = if (bits == 0) 33 else Integer.numberOfLeadingZeros(bits) + 1
+          (c, hex.take(2)) -> rho
+        }
+        .groupBy(_._1).map { case (key, rs) => key -> rs.map(_._2).max }
+      assert(direct == recount, "registers must match the plain-Scala recount")
       // re-delivery of the last batch id is a no-op (exactly-once)
       StatsMaintainStream.maintain(spark, b1, statsDir, 1L)
       assert(StoredManifest.read(statsDir)._1 == gen)

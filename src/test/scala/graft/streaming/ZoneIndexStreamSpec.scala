@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{SparkSpec, StoredManifest, Tables}
+import graft.{SegmentLog, SparkSpec, StoredManifest, Tables}
 import org.apache.spark.sql.functions._
 
 /** Streaming zone-index maintenance (ZoneIndexStream): after replaying
@@ -59,8 +59,8 @@ class ZoneIndexStreamSpec extends SparkSpec {
 
     // exactly-once: re-delivering an absorbed batch id is a no-op (the
     // base watermark covers ids compaction erased)
-    assert(ZoneIndexStream.applied(idxDir, 0L))
-    assert(ZoneIndexStream.applied(idxDir, 2L))
+    assert(SegmentLog.applied(idxDir, 0L))
+    assert(SegmentLog.applied(idxDir, 2L))
     val before = ZoneIndexStream.rangeRead(spark, idxDir, 0, maxId).count()
     ZoneIndexStream.ingestBatch(
       docs.where(pmod(col("doc_id"), lit(3)) === 1), idxDir, 1L, 2)
