@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions.col
   * Listing is two-level: the driver lists plate directories (one cheap
   * readdir), then the per-plate run listing fans out across executors —
   * the parallel-listing shape that holds at 100 TB where a single
-  * driver-side walk would not (SURVEY.md §7.4.5). Filters (is-dir, `.d`
-  * suffix, output/archive exclusion) run inside the listing closure so no
-  * non-run path is ever shuffled.
+  * driver-side walk would not (SURVEY.md §7.4.5). The fan-out comes from
+  * the `parallelize` slices of the plate names (one plate per task up to
+  * the session's parallelism), so the listing plans no exchange. Filters
+  * (is-dir, `.d` suffix, output/archive exclusion) run inside the listing
+  * closure so no non-run path ever leaves the task that listed it.
   */
 object Discovery {
 
@@ -27,8 +29,8 @@ object Discovery {
       .map(_.toString).sorted
     if (plates.isEmpty) spark.emptyDataset[RunRecord]
     else
-      spark.createDataset(plates)
-        .repartition(math.min(plates.size, spark.sparkContext.defaultParallelism))
+      spark.createDataset(spark.sparkContext
+          .parallelize(plates, math.min(plates.size, spark.sparkContext.defaultParallelism)))
         .flatMap { plateStr =>
           val plate = Paths.get(plateStr)
           val plateRel = Paths.get(cfg.watchDir).relativize(plate).toString

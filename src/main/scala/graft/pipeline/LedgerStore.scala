@@ -58,11 +58,14 @@ final class LedgerStore(spark: SparkSession, stateDir: String, maxAttempts: Int 
   def skipKeys: DataFrame =
     attempts.where(col("attempts") >= maxAttempts).select("base", "plateRel")
 
-  /** Keys that never enter a batch again: converted or skipped (A6 anti-join
-    * right side).
+  /** Keys that never enter a batch again: converted or skipped. Meant only as
+    * the right side of a `left_anti` join (A6), so it may hold a key more
+    * than once: a key both converted and skipped, or one an at-least-once
+    * replay converted twice. Duplicates do not change an anti-join, and not
+    * removing them saves an aggregate exchange per cycle.
     */
   def doneKeys: DataFrame =
-    converted.select("base", "plateRel").union(skipKeys).distinct()
+    converted.select("base", "plateRel").union(skipKeys)
 
   /** Record successful conversions (one appended file, idempotent downstream
     * via the anti-join), then [[compact]] the table.

@@ -21,13 +21,21 @@ object RunAnalytics {
     * plan, not a collected value: building the panel runs no job, and the
     * plan carries no per-refresh timestamp literal, which Spark would
     * inline into generated Java source and so compile new classes on every
-    * refresh.
+    * refresh. The join is a cartesian product (the `shuffle_replicate_nl`
+    * hint), not a broadcast: over a single-partition history it is narrow,
+    * one stage with both its sides, where a broadcast runs a job of its
+    * own. A window over all rows would need no join, but Spark drops a
+    * constant partition key and then logs a no-partition warning each time
+    * it plans the window.
     */
   def converted24h(history: DataFrame): DataFrame =
     history
       .where(col("state") === "success")
-      .crossJoin(history.agg(max(col("endTs")).as("now")))
+      .crossJoin(history.agg(max(col("endTs")).as("now")).hint("shuffle_replicate_nl"))
       .where(col("endTs") > col("now") - expr("INTERVAL 24 HOURS"))
+      // a cartesian product reports no output partitioning, so the count
+      // would shuffle even its one partition into one
+      .coalesce(1)
       .agg(count(lit(1)).as("converted"))
 
   /** Panel 2 (msconvert.json:48): avg conversion minutes, 1 decimal. */
@@ -90,12 +98,17 @@ object RunAnalytics {
           .otherwise(lit(0.0)))
 
   /** All panels as named frames (dashboard refresh equivalent). Building
-    * them runs no Spark job. Safe on an empty history: panels return
-    * empty/zero frames rather than null-filter surprises (max(endTs) of an
-    * empty table is null).
+    * them runs no Spark job. Each panel plans as one stage over a
+    * single-partition history, with no exchange, so collecting it runs one
+    * job. Safe on an empty history: panels return empty/zero frames rather
+    * than null-filter surprises (max(endTs) of an empty table is null).
     */
   def dashboard(spark: SparkSession, cfg: GraftConfig): Map[String, DataFrame] = {
-    val h = PipelineRunner.history(spark, cfg)
+    // History is run metadata (one row per run), so one task reads it
+    // whole. Coalesce(1) reports SinglePartition, which satisfies every
+    // panel's aggregate, sort, limit and join: no panel shuffles, and no
+    // range sort samples its input in a job of its own.
+    val h = PipelineRunner.history(spark, cfg).coalesce(1)
     Map(
       "converted_24h" -> converted24h(h),
       "avg_minutes" -> avgConversionMinutes(h),

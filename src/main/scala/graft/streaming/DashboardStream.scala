@@ -27,15 +27,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * body recomputes the panels over the full history table, which is
   * run-METADATA (one row per conversion), not data — at 1024 runs/cycle
   * (the reference's MAX_MAP) a year of history is a few million rows, a
-  * single-task scan. What a refresh costs is per query, not per row:
-  * each panel is planned and scheduled anew. The panels' plans are the
-  * same from one refresh to the next (the 24 h window's `now` is derived
-  * inside the plan, see [[graft.pipeline.RunAnalytics.converted24h]]), so
-  * a warm stream finds every generated class in Spark's code cache and
-  * compiles nothing. Incrementalizing the two windowed panels
-  * (converted_24h, per_hour) with watermarked streaming aggregation is
-  * possible but buys nothing at metadata cardinality and loses the
-  * whole-history panels (avg, details), which need the table anyway.
+  * single-task scan. What a refresh costs is per query, not per row, so
+  * each panel is one single-partition stage: one task reads the history
+  * and computes the panel with no exchange. One task is right at this
+  * cardinality, where splitting the scan over the cores would save less
+  * than the shuffle that joins the parts back up (and a sort's sampling
+  * job) would cost. The panels' plans are the same from one refresh to
+  * the next (the 24 h window's `now` is derived inside the plan, see
+  * [[graft.pipeline.RunAnalytics.converted24h]]), so a warm stream finds
+  * every generated class in Spark's code cache and compiles nothing.
+  * Incrementalizing the two windowed panels (converted_24h, per_hour) with
+  * watermarked streaming aggregation is possible but buys nothing at
+  * metadata cardinality and loses the whole-history panels (avg, details),
+  * which need the table anyway.
   * Production trigger: `Trigger.ProcessingTime("5 minutes")` — the
   * reference's Grafana cadence; specs use `Trigger.AvailableNow`.
   */
@@ -57,9 +61,10 @@ object DashboardStream {
   }
 
   /** One refresh: sweep unreachable generations, write all panels under a
-    * new one, flip the manifest. Also callable synchronously (a cycle-end
-    * hook) — the streaming form exists so refresh latency is bounded by
-    * the trigger, not by the caller remembering to refresh.
+    * new one (one file each, as every panel plans to one partition), flip
+    * the manifest. Also callable synchronously (a cycle-end hook) — the
+    * streaming form exists so refresh latency is bounded by the trigger,
+    * not by the caller remembering to refresh.
     *
     * A compaction lands one new file in `history/`, which the stream takes
     * as a refresh signal; that is harmless, since the batch rows are never
@@ -75,7 +80,7 @@ object DashboardStream {
     def publish(): Seq[String] = {
       val panels = RunAnalytics.dashboard(spark, cfg)
       panels.foreach { case (name, df) =>
-        df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$genName/$name")
+        df.write.mode("overwrite").parquet(s"$dir/$genName/$name")
       }
       panels.keys.toSeq.sorted
     }

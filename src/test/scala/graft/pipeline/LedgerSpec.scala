@@ -88,4 +88,30 @@ class LedgerSpec extends SparkSpec {
     assert(keys(ledger.converted.select("base", "plateRel")) ==
       Set(("c", "p"), ("d", "p"), ("e", "p")))
   }
+
+  test("the dedup anti-join excludes keys doneKeys holds twice, and the cap stays exact") {
+    val root = Files.createTempDirectory("graft-ledger-dup")
+    val cfg = GraftConfig(
+      watchDir = root.resolve("watch").toString,
+      outputDir = root.resolve("out").toString,
+      archiveDir = root.resolve("arch").toString,
+      stateDir = root.resolve("state").toString,
+      maxAttempts = 2,
+      maxMap = 3)
+    val ledger = new LedgerStore(spark, cfg.stateDir, cfg.maxAttempts)
+    // "a": skipped at maxAttempts and converted; "b": converted twice, as an
+    // at-least-once replay of its batch stores it
+    ledger.recordFailures(Seq(status("a", "failed"), status("a", "failed")).toDS().toDF())
+    ledger.appendConverted(Seq(status("a", "success"), status("b", "success")).toDS().toDF())
+    ledger.appendConverted(Seq(status("b", "success")).toDS().toDF())
+    val done = ledger.doneKeys.as[(String, String)].collect().toSeq
+    assert(done.count(_ == ("a", "p")) == 2 && done.count(_ == ("b", "p")) == 2, done)
+
+    val discovered = Seq("a", "b", "c", "d", "e", "f")
+      .map(b => RunRecord(s"/in/p/$b.d", "p", b)).toDS()
+    val pending = Discovery.dedup(discovered, ledger, cfg).collect().toSeq
+    assert(pending.map(_.base) == Seq("c", "d", "e"), pending)
+    assert(Discovery.dedup(discovered, ledger, cfg.copy(maxMap = 10)).collect().toSeq
+      .map(_.base) == Seq("c", "d", "e", "f"))
+  }
 }

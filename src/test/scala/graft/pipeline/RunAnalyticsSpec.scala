@@ -53,11 +53,12 @@ class RunAnalyticsSpec extends SparkSpec {
       outputDir = root.resolve("out").toString,
       archiveDir = root.resolve("arch").toString,
       stateDir = root.resolve("state").toString)
-    val d = RunAnalytics.dashboard(spark, empty)
-    assert(d("converted_24h").head().getLong(0) == 0)
-    assert(d("per_hour").count() == 0)
-    assert(d("run_details").count() == 0)
-    assert(d("compression").head().getAs[Long]("orig_bytes") == 0)
+    val d = RunAnalytics.dashboard(spark, empty).map { case (k, df) => k -> df.collect().toSeq }
+    assert(d("converted_24h").map(_.getLong(0)) == Seq(0L))
+    assert(d("avg_minutes").size == 1 && d("avg_minutes").head.isNullAt(0))
+    assert(d("per_hour").isEmpty && d("recent_cycles").isEmpty && d("run_details").isEmpty)
+    assert(d("compression").map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) ==
+      Seq((0L, 0L, 0.0)))
   }
 
   test("per-hour series matches the flagship entry query shape") {

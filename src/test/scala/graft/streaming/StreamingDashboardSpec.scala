@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.time.Instant
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.pipeline.{GraftConfig, PipelineRunner, RunAnalytics}
@@ -43,6 +44,11 @@ class StreamingDashboardSpec extends SparkSpec {
 
       assert(DashboardStream.published(cfg), "first refresh must publish a manifest")
       val gen1 = DashboardStream.liveGeneration(cfg)
+      for (panel <- RunAnalytics.dashboard(spark, cfg).keys) {
+        val files = Files.list(root.resolve("state").resolve("dashboard").resolve(gen1).resolve(panel))
+        try assert(files.iterator().asScala.count(_.toString.endsWith(".parquet")) == 1, panel)
+        finally files.close()
+      }
       assert(DashboardStream.readPanel(spark, cfg, "converted_24h")
         .head().getLong(0) == 2)
       // published panels agree with the live batch dashboard, column for column
