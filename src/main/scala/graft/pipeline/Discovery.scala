@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Discovery source — operators A1-A8 (dags/msconvert_dag.py:175-221).
   *
@@ -46,26 +46,28 @@ object Discovery {
     graft.StoredArtifacts.list(plate.toString)
       .filter(p => Files.isDirectory(p) && p.getFileName.toString.endsWith(".d"))
 
-  /** A6-A8: dedup anti-join against the converted ledger + skip set, then the
-    * deterministic sorted batch cap (pending.sort()[:MAX_MAP], :212-220).
+  /** A6-A8: drop the runs the ledger holds as done ([[dedupLedger]]), then
+    * take the deterministic sorted batch cap (pending.sort()[:MAX_MAP],
+    * :212-220) over the remaining driver rows.
     *
-    * The ledger join replaces the reference's per-run glob of the output dir
-    * (:112-122) — same keys (base, plate_rel), O(1) scans instead of
-    * O(pending) filesystem globs, and it broadcasts when small / shuffles on
-    * the composite key when not.
+    * The ledger filter replaces the reference's per-run glob of the output
+    * dir (:112-122): same keys (base, plate_rel), one scan of the ledger
+    * instead of O(pending) filesystem globs.
     */
-  def dedup(
-      discovered: Dataset[RunRecord],
-      ledger: LedgerStore,
-      cfg: GraftConfig): Dataset[RunRecord] = {
-    val spark = discovered.sparkSession
-    import spark.implicits._
-    discovered
-      .join(ledger.doneKeys, Seq("base", "plateRel"), "left_anti")
-      .as[RunRecord]
-      .orderBy(col("path"))
-      .limit(cfg.maxMap)
-  }
+  def dedup(listed: Seq[RunRecord], ledger: LedgerStore, cfg: GraftConfig): Seq[RunRecord] =
+    // UTF-8 byte order: the order Spark sorts strings in, and Python's code-point order
+    dedupLedger(listed, ledger).sortBy(r => UTF8String.fromString(r.path)).take(cfg.maxMap)
+
+  /** A6: `runs` less those whose (base, plateRel) is in the ledger's
+    * [[LedgerStore.doneKeys]], collected in one job and filtered on the
+    * driver. Runs no job when `runs` is empty.
+    */
+  def dedupLedger(runs: Seq[RunRecord], ledger: LedgerStore): Seq[RunRecord] =
+    if (runs.isEmpty) runs
+    else {
+      val done = ledger.doneKeys.collect().map(k => (k.getString(0), k.getString(1))).toSet
+      runs.filterNot(r => done((r.base, r.plateRel)))
+    }
 
   /** Recursive byte size tolerant of concurrent deletion
     * (dir_size_bytes, dags/msconvert_dag.py:78-88).

@@ -58,17 +58,17 @@ final class LedgerStore(spark: SparkSession, stateDir: String, maxAttempts: Int 
   def skipKeys: DataFrame =
     attempts.where(col("attempts") >= maxAttempts).select("base", "plateRel")
 
-  /** Keys that never enter a batch again: converted or skipped. Meant only as
-    * the right side of a `left_anti` join (A6), so it may hold a key more
-    * than once: a key both converted and skipped, or one an at-least-once
-    * replay converted twice. Duplicates do not change an anti-join, and not
-    * removing them saves an aggregate exchange per cycle.
+  /** Keys that never enter a batch again: converted or skipped. Meant only to
+    * be collected into the key set of [[Discovery.dedupLedger]] (A6), so it
+    * may hold a key more than once: a key both converted and skipped, or one
+    * an at-least-once replay converted twice. The set absorbs duplicates, and
+    * not removing them keeps the collect one stage without an exchange.
     */
   def doneKeys: DataFrame =
     converted.select("base", "plateRel").union(skipKeys)
 
   /** Record successful conversions (one appended file, idempotent downstream
-    * via the anti-join), then [[compact]] the table.
+    * via the ledger filter), then [[compact]] the table.
     */
   def appendConverted(statuses: DataFrame): Unit = {
     val rows = statuses.where(col("state") === "success")
@@ -92,16 +92,19 @@ final class LedgerStore(spark: SparkSession, stateDir: String, maxAttempts: Int 
     * _on_convert_failure semantics (read counter, +1; at maxAttempts the row
     * becomes part of skipKeys; reference also deletes the counter file on
     * skip, which a row-based ledger doesn't need).
+    *
+    * The counters plus one row per failure, summed per key in one partition:
+    * the table is metadata-sized, and one partition lets the group-by run in
+    * the write's own stage, with no exchange.
     */
   def recordFailures(statuses: DataFrame): Unit = {
     val failed = statuses.where(col("state") === "failed")
     if (failed.isEmpty) return
     val updated = attempts
-      .join(failed.groupBy("base", "plateRel").agg(count(lit(1)).cast("int").as("delta")),
-        Seq("base", "plateRel"), "full_outer")
-      .select(col("base"), col("plateRel"),
-        (coalesce(col("attempts"), lit(0)) + coalesce(col("delta"), lit(0)))
-          .as("attempts"))
+      .union(failed.select(col("base"), col("plateRel"), lit(1).as("attempts")))
+      .coalesce(1)
+      .groupBy("base", "plateRel")
+      .agg(sum("attempts").cast("int").as("attempts"))
     swapSnapshot(updated, attemptsPath)
   }
 

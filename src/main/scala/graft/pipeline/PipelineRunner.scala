@@ -13,10 +13,11 @@ import org.apache.spark.sql.types.{StructType, TimestampType}
   *   external-process convert (≤poolSlots) → archive (ALL_DONE) →
   *   ledger updates → run-history append → verify gate
   *
-  * Listing and the capped ledger anti-join are Spark queries. The capped
-  * batch (≤ MAX_MAP rows) is then held as driver rows, and each per-run side
-  * effect (size walk, convert, archive) is one job over them whose results
-  * are collected, so no side effect is ever replayed from lineage.
+  * The run listing is one Spark job whose rows are collected; the ledger
+  * filter and the MAX_MAP cap then run over those driver rows, against the
+  * done keys collected in a second job. Each per-run side effect (size walk,
+  * convert, archive) is one job over the capped batch whose results are
+  * collected, so no side effect is ever replayed from lineage.
   * [[runBatch]], the tail from naming on, is shared with
   * graft.streaming.StreamingPipeline's micro-batch.
   *
@@ -40,16 +41,13 @@ object PipelineRunner {
       now: Instant = Instant.now()): CycleResult = {
     val ledger = new LedgerStore(spark, cfg.stateDir, cfg.maxAttempts)
 
-    val discovered = Discovery.discover(spark, cfg).cache()
-    val (nDiscovered, pending) = try {
-      val n = discovered.count()
-      (n, Discovery.dedup(discovered, ledger, cfg).collect().toSeq)
-    } finally discovered.unpersist()
+    val listed = Discovery.discover(spark, cfg).collect().toSeq
+    val pending = Discovery.dedup(listed, ledger, cfg)
     if (pending.size == cfg.maxMap)
       log.info(s"cycle capped at MAX_MAP=${cfg.maxMap}; remainder next cycle")
 
     val ready = quiesce(spark, ledger, pending, cfg, now)
-    CycleResult(nDiscovered, pending.size, ready.size, runBatch(spark, ledger, ready, cfg, now))
+    CycleResult(listed.size, pending.size, ready.size, runBatch(spark, ledger, ready, cfg, now))
   }
 
   /** Quiescence gate (A9): observe the pending runs' sizes on executors and
@@ -84,6 +82,7 @@ object PipelineRunner {
   /** The batch body (A12-A16) over ready runs held as driver rows: naming →
     * convert → archive (ALL_DONE) → ledger updates → run-history append →
     * verify gate, which throws on a threshold breach after the bookkeeping.
+    * With no ready run it runs nothing.
     */
   private[graft] def runBatch(
       spark: SparkSession,
@@ -91,6 +90,7 @@ object PipelineRunner {
       ready: Seq[RunRecord],
       cfg: GraftConfig,
       now: Instant): VerifyGate.BatchStats = {
+    if (ready.isEmpty) return VerifyGate.BatchStats(0, 0, 0)
     import spark.implicits._
     val envs = ready.map(r => Naming.runEnv(r, cfg, now))
     val converted = ExternalProcess.convert(spark, envs, cfg)

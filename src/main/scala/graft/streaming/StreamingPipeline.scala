@@ -9,8 +9,8 @@ import graft.pipeline._
   * size observations → stateful debounce (A9) → foreachBatch micro-batch
   * running the batch engine's convert/archive/ledger/verify chain (A13-A16).
   *
-  * foreachBatch is the exactly-once seam: the ledger anti-join inside the
-  * batch body re-filters rows already converted, so a replayed micro-batch
+  * foreachBatch is the exactly-once seam: the ledger filter inside the
+  * batch body drops rows already converted, so a replayed micro-batch
   * (failure recovery) converts nothing twice — idempotency by ledger, the
   * reference's own answer (timestamped stems + already_converted,
   * dags/msconvert_dag.py:112-127), not by sink transactionality.
@@ -46,8 +46,9 @@ object StreamingPipeline {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** One micro-batch: ready paths → RunRecords → ledger dedup, collected
-    * as the batch's driver rows → the batch engine's shared body
+  /** One micro-batch: ready paths → RunRecords, collected as the batch's
+    * driver rows → the ledger filter the poll cycle uses (without its
+    * MAX_MAP cap) → the batch engine's shared body
     * (PipelineRunner.runBatch: naming → convert → archive → ledger/history
     * update → verify).
     */
@@ -66,13 +67,10 @@ object StreamingPipeline {
         case i => (rel.substring(0, i), rel.substring(i + 1))
       }
       RunRecord(r.path, plateRel, name.stripSuffix(".d"))
-    }
+    }.collect().toSeq
 
     // idempotency on replay: drop anything the ledger already has
-    val pending = records
-      .join(ledger.doneKeys, Seq("base", "plateRel"), "left_anti")
-      .as[RunRecord]
-      .collect().toSeq
+    val pending = Discovery.dedupLedger(records, ledger)
     PipelineRunner.runBatch(spark, ledger, pending, cfg, Instant.now())
   }
 

@@ -7,8 +7,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Scale behavior of the attempts ledger (SURVEY.md §7.4): recordFailures is
-  * a single full-outer join of (ledger ⋈ this cycle's failures) — O(failed +
-  * ledger) — and must be a no-op on cycles with no failures: the snapshot on
+  * one per-key sum over the ledger's counters and this cycle's failures —
+  * O(failed + ledger) — and must be a no-op on cycles with no failures: the snapshot on
   * disk is not rewritten, so a long-running poller's steady state does zero
   * ledger IO. (At 100 TB the snapshot swap becomes a MERGE in a
   * transactional table format; the API seam is unchanged.)
@@ -107,11 +107,13 @@ class LedgerSpec extends SparkSpec {
     val done = ledger.doneKeys.as[(String, String)].collect().toSeq
     assert(done.count(_ == ("a", "p")) == 2 && done.count(_ == ("b", "p")) == 2, done)
 
-    val discovered = Seq("a", "b", "c", "d", "e", "f")
-      .map(b => RunRecord(s"/in/p/$b.d", "p", b)).toDS()
-    val pending = Discovery.dedup(discovered, ledger, cfg).collect().toSeq
+    val discovered = Seq("f", "e", "d", "c", "b", "a")
+      .map(b => RunRecord(s"/in/p/$b.d", "p", b))
+    val pending = Discovery.dedup(discovered, ledger, cfg)
     assert(pending.map(_.base) == Seq("c", "d", "e"), pending)
-    assert(Discovery.dedup(discovered, ledger, cfg.copy(maxMap = 10)).collect().toSeq
+    assert(Discovery.dedup(discovered, ledger, cfg.copy(maxMap = 10))
       .map(_.base) == Seq("c", "d", "e", "f"))
+    assert(Discovery.dedupLedger(discovered, ledger).map(_.base) == Seq("f", "e", "d", "c"),
+      "the uncapped filter keeps its input's order")
   }
 }

@@ -50,9 +50,9 @@ class WideBatchSpec extends SparkSpec {
     // per-task bound. 10^4 `.d` entries in one plate is ~1 MB of names in
     // one task — this row drives that width literally and pins (a) the
     // fan-out across >1 task, (b) the exact count through the distributed
-    // listing, (c) the deterministic MAX_MAP cap without materializing
-    // the 10k tail on the driver (dedup's sort+limit plans as a
-    // TakeOrdered, never a full collect).
+    // listing, (c) the deterministic MAX_MAP cap over the collected
+    // listing (a cycle holds its listed runs as driver rows: 10^4 names
+    // are ~1 MB).
     val root = Files.createTempDirectory("graft-wide10k")
     val watch = root.resolve("watch")
     for (r <- 1 to 10000)
@@ -76,9 +76,9 @@ class WideBatchSpec extends SparkSpec {
     val perPart = ds.mapPartitions(it => Iterator(it.size)).collect()
     assert(perPart.count(_ > 0) > 1, s"fan-out across tasks: ${perPart.toSeq}")
     assert(ds.count() == 10300L, "every run found through the parallel listing")
-    // cap without tail materialization: sorted-first-64, exact
+    // the cap: sorted-first-64, exact
     val ledger = new LedgerStore(spark, cfg.stateDir)
-    val capped = Discovery.dedup(ds, ledger, cfg).collect()
+    val capped = Discovery.dedup(ds.collect().toSeq, ledger, cfg)
     assert(capped.length == 64)
     assert(capped.map(_.path).toSeq == capped.map(_.path).toSeq.sorted,
       "deterministic sorted batch")
