@@ -12,6 +12,18 @@ import org.apache.spark.sql.DataFrame
   * backing a returned/published DataFrame must stay.
   */
 object Checkpoints {
+
+  /** Run `body` with `release`, which returns its frame and [[drop]]s the
+    * checkpoints in that frame's plan when `body` returns or throws: the
+    * lifetime of a per-micro-batch frame that a stream writes out and
+    * never reads again.
+    */
+  def scoped[T](body: (DataFrame => DataFrame) => T): T = {
+    val released = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => released += df; df }
+    finally released.foreach(drop)
+  }
+
   def drop(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

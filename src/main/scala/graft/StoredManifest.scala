@@ -4,16 +4,33 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The atomic pointer-file commit shared by every generation-directory
-  * artifact (the IVF index's [[graft.queries.AnnManifest]], the streaming
-  * dashboard's published panels, the ingest streams' [[SegmentLog]]):
-  * immutable generation directories plus one `MANIFEST` file naming the
-  * live generation and its segment list, replaced atomically (write
-  * `MANIFEST.tmp`, `ATOMIC_MOVE` over `MANIFEST`). A reader resolving through the manifest sees one complete
-  * generation at every instant; writers publish only after their
-  * generation is fully on disk. Single WRITER assumed (two concurrent
-  * publishers would race the pointer); on a cluster the same protocol is
-  * an atomically-replaced object — rename on HDFS, put-if-match on S3,
-  * the Iceberg/Delta-style table commit.
+  * artifact (the IVF index's [[graft.queries.AnnManifest]], the
+  * stream-maintained summaries and reports, the ingest streams'
+  * [[SegmentLog]]): immutable generation directories plus one `MANIFEST`
+  * file naming the live generation and its segment list, replaced
+  * atomically (write `MANIFEST.tmp`, `ATOMIC_MOVE` over `MANIFEST`). A
+  * reader resolving through the manifest sees one complete generation at
+  * every instant; writers publish only after their generation is fully on
+  * disk. Single WRITER assumed (two concurrent publishers would race the
+  * pointer); on a cluster the same protocol is an atomically-replaced
+  * object — rename on HDFS, put-if-match on S3, the Iceberg/Delta-style
+  * table commit.
+  *
+  * A stream that republishes a whole artifact per micro-batch commits
+  * through one of two entry points, so no stream keeps its own copy of the
+  * replay rule:
+  *   - [[publish]] for a generation recomputed from scratch, or merged by
+  *     an idempotent rule: the dashboard
+  *     ([[graft.streaming.DashboardStream]]), the drift monitors
+  *     ([[graft.streaming.DriftMonitorStream]],
+  *     [[graft.streaming.RankDriftStream]]) and the HLL sketches
+  *     ([[graft.streaming.SketchMaintainStream]]);
+  *   - [[fold]] for a generation that adds the batch onto the live one:
+  *     the summaries of [[graft.streaming.MvMaintainStream]] (both
+  *     forms), [[graft.streaming.StatsMaintainStream]],
+  *     [[graft.streaming.BootstrapStream]],
+  *     [[graft.streaming.FreqMaintainStream]] and
+  *     [[graft.streaming.SrmMaintainStream]].
   */
 object StoredManifest {
 
@@ -87,6 +104,64 @@ object StoredManifest {
     * live generation in place would un-publish it mid-overwrite.
     */
   def isLive(dir: String, gen: String): Boolean = exists(dir) && live(dir) == gen
+
+  /** The live generation's directory and segment list, if one is published. */
+  private def resolve(dir: String): Option[(String, Seq[String])] =
+    if (exists(dir)) Some(read(dir) match { case (gen, segs) => (s"$dir/$gen", segs) })
+    else None
+
+  /** Segment `segment` of the live generation, if one is published. */
+  def liveSegment(spark: SparkSession, dir: String,
+      segment: String): Option[DataFrame] =
+    resolve(dir).map { case (genDir, _) => spark.read.parquet(s"$genDir/$segment") }
+
+  /** Commit stream batch `batchId` as generation `gen_<batchId>`. A no-op
+    * when that generation is already live: the batch is a re-delivery
+    * whose commit landed. Otherwise sweep unreachable generations (an
+    * uncommitted earlier try of this batch among them), write each
+    * segment as one file, and commit the names, in the given order, once.
+    * A crash before the commit leaves the previous generation live, and
+    * the re-delivered batch is computed again against it.
+    */
+  def publish(dir: String, batchId: Long)(
+      segments: => Seq[(String, DataFrame)]): Unit = {
+    val gen = s"gen_$batchId"
+    if (isLive(dir, gen)) return
+    sweepUnreachable(dir)
+    val segs = segments
+    segs.foreach { case (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$gen/$name")
+    }
+    write(dir, gen, segs.map(_._1))
+  }
+
+  /** [[publish]] for a generation that adds the batch onto the live one:
+    * `build` gets the live generation (its directory and segments), read
+    * once, and returns the next generation's segments.
+    *
+    * Additive merges (counts, sums) are not replay-safe by algebra, so the
+    * batch id doubles as a high-water mark. An id equal to the live
+    * generation's is a same-checkpoint re-delivery and a no-op. An id
+    * below it can only come from a fresh-checkpoint restart over a dir
+    * that outlived its checkpoint, and that fails: re-folding would double
+    * every count, and skipping would silently drop events that arrived
+    * after the last fold (a renumbered batch 0 re-lists every file). The
+    * operator resets the dir together with the checkpoint. Residual edge:
+    * a restart whose first batch lands on the live id 0 cannot be told
+    * apart from a replay of batch 0 and is skipped.
+    */
+  def fold(dir: String, batchId: Long)(
+      build: Option[(String, Seq[String])] => Seq[(String, DataFrame)]): Unit = {
+    val live = resolve(dir)
+    live.foreach { case (genDir, _) =>
+      val liveId = genDir.stripPrefix(s"$dir/gen_").toLong
+      require(batchId >= liveId,
+        s"batch id $batchId regressed below live generation gen_$liveId: " +
+          s"fresh-checkpoint restart over an existing dir — reset $dir " +
+          "together with the checkpoint")
+    }
+    publish(dir, batchId)(build(live))
+  }
 
   /** Read one segment of the live generation — always a complete
     * generation, never a mid-write mixture; a segment the generation
@@ -164,8 +239,9 @@ object StoredManifest {
 /** The one replay and compaction rule of a stream-maintained segment log,
   * committed through [[StoredManifest]]. The IVF
   * ([[graft.streaming.AnnIngestStream]]), zone-map
-  * ([[graft.streaming.ZoneIndexStream]]) and HNSW
-  * ([[graft.streaming.HnswIngestStream]]) ingest streams all call it; how
+  * ([[graft.streaming.ZoneIndexStream]]), HNSW
+  * ([[graft.streaming.HnswIngestStream]]) and exact near-dup
+  * ([[graft.streaming.DedupIngestStream]]) ingest streams all call it; how
   * a segment is written or merged stays each stream's own.
   *
   * Layout: `dir/MANIFEST` names the live generation `gen_<n>` and its

@@ -657,9 +657,9 @@ object Dedup {
     */
   /** The one standing-index builder (sets + df + rarest-first prefixes),
     * parameterized by output sub-paths so the flat artifact (x227) and
-    * the segmented streaming layout (DedupIngestStream) stay structurally
-    * identical. The prefix table is written LAST — it is the ready/applied
-    * marker for both layouts.
+    * the streaming log's first segment (DedupIngestStream) stay
+    * structurally identical. The prefix table is written LAST — it is the
+    * flat artifact's ready marker.
     */
   private[graft] def buildAllPairsIndex(standing: DataFrame, dfDir: String,
       setsDir: String, prefixDir: String): Unit = {

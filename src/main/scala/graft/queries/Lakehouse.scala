@@ -1031,10 +1031,10 @@ object Lakehouse {
   def mergeMoR(updates: DataFrame, layout: String, mergeDir: String,
       dvDir: String, tag: String): Unit = {
     val s = updates.sparkSession
-    // fully-applied check on the LAST write (the DedupIngestStream
-    // discipline): a replay after the tag committed must no-op — probing
-    // the POST-tag live view would resolve the updates to their own rows
-    // and overwrite this tag's masks with dead-path positions
+    // fully-applied check on the LAST write: a replay after the tag
+    // committed must no-op — probing the POST-tag live view would resolve
+    // the updates to their own rows and overwrite this tag's masks with
+    // dead-path positions
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(
         s"$dvDir/seg=merge_$tag/_SUCCESS"))) return
     // a crash DURING a segment commit can leave part files visible
@@ -1060,10 +1060,9 @@ object Lakehouse {
   }
 
   /** Remove a segment directory whose commit never finished (part files
-    * visible, `_SUCCESS` absent) — shared replay hygiene for every
-    * tag/batch-addressed writer in this module and the streaming loops.
+    * visible, `_SUCCESS` absent) — [[mergeMoR]]'s replay hygiene.
     */
-  private[graft] def dropPartialSegment(path: String): Unit = {
+  private def dropPartialSegment(path: String): Unit = {
     val dir = new java.io.File(path)
     if (dir.isDirectory && !new java.io.File(dir, "_SUCCESS").exists())
       graft.StoredArtifacts.deleteTree(path)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.StoredManifest
+import graft.{Checkpoints, StoredManifest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -22,9 +22,9 @@ import org.apache.spark.sql.types.StructType
   * order equals the one-shot batch computation over the same rows —
   * BootstrapStreamSpec pins stream ≡ batch exactly, plus replay no-op.
   *
-  * Publication: each generation holds `acc` (32 accumulator rows),
-  * `tot` (row count + exact sum) and `verdict` (n, exact mean, the
-  * 2nd/31st replicate-mean band) — one atomic manifest flip.
+  * Each generation holds `acc` (32 accumulator rows), `tot` (row count +
+  * exact sum) and `verdict` (n, exact mean, the 2nd/31st replicate-mean
+  * band), folded onto the live one by [[graft.StoredManifest.fold]].
   */
 object BootstrapStream {
 
@@ -62,48 +62,34 @@ object BootstrapStream {
   }
 
   /** One incremental update: delta accumulators from THE BATCH ROWS ONLY,
-    * merged with the live generation's state by addition, republished
-    * under a new generation. Re-delivery of a published batchId is a
-    * no-op; a crash before the manifest flip leaves the old generation
-    * live and the re-delivered batch re-merges against it.
+    * merged with the live generation's state by addition. The three
+    * checkpoints are superseded by the written parquet and dropped after
+    * the commit: a weeks-long 5-minute-trigger stream would otherwise pin
+    * one batch-sized and two state-sized block sets per micro-batch.
     */
   def update(spark: SparkSession, batch: DataFrame, stateDir: String,
-      gen: Long): Unit = {
-    val dir = monitorDir(stateDir)
-    val genName = s"gen_$gen"
-    if (StoredManifest.isLive(dir, genName)) return
-    StoredManifest.sweepUnreachable(dir)
-    val rows = asKernelInput(batch).localCheckpoint(true)
-    val deltaAcc = accumulate(rows)
-    val deltaTot = totals(rows)
-    val (acc, tot) =
-      if (StoredManifest.exists(dir)) {
-        val live = StoredManifest.live(dir)
-        val prevAcc = spark.read.parquet(s"$dir/$live/acc")
-        val prevTot = spark.read.parquet(s"$dir/$live/tot")
-        (prevAcc.unionAll(deltaAcc).groupBy("b")
-          .agg(sum(col("swx")).cast(
-            org.apache.spark.sql.types.DecimalType(38, 0)).as("swx"),
-            sum(col("sw")).as("sw")),
-          prevTot.unionAll(deltaTot)
-            .agg(sum(col("n_rows")).as("n_rows"),
-              sum(col("sum_cents")).as("sum_cents")))
-      } else (deltaAcc, deltaTot)
-    val accCk = acc.localCheckpoint(true)
-    val totCk = tot.localCheckpoint(true)
-    accCk.coalesce(1).write.mode("overwrite").parquet(s"$dir/$genName/acc")
-    totCk.coalesce(1).write.mode("overwrite").parquet(s"$dir/$genName/tot")
-    verdict(accCk, totCk).coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/$genName/verdict")
-    StoredManifest.write(dir, genName, Seq("acc", "tot", "verdict"))
-    // all three checkpoints are superseded by the written parquet — in a
-    // weeks-long 5-minute-trigger stream, leaving one batch-sized + two
-    // state-sized block sets pinned per micro-batch is real memory
-    // pressure (the Checkpoints.drop retention discipline)
-    graft.Checkpoints.drop(rows)
-    graft.Checkpoints.drop(accCk)
-    graft.Checkpoints.drop(totCk)
-  }
+      gen: Long): Unit =
+    Checkpoints.scoped { release =>
+      StoredManifest.fold(monitorDir(stateDir), gen) { live =>
+        val rows = release(asKernelInput(batch).localCheckpoint(true))
+        val deltaAcc = accumulate(rows)
+        val deltaTot = totals(rows)
+        val (acc, tot) = live match {
+          case Some((liveDir, _)) =>
+            (spark.read.parquet(s"$liveDir/acc").unionAll(deltaAcc).groupBy("b")
+              .agg(sum(col("swx")).cast(
+                org.apache.spark.sql.types.DecimalType(38, 0)).as("swx"),
+                sum(col("sw")).as("sw")),
+              spark.read.parquet(s"$liveDir/tot").unionAll(deltaTot)
+                .agg(sum(col("n_rows")).as("n_rows"),
+                  sum(col("sum_cents")).as("sum_cents")))
+          case None => (deltaAcc, deltaTot)
+        }
+        val accCk = release(acc.localCheckpoint(true))
+        val totCk = release(tot.localCheckpoint(true))
+        Seq("acc" -> accCk, "tot" -> totCk, "verdict" -> verdict(accCk, totCk))
+      }
+    }
 
   def published(stateDir: String): Boolean =
     StoredManifest.exists(monitorDir(stateDir))

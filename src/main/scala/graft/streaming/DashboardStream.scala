@@ -15,12 +15,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * batch's appended file, or the one file a compaction
   * ([[graft.pipeline.LedgerStore]]) rewrites the table into.
   *
-  * Publication is crash-safe via [[graft.StoredManifest]]: each refresh
-  * writes ALL panels under a fresh `gen_<batchId>` directory, then flips
-  * the manifest pointer once — a dashboard reader (the Grafana stand-in)
-  * never sees a half-written refresh, and the PREVIOUS generation stays on
-  * disk until the NEXT refresh's sweep so an in-flight read across the
-  * flip still completes.
+  * Each refresh recomputes every panel, so it commits through
+  * [[graft.StoredManifest.publish]]: a dashboard reader (the Grafana
+  * stand-in) never sees a half-written refresh.
   *
   * Shape notes for scale: the stream source is only the REFRESH SIGNAL —
   * micro-batch rows are not aggregated incrementally; the foreachBatch
@@ -60,32 +57,22 @@ object DashboardStream {
     }
   }
 
-  /** One refresh: sweep unreachable generations, write all panels under a
-    * new one (one file each, as every panel plans to one partition), flip
-    * the manifest. Also callable synchronously (a cycle-end hook) — the
-    * streaming form exists so refresh latency is bounded by the trigger,
-    * not by the caller remembering to refresh.
+  /** One refresh: publish every panel as generation `gen_<gen>`. Also
+    * callable synchronously (a cycle-end hook) — the streaming form exists
+    * so refresh latency is bounded by the trigger, not by the caller
+    * remembering to refresh.
     *
     * A compaction lands one new file in `history/`, which the stream takes
     * as a refresh signal; that is harmless, since the batch rows are never
     * read. A refresh that overlaps a compaction's rename can still list a
     * file the rename then removes, so the panels are recomputed once on a
-    * missing-file error instead of stopping the stream.
+    * missing-file error instead of stopping the stream; the retry's sweep
+    * removes the uncommitted generation first.
     */
   def refresh(spark: SparkSession, cfg: GraftConfig, gen: Long): Unit = {
-    val dir = dashDir(cfg)
-    val genName = s"gen_$gen"
-    if (StoredManifest.isLive(dir, genName)) return
-    StoredManifest.sweepUnreachable(dir)
-    def publish(): Seq[String] = {
-      val panels = RunAnalytics.dashboard(spark, cfg)
-      panels.foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$dir/$genName/$name")
-      }
-      panels.keys.toSeq.sorted
-    }
-    val names = try publish() catch { case e: Exception if missingFile(e) => publish() }
-    StoredManifest.write(dir, genName, names)
+    def once(): Unit = StoredManifest.publish(dashDir(cfg), gen)(
+      RunAnalytics.dashboard(spark, cfg).toSeq.sortBy(_._1))
+    try once() catch { case e: Exception if missingFile(e) => once() }
   }
 
   /** Whether `e` (or a cause) says a file or path read was not there. */

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.{Checkpoints, SegmentLog, StoredManifest}
 import graft.queries.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,16 +27,15 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * and cannot collide with any standing posting regardless). The trade:
   * prefix LENGTHS stay exact (they depend only on the doc), only the
   * rarest-first OPTIMALITY decays as the true dfs drift — a re-bootstrap
-  * (new generation) restores it, exactly like an ANN re-train.
+  * into a fresh index restores it, exactly like an ANN re-train.
   *
-  * Exactly-once without a ledger (the ConstraintGateStream discipline):
-  * all three writes of a cycle land in `seg=batch_<id>` subdirectories
-  * with per-path overwrite. Pairs are written BEFORE the batch's own
-  * segments, so every crash point replays deterministically — pairs
-  * recompute against the same standing segments (the batch's own are not
-  * yet visible), and a fully-applied batch is detected by its sets
-  * segment and skipped whole, closing the window where a re-delivery
-  * after LATER appends would otherwise see a larger standing side.
+  * The index is a [[graft.SegmentLog]]: the standing corpus is its first
+  * segment, each batch adds one segment of `sets` and `prefix`, and a
+  * compaction unions the live segments into one base, so a probe reads a
+  * bounded number of segments. `df/`, the frozen order, sits outside the
+  * log and is written once. A batch writes its pairs before its segment,
+  * so a crash between the two re-probes the same standing side; replay
+  * and every other crash point are the log's.
   *
   * Scale shape: per cycle the batch pays its own shingling plus one
   * posting equi-join against standing prefixes — standing TEXT is never
@@ -48,54 +48,61 @@ object DedupIngestStream {
     StructField("doc_id", LongType),
     StructField("text", StringType)))
 
-  /** Index the standing corpus and FREEZE its (df, shingle) prefix order
-    * as generation 0: `df/` (the frozen order), `sets/seg=base`,
-    * `prefix/seg=base`.
+  /** Live segments before a compaction: the other ingest streams' default. */
+  private val MaxSegments = 4
+
+  /** The stream id the standing corpus lands under: below every batch's. */
+  private val BootstrapId = -1L
+
+  /** Index the standing corpus and FREEZE its (df, shingle) prefix order:
+    * `df/` (the frozen order) and the log's first segment.
     */
   def bootstrap(standing: DataFrame, indexDir: String): Unit =
-    Dedup.buildAllPairsIndex(standing, s"$indexDir/df",
-      s"$indexDir/sets/seg=base", s"$indexDir/prefix/seg=base")
+    SegmentLog.ingest(indexDir, BootstrapId, MaxSegments) { (genDir, seg) =>
+      Dedup.buildAllPairsIndex(standing, s"$indexDir/df",
+        s"$genDir/$seg/sets", s"$genDir/$seg/prefix")
+    }(merge(standing.sparkSession))
 
-  /** True iff `batchId` is fully applied: its sets segment (the LAST
-    * write of a cycle) is committed.
-    */
-  def applied(indexDir: String, batchId: Long): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$indexDir/sets/seg=batch_$batchId/_SUCCESS"))
+  /** The standing side, (sets, prefix), under one manifest resolve. */
+  def standing(s: SparkSession, indexDir: String): (DataFrame, DataFrame) = {
+    val (gen, segments) = StoredManifest.read(indexDir)
+    def table(t: String) = s.read.parquet(segments.map(seg => s"$indexDir/$gen/$seg/$t"): _*)
+    // array_compact: parquet read-back loses containsNull=false (the x66
+    // note) — a semantic no-op that restores JaccardLongs' contract
+    (table("sets").select(col("doc_id"), array_compact(col("sh")).as("sh"), col("n")),
+      table("prefix").select(col("s"), col("doc_id"), col("n")))
+  }
 
-  /** One ingest cycle: probe, emit pairs, append. Idempotent under
-    * at-least-once re-delivery (see the class doc's crash-point walk).
-    */
+  /** One ingest cycle: probe, emit pairs, append the batch as a segment. */
   def ingestBatch(batch: DataFrame, indexDir: String, pairsDir: String,
       batchId: Long): Unit = {
-    if (applied(indexDir, batchId)) return
-    // replay hygiene: a crash mid-commit can leave part files without
-    // _SUCCESS; partition discovery would hand a partially-visible sets
-    // segment to the probe and emit self-pairs — drop any partial
-    // segment of THIS batch before recomputing (a fully-committed prefix
-    // segment is harmless: self-candidates die in the verify join)
-    Seq(s"$indexDir/sets/seg=batch_$batchId",
-      s"$indexDir/prefix/seg=batch_$batchId",
-      s"$pairsDir/seg=batch_$batchId")
-      .foreach(graft.queries.Lakehouse.dropPartialSegment)
     val s = batch.sparkSession
-    val bsets = Dedup.shingleSets(batch).localCheckpoint(true)
-    val frozenDf = s.read.parquet(s"$indexDir/df")
-    val bpost = bsets.select(col("doc_id"), col("n"), explode(col("sh")).as("s"))
-    val bprefix = Dedup.prefixPostings(bpost, frozenDf).localCheckpoint(true)
-    val standSets = s.read.parquet(s"$indexDir/sets")
-      .select(col("doc_id"), array_compact(col("sh")).as("sh"), col("n"))
-    val standPrefix = s.read.parquet(s"$indexDir/prefix")
-      .select(col("s"), col("doc_id"), col("n"))
-    Dedup.probeJoin(bsets, bprefix, standSets, standPrefix)
-      .write.mode("overwrite").parquet(s"$pairsDir/seg=batch_$batchId")
-    // the batch becomes standing AFTER its pairs are out: a replay that
-    // died between these writes re-probes the identical standing side
-    bprefix.write.mode("overwrite")
-      .parquet(s"$indexDir/prefix/seg=batch_$batchId")
-    bsets.write.mode("overwrite")
-      .parquet(s"$indexDir/sets/seg=batch_$batchId")
+    SegmentLog.ingest(indexDir, batchId, MaxSegments) { (genDir, seg) =>
+      Checkpoints.scoped { release =>
+        val bsets = release(Dedup.shingleSets(batch).localCheckpoint(true))
+        val bpost = bsets.select(col("doc_id"), col("n"), explode(col("sh")).as("s"))
+        val bprefix = release(Dedup.prefixPostings(bpost, s.read.parquet(s"$indexDir/df"))
+          .localCheckpoint(true))
+        val (standSets, standPrefix) = standing(s, indexDir)
+        Dedup.probeJoin(bsets, bprefix, standSets, standPrefix)
+          .write.mode("overwrite").parquet(s"$pairsDir/seg=batch_$batchId")
+        bprefix.write.parquet(s"$genDir/$seg/prefix")
+        bsets.write.parquet(s"$genDir/$seg/sets")
+      }
+    }(merge(s))
   }
+
+  /** Compaction: each table's live segments unioned into the base, at
+    * most one file per core, so the base's file count stays bounded
+    * however many compactions it absorbs.
+    */
+  private def merge(s: SparkSession): SegmentLog.Merge =
+    (genDir, segments, nextDir, base) =>
+      Seq("sets", "prefix").foreach { t =>
+        s.read.parquet(segments.map(seg => s"$genDir/$seg/$t"): _*)
+          .coalesce(s.sparkContext.defaultParallelism)
+          .write.parquet(s"$nextDir/$base/$t")
+      }
 
   /** Watch `sourceDir` for document parquet arrivals; each micro-batch
     * probes-then-joins the standing index at `indexDir` and emits its

@@ -15,11 +15,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (`Lakehouse.readWithDeletes`) sees each batch's deletes the moment its
   * segment commits.
   *
-  * Exactly-once, ledger-free (the DedupIngestStream discipline): a batch's
-  * resolution is a pure function of (requests, immutable layout), so its
-  * segment `seg=batch_<id>` is deterministic and per-path overwrite makes
-  * re-delivery idempotent. Requests for ids that are absent (never
-  * existed, or already folded away by compaction) resolve to zero rows —
+  * Exactly-once, ledger-free: a batch's resolution is a pure function of
+  * (requests, immutable layout), so its segment `seg=batch_<id>` is
+  * deterministic and per-path overwrite makes re-delivery idempotent.
+  * Requests for ids that are absent (never existed, or already folded
+  * away by compaction) resolve to zero rows —
   * delete requests are naturally idempotent at the semantic level too.
   *
   * Scale shape: resolution is one broadcast-able semi-join of the

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.StoredManifest
+import graft.{Checkpoints, StoredManifest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -26,11 +26,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * yesterday-partitioned parquet, and the scan reads only the partitions
   * the drift window covers.
   *
-  * Publication protocol: one `gen_<batchId>` directory with two segments
-  * (`drift` = full grid, `alarms` = drifted rows only), atomic manifest
-  * flip, previous generation swept at the NEXT refresh — identical
-  * crash-window story to the dashboard (at-least-once re-delivery of a
-  * batchId whose generation is already live is a no-op).
+  * Each refresh publishes two segments ([[graft.StoredManifest.publish]]):
+  * `drift`, the full grid, and `alarms`, its drifted rows only.
   */
 object DriftMonitorStream {
 
@@ -62,26 +59,22 @@ object DriftMonitorStream {
     }
   }
 
-  /** One refresh: recompute the drift grid over everything in `eventsDir`,
-    * publish (drift, alarms) under a new generation, flip the manifest.
+  /** One refresh: recompute the drift grid over everything in `eventsDir`
+    * and publish it as generation `gen_<gen>`.
     */
   def refresh(spark: SparkSession, eventsDir: String, stateDir: String,
       driftMilli: Long, gen: Long,
-      pathGlobFilter: String = "*.parquet"): Unit = {
-    val dir = monitorDir(stateDir)
-    val genName = s"gen_$gen"
-    if (StoredManifest.isLive(dir, genName))
-      return // at-least-once re-delivery of an already-published refresh
-    StoredManifest.sweepUnreachable(dir)
-    val events = normalizeTs(
-      spark.read.option("pathGlobFilter", pathGlobFilter).parquet(eventsDir))
-    val drift = graft.queries.Events.typeDriftByDay(events, driftMilli)
-      .localCheckpoint(true) // one computation feeds both segments
-    drift.coalesce(1).write.mode("overwrite").parquet(s"$dir/$genName/drift")
-    drift.where(col("drifted"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/$genName/alarms")
-    StoredManifest.write(dir, genName, Seq("alarms", "drift"))
-  }
+      pathGlobFilter: String = "*.parquet"): Unit =
+    Checkpoints.scoped { release =>
+      StoredManifest.publish(monitorDir(stateDir), gen) {
+        val events = normalizeTs(
+          spark.read.option("pathGlobFilter", pathGlobFilter).parquet(eventsDir))
+        // one scan feeds both segments: the grid checkpoints its cell
+        // counts, and the rest is day×type-sized
+        val drift = release(graft.queries.Events.typeDriftByDay(events, driftMilli))
+        Seq("alarms" -> drift.where(col("drifted")), "drift" -> drift)
+      }
+    }
 
   def published(stateDir: String): Boolean =
     StoredManifest.exists(monitorDir(stateDir))

@@ -16,24 +16,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * it (FreqMaintainSpec pins both against an exact recount).
   *
   * Unlike HLL's idempotent max-fold, MG count-addition is NOT replay-safe
-  * by algebra, so replay safety comes from the manifest protocol alone:
-  * the generation is named by the batch id, which is also the HIGH-WATER
-  * mark — any batch at or below the live generation's id returns without
-  * folding. That covers both the same-checkpoint re-delivery (batchId ==
-  * live) and the fresh-checkpoint restart (batchId restarts at 0 while
-  * the artifact dir lives on), where equality alone would silently
-  * double every count (the r10 ADVICE finding).
+  * by algebra, so the generation commits through
+  * [[graft.StoredManifest.fold]], whose high-water rule makes a
+  * re-delivered batch a no-op and a fresh-checkpoint restart fail.
   *
   * Per micro-batch: one exact token-count aggregate over the BATCH (the
   * only input-sized step, map-side combinable), compress to k rows, merge
-  * k×k, publish under a batch-id generation. Serving reads the k-row live
-  * generation — no corpus re-scan ever.
+  * k×k. Serving reads the k-row live generation — no corpus re-scan ever.
   */
 object FreqMaintainStream {
 
   val Capacity = 64
-
-  def summaryPath(dir: String, gen: String): String = s"$dir/$gen/mg"
 
   def start(spark: SparkSession, docsDir: String, dir: String, ckpt: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
@@ -50,37 +43,18 @@ object FreqMaintainStream {
 
   /** Fold one batch of documents into the live summary generation. */
   def maintain(spark: SparkSession, batch: DataFrame, dir: String,
-      batchId: Long): Unit = {
-    val gen = s"gen_$batchId"
-    if (StoredManifest.exists(dir)) {
-      // High-water replay guard: MG count-addition is not idempotent, and
-      // generations are published in batch-id order — so ANY batch at or
-      // below the live generation's id has already been folded and must
-      // not re-fold. Equality alone misses the case where the artifact
-      // dir outlives its streaming checkpoint (a fresh checkpoint
-      // restarts batchId at 0): earlier batches would re-fold into the
-      // existing summary and double every count silently.
-      val live = StoredManifest.live(dir)
-      val liveId = scala.util.Try(live.stripPrefix("gen_").toLong).toOption
-      if (liveId.exists(batchId <= _) || live == gen) return
+      batchId: Long): Unit =
+    StoredManifest.fold(dir, batchId) { live =>
+      val batchSummary = MisraGries.summarize(
+        batch.select(explode(split(col("text"), " ")).as("token")),
+        "token", Capacity)
+      Seq("mg" -> live.fold(batchSummary) { case (liveDir, _) =>
+        MisraGries.merge(spark.read.parquet(s"$liveDir/mg"), batchSummary, Capacity)
+      })
     }
-    StoredManifest.sweepUnreachable(dir)
-    val batchSummary = MisraGries.summarize(
-      batch.select(explode(split(col("text"), " ")).as("token")),
-      "token", Capacity)
-    val merged = current(spark, dir) match {
-      case Some(cur) => MisraGries.merge(cur, batchSummary, Capacity)
-      case None => batchSummary
-    }
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(summaryPath(dir, gen))
-    StoredManifest.write(dir, gen, Seq("mg"))
-  }
 
   def current(spark: SparkSession, dir: String): Option[DataFrame] =
-    if (StoredManifest.exists(dir))
-      Some(spark.read.parquet(summaryPath(dir, StoredManifest.live(dir))))
-    else None
+    StoredManifest.liveSegment(spark, dir, "mg")
 
   /** The live heavy-hitter table, most frequent first. */
   def heavyHitters(spark: SparkSession, dir: String): DataFrame =

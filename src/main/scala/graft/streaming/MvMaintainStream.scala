@@ -4,6 +4,7 @@ import graft.StoredManifest
 import graft.plans.SummaryRewrite
 import graft.queries.Lakehouse
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, StringType, StructType, TimestampType}
 
@@ -19,19 +20,9 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructType, Timestamp
   *   partials = summarize(batch)            — the x141 grain, same code
   *   next     = merge(current ∪ partials)   — count adds, sum adds, min/max fold
   *
-  * and the result publishes under the [[graft.StoredManifest]] protocol:
-  * write generation `gen_<batchId>` fully, flip the pointer once. Readers
-  * (and the rewrite rule) always see a complete generation; the previous
-  * one survives until the next refresh's sweep so in-flight reads across
-  * a flip complete.
-  *
-  * Exactly-once from at-least-once, with no side ledger: the generation
-  * name carries the batch id ([[graft.StoredManifest.isLive]]).
-  * A crash after the flip but before the checkpoint commit re-delivers the
-  * same batch; the maintainer sees the live generation already named
-  * `gen_<batchId>` and returns without touching bytes. A crash BEFORE the
-  * flip re-runs the merge against the same previous generation with the
-  * same batch rows — deterministic, so the rewrite is idempotent.
+  * and the result commits through [[graft.StoredManifest.fold]], so
+  * readers (and the rewrite rule) always see a complete generation and a
+  * re-delivered batch never folds twice.
   *
   * Serving: [[serve]] re-resolves the manifest and (re-)installs the
   * rewrite rule against the live generation, so a day-grain aggregate over
@@ -59,28 +50,23 @@ object MvMaintainStream {
       maintain(spark, batch, mvDir, batchId)
     }
 
-  /** Fold one micro-batch into the summary under the manifest protocol. */
+  /** Fold one micro-batch into the summary. */
   def maintain(spark: SparkSession, batch: DataFrame, mvDir: String,
-      batchId: Long): Unit = {
-    val gen = s"gen_$batchId"
-    if (StoredManifest.isLive(mvDir, gen))
-      return // re-delivered after a successful flip: already published
-    StoredManifest.sweepUnreachable(mvDir)
-    val partials = Lakehouse.summarize(batch)
-    val merged = currentSummary(spark, mvDir) match {
-      case Some(cur) => Lakehouse.mergeSummaries(cur.unionByName(partials))
-      case None => Lakehouse.mergeSummaries(partials)
+      batchId: Long): Unit =
+    StoredManifest.fold(mvDir, batchId) { live =>
+      Seq("summary" -> foldInto(spark, live, Lakehouse.summarize(batch)))
     }
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(summaryPath(mvDir, gen))
-    StoredManifest.write(mvDir, gen, Seq("summary"))
-  }
+
+  /** `partials` merged onto the live generation's summary, if any. */
+  private def foldInto(spark: SparkSession, live: Option[(String, Seq[String])],
+      partials: DataFrame): DataFrame =
+    Lakehouse.mergeSummaries(live.fold(partials) { case (liveDir, _) =>
+      spark.read.parquet(s"$liveDir/summary").unionByName(partials)
+    })
 
   /** The live generation's summary, if any generation has been published. */
   def currentSummary(spark: SparkSession, mvDir: String): Option[DataFrame] =
-    if (StoredManifest.exists(mvDir))
-      Some(spark.read.parquet(summaryPath(mvDir, StoredManifest.live(mvDir))))
-    else None
+    StoredManifest.liveSegment(spark, mvDir, "summary")
 
   /** (Re-)install the rewrite rule against the live generation, so
     * day-grain aggregates over `factPath` serve from the maintained
@@ -109,45 +95,34 @@ object MvMaintainStream {
     * corrections), so the touched slice is days, not history.
     *
     * The insert fold and the splice commute because they touch disjoint
-    * row versions of the same keyed table; publication is the same
-    * batch-id-named manifest generation as [[maintain]], so re-delivery
-    * after a flip stays a no-op.
+    * row versions of the same keyed table; the generation commits through
+    * [[graft.StoredManifest.fold]], as [[maintain]]'s does.
     */
   def maintainChangelog(spark: SparkSession, changelog: DataFrame,
-      factSnapshot: DataFrame, mvDir: String, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val gen = s"gen_$batchId"
-    if (StoredManifest.isLive(mvDir, gen))
-      return
-    StoredManifest.sweepUnreachable(mvDir)
-    val inserts = changelog.where(col("op") === "I")
-      .select("ts", "event_type", "value")
-    val deletes = changelog.where(col("op") === "D")
-      .select("ts", "event_type", "value")
-
-    val folded = currentSummary(spark, mvDir) match {
-      case Some(cur) =>
-        Lakehouse.mergeSummaries(cur.unionByName(Lakehouse.summarize(inserts)))
-      case None => Lakehouse.mergeSummaries(Lakehouse.summarize(inserts))
+      factSnapshot: DataFrame, mvDir: String, batchId: Long): Unit =
+    StoredManifest.fold(mvDir, batchId) { live =>
+      val inserts = changelog.where(col("op") === "I")
+        .select("ts", "event_type", "value")
+      val deletes = changelog.where(col("op") === "D")
+        .select("ts", "event_type", "value")
+      val folded = foldInto(spark, live, Lakehouse.summarize(inserts))
+      val touched = deletes
+        .select(date_trunc("day", col("ts")).as("day"), col("event_type"))
+        .distinct()
+      val merged =
+        if (touched.isEmpty) folded
+        else {
+          val keys = Seq("day", "event_type")
+          // restrict the fact scan to the touched DAYS before aggregating —
+          // the "partial" in partial recompute (on a day-partitioned fact
+          // layout this semi join becomes partition pruning)
+          val touchedDays = touched.select(col("day")).distinct()
+          val slice = factSnapshot.join(broadcast(touchedDays),
+            date_trunc("day", col("ts")) === touchedDays("day"), "left_semi")
+          val recomputed = Lakehouse.summarize(slice)
+            .join(touched, keys, "left_semi")
+          folded.join(touched, keys, "left_anti").unionByName(recomputed)
+        }
+      Seq("summary" -> merged)
     }
-    val touched = deletes
-      .select(date_trunc("day", col("ts")).as("day"), col("event_type"))
-      .distinct()
-    val merged =
-      if (touched.isEmpty) folded
-      else {
-        val keys = Seq("day", "event_type")
-        // restrict the fact scan to the touched DAYS before aggregating —
-        // the "partial" in partial recompute (on a day-partitioned fact
-        // layout this semi join becomes partition pruning)
-        val touchedDays = touched.select(col("day")).distinct()
-        val slice = factSnapshot.join(broadcast(touchedDays),
-          date_trunc("day", col("ts")) === touchedDays("day"), "left_semi")
-        val recomputed = Lakehouse.summarize(slice)
-          .join(touched, keys, "left_semi")
-        folded.join(touched, keys, "left_anti").unionByName(recomputed)
-      }
-    merged.coalesce(1).write.mode("overwrite").parquet(summaryPath(mvDir, gen))
-    StoredManifest.write(mvDir, gen, Seq("summary"))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.StoredManifest
+import graft.{Checkpoints, StoredManifest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -29,11 +29,6 @@ import org.apache.spark.sql.types.StructType
   * so at scale one would persist the reference grid once (a
   * StoredArtifacts generation) — the operator accepts any DataFrame, so
   * that swap is a call-site change, not a rewrite.
-  *
-  * Publication protocol (shared with the other maintainers): one
-  * `gen_<batchId>` directory with a single `verdict` segment, atomic
-  * manifest flip, superseded generations swept at the next refresh;
-  * at-least-once re-delivery of a published batchId is a no-op.
   */
 object RankDriftStream {
 
@@ -61,43 +56,31 @@ object RankDriftStream {
   /** One refresh: recompute the FULL drift report over everything in
     * `arrivalsDir` vs the reference — the rank verdict (x249: DID the
     * distribution move), the KS gap (x250: how far, and at which value)
-    * and the Q-Q decile table (x252: WHERE) — publish the three segments
-    * under one generation, flip the manifest atomically. An operator
+    * and the Q-Q decile table (x252: WHERE) — published as three segments
+    * of one generation ([[graft.StoredManifest.publish]]). An operator
     * paged by the verdict reads the other two segments of the SAME
     * generation to triage, never a mixed-generation report.
     */
   def refresh(spark: SparkSession, arrivalsDir: String, referenceDir: String,
       stateDir: String, alarmMicro: Long, gen: Long,
-      pathGlobFilter: String = "*.parquet"): Unit = {
-    val dir = monitorDir(stateDir)
-    val genName = s"gen_$gen"
-    if (StoredManifest.isLive(dir, genName))
-      return // at-least-once re-delivery of an already-published refresh
-    StoredManifest.sweepUnreachable(dir)
-    val cur = spark.read.option("pathGlobFilter", pathGlobFilter)
-      .parquet(arrivalsDir)
-    val ref = spark.read.option("pathGlobFilter", pathGlobFilter)
-      .parquet(referenceDir)
-    // ONE scan of arrivals+reference per refresh: the shared count grid
-    // is built and checkpointed once and all three segments derive from
-    // it (the DriftMonitorStream "one computation feeds both segments"
-    // discipline); the superseded checkpoint is dropped after the writes
-    // — per-refresh retention in a weeks-long stream is real memory
-    val grid = graft.queries.Events.centiCountGrid(cur, ref)
-      .localCheckpoint(true)
-    val cdf = graft.queries.Events.withCdf(grid)
-    graft.queries.Events.rankVerdictFromGrid(grid, alarmMicro)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/$genName/verdict")
-    graft.queries.Events.ksFromCdf(cdf)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/$genName/ks")
-    graft.queries.Events.qqFromCdf(cdf)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/$genName/qq")
-    graft.Checkpoints.drop(grid)
-    StoredManifest.write(dir, genName, Seq("ks", "qq", "verdict"))
-  }
+      pathGlobFilter: String = "*.parquet"): Unit =
+    Checkpoints.scoped { release =>
+      StoredManifest.publish(monitorDir(stateDir), gen) {
+        val cur = spark.read.option("pathGlobFilter", pathGlobFilter)
+          .parquet(arrivalsDir)
+        val ref = spark.read.option("pathGlobFilter", pathGlobFilter)
+          .parquet(referenceDir)
+        // ONE scan of arrivals+reference per refresh: the shared count
+        // grid is built and checkpointed once and all three segments
+        // derive from it
+        val grid = release(graft.queries.Events.centiCountGrid(cur, ref)
+          .localCheckpoint(true))
+        val cdf = graft.queries.Events.withCdf(grid)
+        Seq("ks" -> graft.queries.Events.ksFromCdf(cdf),
+          "qq" -> graft.queries.Events.qqFromCdf(cdf),
+          "verdict" -> graft.queries.Events.rankVerdictFromGrid(grid, alarmMicro))
+      }
+    }
 
   def published(stateDir: String): Boolean =
     StoredManifest.exists(monitorDir(stateDir))

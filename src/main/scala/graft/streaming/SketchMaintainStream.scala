@@ -17,14 +17,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * bit-identical, even when a batch is replayed wholesale).
   *
   * Per micro-batch: registers of the batch rows ([[Events.hllRegisterRows]]
-  * via [[Events.hllDailySketch]]) max-merge into the live generation and
-  * publish under the same batch-id-named manifest generation protocol as
-  * every stored artifact here. Serving = [[Events.hllEstimate]] over the
-  * live generation: per-day distinct estimates, no fact re-scan ever.
+  * via [[Events.hllDailySketch]]) max-merge into the live generation. The
+  * merge is idempotent, so the generation commits through
+  * [[graft.StoredManifest.publish]], not `fold`: a replayed or renumbered
+  * batch re-merges to the same registers. Serving = [[Events.hllEstimate]]
+  * over the live generation: per-day distinct estimates, no fact re-scan
+  * ever.
   */
 object SketchMaintainStream {
-
-  def sketchPath(dir: String, gen: String): String = s"$dir/$gen/sketch"
 
   def start(spark: SparkSession, factDir: String, dir: String, ckpt: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
@@ -37,24 +37,15 @@ object SketchMaintainStream {
     }
 
   def maintain(spark: SparkSession, batch: DataFrame, dir: String,
-      batchId: Long): Unit = {
-    val gen = s"gen_$batchId"
-    if (StoredManifest.isLive(dir, gen))
-      return
-    StoredManifest.sweepUnreachable(dir)
-    val partials = Events.hllDailySketch(batch)
-    val merged = current(spark, dir) match {
-      case Some(cur) => Events.hllMergeSketches(cur.unionByName(partials))
-      case None => Events.hllMergeSketches(partials)
+      batchId: Long): Unit =
+    StoredManifest.publish(dir, batchId) {
+      val partials = Events.hllDailySketch(batch)
+      Seq("sketch" -> Events.hllMergeSketches(
+        current(spark, dir).fold(partials)(_.unionByName(partials))))
     }
-    merged.coalesce(1).write.mode("overwrite").parquet(sketchPath(dir, gen))
-    StoredManifest.write(dir, gen, Seq("sketch"))
-  }
 
   def current(spark: SparkSession, dir: String): Option[DataFrame] =
-    if (StoredManifest.exists(dir))
-      Some(spark.read.parquet(sketchPath(dir, StoredManifest.live(dir))))
-    else None
+    StoredManifest.liveSegment(spark, dir, "sketch")
 
   /** Per-day distinct estimates from the live generation. */
   def estimates(spark: SparkSession, dir: String): DataFrame =

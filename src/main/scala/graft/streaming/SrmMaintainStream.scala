@@ -24,22 +24,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * one-shot recount, the guard's homogeneity arithmetic against a
   * BigInt replay, and a planted one-arm type against the flag.
   *
-  * Count-addition is NOT replay-safe by algebra, so replay safety is
-  * the manifest protocol's (the FreqMaintainStream discipline, which
-  * closed the r10 ADVICE finding): generations are named by batch id,
-  * which doubles as the HIGH-WATER mark — any batch at or below the
-  * live generation's id (same-checkpoint re-delivery AND the
-  * fresh-checkpoint restart where batchId returns to 0) returns
-  * without folding.
+  * Count-addition is NOT replay-safe by algebra, so the generation
+  * commits through [[graft.StoredManifest.fold]], whose high-water rule
+  * makes a re-delivered batch a no-op and a fresh-checkpoint restart
+  * fail loudly.
   *
   * Per micro-batch: one |types|×2 aggregate over the BATCH (the only
-  * input-sized step, map-side combinable), a |types|-row merge,
-  * publish under a batch-id generation. Serving reads the |types|-row
-  * live generation — no event re-scan ever.
+  * input-sized step, map-side combinable), a |types|-row merge. Serving
+  * reads the |types|-row live generation — no event re-scan ever.
   */
 object SrmMaintainStream {
-
-  def countsPath(dir: String, gen: String): String = s"$dir/$gen/srm"
 
   def start(spark: SparkSession, eventsDir: String, dir: String,
       ckpt: String,
@@ -57,54 +51,24 @@ object SrmMaintainStream {
 
   /** Fold one batch of events into the live counts generation. */
   def maintain(spark: SparkSession, batch: DataFrame, dir: String,
-      batchId: Long): Unit = {
-    val gen = s"gen_$batchId"
-    if (StoredManifest.exists(dir)) {
-      // High-water replay guard (see scaladoc): any batch at or below
-      // the live generation's id has already been folded. The guard is
-      // only sound when batch ids are MONOTONE over the output dir's
-      // lifetime — i.e. restarts reuse the checkpoint. A FRESH-checkpoint
-      // restart renumbers from 0 and its batch 0 re-lists every file,
-      // including genuinely new ones; silently skipping it would drop
-      // those events from the counts forever (undercount, not replay
-      // protection). A regressed batch id is detectable — same-checkpoint
-      // recovery only ever re-delivers the LAST batch (== liveId) or the
-      // next — so fail loudly and require the operator to reset the
-      // output dir together with the checkpoint. Residual edge (liveId
-      // == 0, fresh restart lands on batchId == 0): indistinguishable
-      // from a replay of batch 0 and still skipped — reset the output
-      // dir whenever the checkpoint is reset.
-      val live = StoredManifest.live(dir)
-      val liveId = scala.util.Try(live.stripPrefix("gen_").toLong).toOption
-      require(!liveId.exists(batchId < _),
-        s"batch id $batchId regressed below live generation $live: " +
-          "fresh-checkpoint restart over an existing counts dir — reset " +
-          s"$dir together with the checkpoint (see maintain() scaladoc)")
-      if (liveId.exists(batchId <= _) || live == gen) return
-    }
-    StoredManifest.sweepUnreachable(dir)
-    val batchCounts = batch
-      .select(col("event_type"), Experiment.arm.as("arm"))
-      .groupBy(col("event_type"))
-      .agg(sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n_b"))
-    val merged = current(spark, dir) match {
-      // types present in only one side fold through the union-re-agg
-      // (no full-outer join bookkeeping)
-      case Some(cur) => cur.unionByName(batchCounts)
+      batchId: Long): Unit =
+    StoredManifest.fold(dir, batchId) { live =>
+      val batchCounts = batch
+        .select(col("event_type"), Experiment.arm.as("arm"))
         .groupBy(col("event_type"))
-        .agg(sum(col("n_a")).as("n_a"), sum(col("n_b")).as("n_b"))
-      case None => batchCounts
+        .agg(sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("n_a"),
+          sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n_b"))
+      // types present in only one side fold through the union-re-agg (no
+      // full-outer join bookkeeping)
+      Seq("srm" -> live.fold(batchCounts) { case (liveDir, _) =>
+        spark.read.parquet(s"$liveDir/srm").unionByName(batchCounts)
+          .groupBy(col("event_type"))
+          .agg(sum(col("n_a")).as("n_a"), sum(col("n_b")).as("n_b"))
+      })
     }
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(countsPath(dir, gen))
-    StoredManifest.write(dir, gen, Seq("srm"))
-  }
 
   def current(spark: SparkSession, dir: String): Option[DataFrame] =
-    if (StoredManifest.exists(dir))
-      Some(spark.read.parquet(countsPath(dir, StoredManifest.live(dir))))
-    else None
+    StoredManifest.liveSegment(spark, dir, "srm")
 
   /** The live guard table — a HOMOGENEITY check, deliberately not the
     * x357 χ²: event counts cluster within users (one heavy user's

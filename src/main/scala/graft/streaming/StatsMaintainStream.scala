@@ -11,10 +11,9 @@ import org.apache.spark.sql.types.{NumericType, StringType, StructType}
 /** Streaming re-ANALYZE — the x200 mergeable-statistics algebra run as a
   * maintenance loop that keeps [[graft.plans.StatsCbo]]'s registry fresh
   * with NO manual ANALYZE: each appended micro-batch of a table folds
-  * into per-column statistics at O(state + batch), a generation publishes
-  * under the [[graft.StoredManifest]] protocol (the [[MvMaintainStream]]
-  * discipline — write fully, flip once, re-delivery is a name-match
-  * no-op), and [[serve]] folds the live generation into the CBO registry
+  * into per-column statistics at O(state + batch), the generation commits
+  * through [[graft.StoredManifest.fold]], and [[serve]] folds the live
+  * generation into the CBO registry
   * so the NEXT query plans against current statistics. This is the
   * Delta/Iceberg auto-stats pipeline expressed over plain parquet
   * appends: a dimension that grows — or becomes selectively filterable —
@@ -168,54 +167,27 @@ object StatsMaintainStream {
   private def genPath(statsDir: String, gen: String, seg: String): String =
     s"$statsDir/$gen/$seg"
 
-  /** Fold one micro-batch into the statistics under the manifest
-    * protocol (exactly-once by generation name, the MvMaintainStream
-    * contract).
-    */
+  /** Fold one micro-batch into the statistics. */
   def maintain(spark: SparkSession, batch: DataFrame, statsDir: String,
-      batchId: Long): Unit = {
-    val gen = s"gen_$batchId"
-    if (StoredManifest.isLive(statsDir, gen))
-      return // re-delivered after a successful flip
-    StoredManifest.sweepUnreachable(statsDir)
-    val (prevScalar, prevRegs) =
-      if (StoredManifest.exists(statsDir)) {
-        val (cur, _) = StoredManifest.read(statsDir)
-        (Some(spark.read.parquet(genPath(statsDir, cur, "scalar"))),
-          Some(spark.read.parquet(genPath(statsDir, cur, "registers"))))
-      } else (None, None)
-    val scalar = {
-      val p = scalarPartials(batch)
-      prevScalar.map(_.unionByName(p)).getOrElse(p)
-        .groupBy("column")
-        .agg(sum(col("n")).as("n"), min(col("lo")).as("lo"),
-          max(col("hi")).as("hi"), sum(col("len_sum")).as("len_sum"))
+      batchId: Long): Unit =
+    StoredManifest.fold(statsDir, batchId) { live =>
+      // the batch's partials unioned with the live generation's `seg`, when
+      // it lists one (generations from before the histogram carry none)
+      def withLive(seg: String, partials: DataFrame): DataFrame = live match {
+        case Some((liveDir, segs)) if segs.contains(seg) =>
+          spark.read.parquet(s"$liveDir/$seg").unionByName(partials)
+        case _ => partials
+      }
+      Seq(
+        "scalar" -> withLive("scalar", scalarPartials(batch))
+          .groupBy("column")
+          .agg(sum(col("n")).as("n"), min(col("lo")).as("lo"),
+            max(col("hi")).as("hi"), sum(col("len_sum")).as("len_sum")),
+        "registers" -> withLive("registers", registerPartials(batch))
+          .groupBy("column", "reg").agg(max(col("mr")).as("mr")),
+        "histogram" -> withLive("histogram", histogramPartials(batch))
+          .groupBy("column", "bkt").agg(sum(col("n")).as("n")))
     }
-    val regs = {
-      val p = registerPartials(batch)
-      prevRegs.map(_.unionByName(p)).getOrElse(p)
-        .groupBy("column", "reg").agg(max(col("mr")).as("mr"))
-    }
-    val prevHist =
-      if (StoredManifest.exists(statsDir)) {
-        val (cur, segs) = StoredManifest.read(statsDir)
-        if (segs.contains("histogram"))
-          Some(spark.read.parquet(genPath(statsDir, cur, "histogram")))
-        else None
-      } else None
-    val hist = {
-      val p = histogramPartials(batch)
-      prevHist.map(_.unionByName(p)).getOrElse(p)
-        .groupBy("column", "bkt").agg(sum(col("n")).as("n"))
-    }
-    scalar.coalesce(1).write.mode("overwrite")
-      .parquet(genPath(statsDir, gen, "scalar"))
-    regs.coalesce(1).write.mode("overwrite")
-      .parquet(genPath(statsDir, gen, "registers"))
-    hist.coalesce(1).write.mode("overwrite")
-      .parquet(genPath(statsDir, gen, "histogram"))
-    StoredManifest.write(statsDir, gen, Seq("scalar", "registers", "histogram"))
-  }
 
   /** Fold the live statistics generation into [[StatsCbo]]'s registry for
     * `tablePath` — after this, [[graft.plans.StatsBroadcastJoin]] plans

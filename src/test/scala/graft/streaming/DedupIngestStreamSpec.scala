@@ -77,15 +77,13 @@ class DedupIngestStreamSpec extends SparkSpec {
       // ever leaves a scan (standing text is never re-read by design)
       val frozen = spark.read.parquet(s"$indexDir/df")
       val bsets = shingles(batch2).withColumn("n", size(col("sh")).cast("long"))
+      val (standSets, standPrefix) = DedupIngestStream.standing(spark, indexDir)
       val probe = graft.queries.Dedup.probeJoin(
         bsets,
         graft.queries.Dedup.prefixPostings(
           bsets.select(col("doc_id"), col("n"), explode(col("sh")).as("s")),
           frozen),
-        spark.read.parquet(s"$indexDir/sets")
-          .select(col("doc_id"), array_compact(col("sh")).as("sh")),
-        spark.read.parquet(s"$indexDir/prefix")
-          .select(col("s"), col("doc_id"), col("n")))
+        standSets, standPrefix)
       val indexScans = graft.SparkSpec.allPlanNodes(probe.queryExecution.executedPlan)
         .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
         .filter(_.metadata.get("Location").exists(_.contains(root.getFileName.toString)))
@@ -93,6 +91,40 @@ class DedupIngestStreamSpec extends SparkSpec {
       val scanned = indexScans.flatMap(_.schema.fieldNames)
       assert(!scanned.contains("text"),
         s"standing text must not be rescanned, got columns: $scanned")
+    } finally graft.StoredArtifacts.deleteTree(root.toString)
+  }
+
+  test("compaction bounds the index: 6 batches leave one generation of at most 4 segments") {
+    val root = Files.createTempDirectory("graft-dedup-compact")
+    val indexDir = root.resolve("index").toString
+    val pairsDir = root.resolve("pairs").toString
+    try {
+      val d = Tables(spark, sf001, "documents").select("doc_id", "text")
+      val standing0 = d.where(pmod(col("doc_id"), lit(8)) > 5)
+      val batches = (0 until 6).map(i => d.where(pmod(col("doc_id"), lit(8)) === i))
+      DedupIngestStream.bootstrap(standing0, indexDir)
+      val sc = spark.sparkContext
+      val mark = sc.emptyRDD[Int].id
+      batches.zipWithIndex.foreach { case (b, i) =>
+        DedupIngestStream.ingestBatch(b, indexDir, pairsDir, i.toLong)
+      }
+      // each ingest drops its batch checkpoints once its segment is written
+      val pinned = sc.getPersistentRDDs.keys.filter(_ > mark).toSeq
+      assert(pinned.isEmpty, s"ingests left persisted RDDs behind: $pinned")
+
+      val (gen, segments) = graft.StoredManifest.read(indexDir)
+      assert(gen == "gen_1" && segments.length <= 4, s"$gen: $segments")
+      assert(!Files.exists(root.resolve("index").resolve("gen_0")),
+        "the superseded generation must be deleted")
+      batches.indices.foreach { i =>
+        val got = spark.read.parquet(s"$pairsDir/seg=batch_$i")
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val standingAtProbe = (standing0 +: batches.take(i)).reduce(_ unionByName _)
+        assert(got === brutePairs(batches(i), standingAtProbe), s"batch $i")
+      }
+      // the compacted standing side still holds every ingested doc once
+      val (sets, _) = DedupIngestStream.standing(spark, indexDir)
+      assert(sets.count() == d.count() && sets.select("doc_id").distinct().count() == d.count())
     } finally graft.StoredArtifacts.deleteTree(root.toString)
   }
 }

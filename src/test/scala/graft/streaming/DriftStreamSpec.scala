@@ -99,4 +99,21 @@ class DriftStreamSpec extends SparkSpec {
       assert(DriftMonitorStream.liveGeneration(stateDir) == genLive)
     } finally graft.StoredArtifacts.deleteTree(root.toString)
   }
+
+  test("refreshes leave no persisted RDDs behind") {
+    val root = Files.createTempDirectory("graft-driftpins")
+    val eventsDir = root.resolve("events").toString
+    val stateDir = root.resolve("state").toString
+    try {
+      writeDay(eventsDir, 1, errorHeavy = false)
+      writeDay(eventsDir, 2, errorHeavy = true)
+      val sc = spark.sparkContext
+      // RDD ids only grow: a persisted RDD above the mark was left by a refresh
+      val mark = sc.emptyRDD[Int].id
+      (0L until 3L).foreach(DriftMonitorStream.refresh(spark, eventsDir, stateDir, 200L, _))
+      val pinned = sc.getPersistentRDDs.keys.filter(_ > mark).toSeq
+      assert(pinned.isEmpty, s"refreshes left persisted RDDs behind: $pinned")
+      assert(DriftMonitorStream.liveGeneration(stateDir) == "gen_2")
+    } finally graft.StoredArtifacts.deleteTree(root.toString)
+  }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * (multi-batch merged) summary must keep the SAME bound — that is the
   * mergeable-summaries theorem the incremental artifact rests on — and
   * a replayed batch must be a no-op (manifest idempotence; MG addition
-  * is not replay-safe by algebra, so the protocol must carry it).
+  * is not replay-safe by algebra, so the protocol must carry it), and a
+  * fresh-checkpoint restart must fail loudly.
   */
 class FreqMaintainSpec extends SparkSpec {
 
@@ -84,18 +85,19 @@ class FreqMaintainSpec extends SparkSpec {
     assert(again.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq ==
       got.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq,
       "replaying a folded batch must not change the summary")
-    // fresh-checkpoint restart (the r10 ADVICE finding): the artifact dir
-    // outlives its streaming checkpoint, batchId restarts at 0 — every
-    // EARLIER batch id must hit the high-water guard and not re-fold,
-    // not just the exact live-generation re-delivery
-    batches.zipWithIndex.foreach { case (b, i) =>
-      FreqMaintainStream.maintain(spark, b, dir, i.toLong)
+    // fresh-checkpoint restart: the artifact dir outlives its streaming
+    // checkpoint and batchId restarts at 0. Re-folding would double every
+    // count and skipping would drop events that arrived after the last
+    // fold, so the fold must fail loudly and leave the summary intact
+    val ex = intercept[IllegalArgumentException] {
+      FreqMaintainStream.maintain(spark, batches.head, dir, 0L)
     }
+    assert(ex.getMessage.contains("fresh-checkpoint restart"))
     val afterRestart = FreqMaintainStream.heavyHitters(spark, dir).collect()
     assert(afterRestart.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSeq ==
       got.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq,
-      "a fresh-checkpoint replay of earlier batches must not double counts")
+      "a failed fold must leave the live summary intact")
   }
 
   test("an all-ties compress still carries the total n") {

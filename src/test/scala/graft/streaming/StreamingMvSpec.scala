@@ -157,6 +157,26 @@ class StreamingMvSpec extends SparkSpec {
     } finally graft.StoredArtifacts.deleteTree(root.toString)
   }
 
+  test("a fold below the live generation fails and leaves the summary intact") {
+    val root = Files.createTempDirectory("graft-mvrestart")
+    val mvDir = root.resolve("mv").toString
+    import spark.implicits._
+    try {
+      MvMaintainStream.maintain(spark, rows1.toDF("ts", "event_type", "value"), mvDir, 0L)
+      MvMaintainStream.maintain(spark, rows2.toDF("ts", "event_type", "value"), mvDir, 1L)
+      val live = MvMaintainStream.currentSummary(spark, mvDir).get.collect().toSeq
+      // a fresh-checkpoint restart renumbers from 0: re-folding batch 0
+      // would double its counts, so the fold must refuse it
+      val ex = intercept[IllegalArgumentException] {
+        MvMaintainStream.maintain(spark, rows1.toDF("ts", "event_type", "value"), mvDir, 0L)
+      }
+      assert(ex.getMessage.contains("fresh-checkpoint restart"))
+      assert(StoredManifest.read(mvDir)._1 == "gen_1")
+      assert(MvMaintainStream.currentSummary(spark, mvDir).get.collect().toSeq == live,
+        "a refused fold must leave the live summary row-identical")
+    } finally graft.StoredArtifacts.deleteTree(root.toString)
+  }
+
   private def withRuleOff[A](body: => A): A = {
     val saved = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
