@@ -5,10 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The atomic pointer-file commit shared by every generation-directory
   * artifact (the IVF index's [[graft.queries.AnnManifest]], the
-  * stream-maintained summaries and reports, the ingest streams'
-  * [[SegmentLog]]): immutable generation directories plus one `MANIFEST`
-  * file naming the live generation and its segment list, replaced
-  * atomically (write `MANIFEST.tmp`, `ATOMIC_MOVE` over `MANIFEST`). A
+  * stream-maintained summaries and reports, the ingest streams' and the
+  * merge-on-read tables' [[SegmentLog]]s): immutable generation
+  * directories plus one `MANIFEST` file naming the live generation and
+  * its segment list, replaced atomically (write `MANIFEST.tmp`,
+  * `ATOMIC_MOVE` over `MANIFEST`). A
   * reader resolving through the manifest sees one complete generation at
   * every instant; writers publish only after their generation is fully on
   * disk. Single WRITER assumed (two concurrent publishers would race the
@@ -241,8 +242,12 @@ object StoredManifest {
   * ([[graft.streaming.AnnIngestStream]]), zone-map
   * ([[graft.streaming.ZoneIndexStream]]), HNSW
   * ([[graft.streaming.HnswIngestStream]]) and exact near-dup
-  * ([[graft.streaming.DedupIngestStream]]) ingest streams all call it; how
-  * a segment is written or merged stays each stream's own.
+  * ([[graft.streaming.DedupIngestStream]]) ingest streams all call it, and
+  * so does a merge-on-read table's change log
+  * ([[graft.queries.Lakehouse.mergeMoR]],
+  * [[graft.streaming.DeleteVectorStream]] and the
+  * [[graft.streaming.MergeStream]] change stream); how a segment is
+  * written or merged stays each caller's own.
   *
   * Layout: `dir/MANIFEST` names the live generation `gen_<n>` and its
   * segments, and segment `s` lives at `dir/gen_<n>/s`.

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.StoredManifest
+import graft.{Checkpoints, StoredManifest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Manifest-pointer commit protocol for the stored IVF index: no probe
@@ -200,12 +200,14 @@ object AnnManifest {
     val merged = dataSegs.map(seg =>
         s.read.parquet(s"$genDir/$seg").select(col("vec_id"), col("embedding")))
       .reduce(_ unionAll _)
-    val all = (if (tombSegs.isEmpty) merged
-      else merged.join(broadcast(tombstonesOf(s, genDir, tombSegs)),
-        Seq("vec_id"), "left_anti"))
-      .localCheckpoint(true)
-    Similarity.writeRecelled(all, Similarity.readIvfCentroids(s, genDir),
-      iters, s"$nextDir/$base", s"$nextDir/centroids")
+    Checkpoints.scoped { release =>
+      val all = release((if (tombSegs.isEmpty) merged
+        else merged.join(broadcast(tombstonesOf(s, genDir, tombSegs)),
+          Seq("vec_id"), "left_anti"))
+        .localCheckpoint(true))
+      Similarity.writeRecelled(all, Similarity.readIvfCentroids(s, genDir),
+        iters, s"$nextDir/$base", s"$nextDir/centroids")
+    }
   }
 
   /** Merge the live generation's segments into the next one and flip the

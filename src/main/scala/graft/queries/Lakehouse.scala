@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GQuery, StoredArtifacts, Tables}
+import graft.{GQuery, SegmentLog, StoredArtifacts, StoredManifest, Tables}
 import graft.functions.ZOrder
 import graft.plans.SummaryRewrite
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -987,17 +987,22 @@ object Lakehouse {
 
   /** The merge-on-read serving scan: data files minus the sidecar's
     * positions — one broadcast anti-join, no predicate re-evaluation.
-    * The sidecar is deduplicated so segmented layouts whose batches
-    * overlap (DeleteVectorStream) serve through the same path — a no-op
-    * for the single-segment artifact.
+    * The anti-join's `.distinct()` on the sidecar dedups nothing here
+    * (the sidecar lists each position once); it stays so x229's plan, and
+    * its fingerprint, are unchanged.
     */
   def readWithDeletes(s: SparkSession, layout: String, dvDir: String): DataFrame =
-    s.read.parquet(layout)
-      .withColumn("file", col("_metadata.file_path"))
-      .withColumn("pos", col("_metadata.row_index"))
-      .join(s.read.parquet(dvDir).select("file", "pos").distinct(),
-        Seq("file", "pos"), "left_anti")
+    minusPositions(withPos(s.read.parquet(layout)), s.read.parquet(dvDir))
       .drop("file", "pos")
+
+  /** A scan with each row's physical position as (`file`, `pos`). */
+  private def withPos(df: DataFrame): DataFrame = df
+    .withColumn("file", col("_metadata.file_path"))
+    .withColumn("pos", col("_metadata.row_index"))
+
+  /** `rows` (with positions) minus every position `dv` lists. */
+  private def minusPositions(rows: DataFrame, dv: DataFrame): DataFrame =
+    rows.join(dv.select("file", "pos").distinct(), Seq("file", "pos"), "left_anti")
 
   /** Fold the deletion vectors into rewritten data files (merge-on-read →
     * copy-on-write): the maintenance step that keeps the DV sidecar from
@@ -1013,83 +1018,96 @@ object Lakehouse {
       .sortWithinPartitions("doc_id")
       .write.mode("overwrite").parquet(outDir)
 
-  /** Merge-on-read MERGE (upsert): matched LIVE rows are masked by a new
-    * DV segment and every update lands as an appended `seg=merge_<tag>`
-    * data segment — no base-file rewrite (Delta DV / Iceberg MoR upsert
-    * semantics; x179 is the copy-on-write tier). Matching resolves
-    * against the CURRENT live view (base + earlier merge segments minus
-    * DVs), so chained merges compose: a second merge updating a row the
-    * first merge introduced masks the FIRST MERGE's version.
-    *
-    * Idempotence: both writes are tag-addressed overwrites of a pure
-    * function of (updates, live-state-before-tag) — re-running a tag
-    * reproduces identical segments. The append-then-mask order leaves a
-    * both-versions window on a crash between the writes (resolved by
-    * re-running the tag), never a lost row; collapsing that window needs
-    * a pointer commit, as the ingest streams' [[graft.SegmentLog]] makes.
+  // ---------------------------------------------------- merge-on-read log
+  // A merge-on-read table's changes are one [[graft.SegmentLog]] at
+  // `logDir`, beside the table's base layout, which is never rewritten.
+  // Upserts ([[mergeMoR]]) and row deletes (DeleteVectorStream.applyBatch)
+  // both commit into it; MergeStream streams both kinds of change as one
+  // query. Each batch is one segment of two frames: `rows`, replacement
+  // rows with the base layout's columns (a delete batch writes none), and
+  // `dv`, the (file, pos) positions the batch masks. [[readMoR]] serves
+  // base ∪ live `rows` minus live `dv`. Batch ids are the log's one replay
+  // sequence and must increase, so a log has one writer: a re-delivered
+  // id, or one a compaction absorbed, is a no-op ([[graft.SegmentLog.applied]]).
+
+  /** Live segments of a MoR log before a compaction, as for the ingest streams. */
+  private val MoRSegments = 4
+
+  /** The live segments' directories of the MoR log at `logDir`, from one
+    * manifest resolve; none when no batch has committed.
     */
-  def mergeMoR(updates: DataFrame, layout: String, mergeDir: String,
-      dvDir: String, tag: String): Unit = {
-    val s = updates.sparkSession
-    // fully-applied check on the LAST write: a replay after the tag
-    // committed must no-op — probing the POST-tag live view would resolve
-    // the updates to their own rows and overwrite this tag's masks with
-    // dead-path positions
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(
-        s"$dvDir/seg=merge_$tag/_SUCCESS"))) return
-    // a crash DURING a segment commit can leave part files visible
-    // without _SUCCESS (committer v2, or v1 dying mid-job-commit);
-    // partition discovery would feed them to the replay's probe and
-    // corrupt the recomputed mask — drop any partial segment of THIS tag
-    // before recomputing
-    Seq(s"$mergeDir/seg=merge_$tag", s"$dvDir/seg=merge_$tag")
-      .foreach(dropPartialSegment)
-    // the probe must see every previously-committed segment, and readers
-    // must see this merge's: drop any cached file listings on both ends
-    Seq(mergeDir, dvDir).foreach { p =>
-      if (new java.io.File(p).isDirectory) s.catalog.refreshByPath(p)
+  private def liveSegments(logDir: String): Seq[String] =
+    if (!StoredManifest.exists(logDir)) Nil
+    else StoredManifest.read(logDir) match {
+      case (gen, segments) => segments.map(seg => s"$logDir/$gen/$seg")
     }
-    val liveMatched = readMoRWithPos(s, layout, mergeDir, dvDir)
-      .join(updates.select(col("doc_id")).distinct().hint("broadcast"),
-        Seq("doc_id"), "left_semi")
-      .select("file", "pos")
-      .localCheckpoint(true) // pin BEFORE the append lands new files
-    updates.write.mode("overwrite").parquet(s"$mergeDir/seg=merge_$tag")
-    liveMatched.write.mode("overwrite").parquet(s"$dvDir/seg=merge_$tag")
-    Seq(mergeDir, dvDir).foreach(p => s.catalog.refreshByPath(p))
-  }
 
-  /** Remove a segment directory whose commit never finished (part files
-    * visible, `_SUCCESS` absent) — [[mergeMoR]]'s replay hygiene.
+  /** The live view with positions: the base layout plus the named
+    * segments' rows, minus their DVs, each read by its explicit path.
     */
-  private def dropPartialSegment(path: String): Unit = {
-    val dir = new java.io.File(path)
-    if (dir.isDirectory && !new java.io.File(dir, "_SUCCESS").exists())
-      graft.StoredArtifacts.deleteTree(path)
-  }
-
-  private def readMoRWithPos(s: SparkSession, layout: String,
-      mergeDir: String, dvDir: String): DataFrame = {
-    def withPos(df: DataFrame) = df
-      .withColumn("file", col("_metadata.file_path"))
-      .withColumn("pos", col("_metadata.row_index"))
+  private def morView(s: SparkSession, layout: String,
+      segments: Seq[String]): DataFrame = {
     val base = withPos(s.read.parquet(layout))
-    val merged =
-      if (new java.io.File(mergeDir).isDirectory)
-        withPos(s.read.parquet(mergeDir)).drop("seg")
-      else base.limit(0)
-    val union = base.unionByName(merged)
-    if (new java.io.File(dvDir).isDirectory)
-      union.join(
-        s.read.parquet(dvDir).select("file", "pos").distinct(),
-        Seq("file", "pos"), "left_anti")
-    else union
+    if (segments.isEmpty) base
+    else minusPositions(
+      base.unionByName(withPos(s.read.parquet(segments.map(seg => s"$seg/rows"): _*))),
+      s.read.parquet(segments.map(seg => s"$seg/dv"): _*))
   }
 
-  /** The MoR serving scan: base + merge segments minus every DV. */
-  def readMoR(s: SparkSession, layout: String, mergeDir: String,
-      dvDir: String): DataFrame =
-    readMoRWithPos(s, layout, mergeDir, dvDir).drop("file", "pos")
+  /** The MoR serving scan: base ∪ live rows minus live DVs, from one
+    * manifest resolve. An absent log serves the base. The frame names the
+    * live segments' paths, which the next compaction deletes: resolve it
+    * again per query rather than holding it across batches.
+    */
+  def readMoR(s: SparkSession, layout: String, logDir: String): DataFrame =
+    morView(s, layout, liveSegments(logDir)).drop("file", "pos")
+
+  /** Merge-on-read MERGE (upsert): matched LIVE rows are masked and every
+    * update lands as replacement rows, in one segment of the table's log —
+    * no base-file rewrite (Delta DV / Iceberg MoR upsert semantics; x179
+    * is the copy-on-write tier). Matching resolves against the CURRENT
+    * live view (base + live segments minus DVs), so chained merges
+    * compose: a second merge updating a row the first merge introduced
+    * masks the FIRST MERGE's version. `id` is the batch's place in the
+    * log and must exceed every id committed before: a committed id, or
+    * one a compaction absorbed, is a no-op, so re-delivering a batch is
+    * safe but reusing an id loses its updates.
+    */
+  def mergeMoR(updates: DataFrame, layout: String, logDir: String, id: Long): Unit =
+    commitMoR(updates, updates, layout, logDir, id)
+
+  /** Commit batch `id` of the MoR log: `rows` as its replacement rows,
+    * and the live positions of `keys`' doc ids as its DV. The probe reads
+    * only committed paths, so it needs no pin while the segment lands;
+    * a crash before the manifest commit leaves the previous view, and a
+    * re-delivered id is a no-op ([[graft.SegmentLog.applied]]).
+    */
+  private[graft] def commitMoR(rows: DataFrame, keys: DataFrame,
+      layout: String, logDir: String, id: Long): Unit = {
+    val s = rows.sparkSession
+    SegmentLog.ingest(logDir, id, MoRSegments) { (genDir, seg) =>
+      val masked = morView(s, layout, liveSegments(logDir))
+        .join(keys.select(col("doc_id")).distinct().hint("broadcast"),
+          Seq("doc_id"), "left_semi")
+        .select("file", "pos")
+      rows.write.parquet(s"$genDir/$seg/rows")
+      masked.write.parquet(s"$genDir/$seg/dv")
+    }(compactMoR(s))
+  }
+
+  /** The MoR log's compaction: the live segments' surviving rows become
+    * the next generation's base rows, and only the DVs into the base
+    * layout carry over. The two kinds of DV file are told apart by the
+    * `file` values the segment rows themselves read back as.
+    */
+  private[graft] def compactMoR(s: SparkSession): SegmentLog.Merge =
+    (genDir, segments, nextDir, base) => {
+      val rows = withPos(s.read.parquet(segments.map(seg => s"$genDir/$seg/rows"): _*))
+      val dv = s.read.parquet(segments.map(seg => s"$genDir/$seg/dv"): _*)
+      minusPositions(rows, dv).drop("file", "pos").write.parquet(s"$nextDir/$base/rows")
+      dv.join(rows.select("file").distinct(), Seq("file"), "left_anti")
+        .write.parquet(s"$nextDir/$base/dv")
+    }
 
   private val x229 = GQuery(
     "x229_deletion_vectors", "ext-lakehouse merge-on-read position-deletes",

@@ -37,18 +37,17 @@ object AnnIngestStream {
     StructField("label", IntegerType)))
 
   /** Watch `sourceDir` for embedding parquet arrivals and ingest each
-    * micro-batch into the manifest-committed index at `indexDir`.
-    * `maxFilesPerTrigger = 1` keeps micro-batches file-sized — the
-    * ingest-cycle granularity the delta layout is designed for.
+    * micro-batch into the manifest-committed index at `indexDir`. One
+    * file per trigger keeps micro-batches file-sized — the ingest-cycle
+    * granularity the segment layout is designed for.
     */
   def start(spark: SparkSession, sourceDir: String, indexDir: String,
       checkpointDir: String, iters: Int = 2, maxSegments: Int = 4,
-      maxFilesPerTrigger: Int = 1,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     Streams.foldBatches("ann-ingest", checkpointDir, trigger,
       spark.readStream
         .schema(arrivalSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(sourceDir)) { (batch, batchId) =>
       ingestBatch(batch, indexDir, batchId, iters, maxSegments)
     }

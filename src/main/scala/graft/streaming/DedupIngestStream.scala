@@ -109,12 +109,12 @@ object DedupIngestStream {
     * near-dup pairs under `pairsDir`. Bootstrap must have run first.
     */
   def start(spark: SparkSession, sourceDir: String, indexDir: String,
-      pairsDir: String, checkpointDir: String, maxFilesPerTrigger: Int = 1,
+      pairsDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     Streams.foldBatches("dedup-ingest", checkpointDir, trigger,
       spark.readStream
         .schema(arrivalSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(sourceDir)) { (batch, batchId) =>
       ingestBatch(batch, indexDir, pairsDir, batchId)
     }

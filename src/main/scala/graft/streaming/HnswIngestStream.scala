@@ -24,12 +24,11 @@ object HnswIngestStream {
 
   def start(spark: SparkSession, sourceDir: String, indexDir: String,
       checkpointDir: String, shards: Int = 2, maxSegments: Int = 4,
-      maxFilesPerTrigger: Int = 1,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     Streams.foldBatches("hnsw-ingest", checkpointDir, trigger,
       spark.readStream
         .schema(AnnIngestStream.arrivalSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(sourceDir)) { (batch, batchId) =>
       ingestBatch(batch, indexDir, batchId, shards, maxSegments)
     }

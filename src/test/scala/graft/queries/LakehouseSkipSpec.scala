@@ -1,6 +1,10 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec}
+import java.nio.file.{Files, Path}
+
+import graft.{SegmentLog, SparkEntry, SparkSpec, StoredManifest}
+import graft.streaming.DeleteVectorStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** x174 zone-map skipping + x175 join-MV delta rule + x176 bottom-k
@@ -165,8 +169,7 @@ class LakehouseSkipSpec extends SparkSpec {
   test("mergeMoR: chained upserts equal copy-on-write semantics without base rewrites") {
     val root = java.nio.file.Files.createTempDirectory("graft-mor")
     val layout = root.resolve("base").toString
-    val mergeDir = root.resolve("merge").toString
-    val dvDir = root.resolve("dv").toString
+    val logDir = root.resolve("log").toString
     try {
       val d = graft.Tables(spark, sf001, "documents")
         .select("doc_id", "text", "source")
@@ -177,13 +180,13 @@ class LakehouseSkipSpec extends SparkSpec {
 
       val m1 = d.where(col("doc_id") % 7 === 0)
         .withColumn("text", upper(col("text")))
-      Lakehouse.mergeMoR(m1, layout, mergeDir, dvDir, "m1")
+      Lakehouse.mergeMoR(m1, layout, logDir, 1L)
       // chained: m2 touches a subset m1 already rewrote, plus fresh ids
       val m2 = d.where(col("doc_id") % 14 === 0 || col("doc_id") % 11 === 0)
         .withColumn("text", concat(col("text"), lit("!")))
-      Lakehouse.mergeMoR(m2, layout, mergeDir, dvDir, "m2")
+      Lakehouse.mergeMoR(m2, layout, logDir, 2L)
 
-      val got = Lakehouse.readMoR(spark, layout, mergeDir, dvDir)
+      val got = Lakehouse.readMoR(spark, layout, logDir)
         .select("doc_id", "text")
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       val expect = d.select("doc_id", "text").collect()
@@ -195,11 +198,9 @@ class LakehouseSkipSpec extends SparkSpec {
       assert(got.size == expect.size, s"${got.size} vs ${expect.size}")
       assert(got == expect, "MoR merge must equal the copy-on-write result")
 
-      // idempotence: replaying tag m2 reproduces identical state
-      Lakehouse.mergeMoR(m2, layout, mergeDir, dvDir, "m2")
-      spark.catalog.refreshByPath(mergeDir)
-      spark.catalog.refreshByPath(dvDir)
-      val replay = Lakehouse.readMoR(spark, layout, mergeDir, dvDir)
+      // idempotence: replaying batch 2 reproduces identical state
+      Lakehouse.mergeMoR(m2, layout, logDir, 2L)
+      val replay = Lakehouse.readMoR(spark, layout, logDir)
         .select("doc_id", "text")
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(replay == expect, "tag replay must be idempotent")
@@ -209,6 +210,117 @@ class LakehouseSkipSpec extends SparkSpec {
         .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.length).toMap
       assert(after == baseFiles)
     } finally graft.StoredArtifacts.deleteTree(root.toString)
+  }
+
+  /** sf0.001's documents as a MoR base layout of 4 files at `layout`. */
+  private def morBase(layout: String): DataFrame = {
+    val d = graft.Tables(spark, sf001, "documents").select("doc_id", "text", "source")
+    d.repartitionByRange(4, col("doc_id")).sortWithinPartitions("doc_id")
+      .write.parquet(layout)
+    d
+  }
+
+  private def texts(df: DataFrame): Map[Long, String] =
+    df.select("doc_id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  /** The served MoR view as doc_id → text; a doc served twice fails. */
+  private def served(layout: String, logDir: String): Map[Long, String] = {
+    val rows = Lakehouse.readMoR(spark, layout, logDir).select("doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(1))
+    assert(rows.map(_._1).distinct.length == rows.length, "a doc is served in two versions")
+    rows.toMap
+  }
+
+  private def fileBytes(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).listFiles().map(f =>
+      f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+
+  private def withLog(prefix: String)(body: (Path, String, String) => Unit): Unit = {
+    val root = Files.createTempDirectory(prefix)
+    try body(root, root.resolve("base").toString, root.resolve("log").toString)
+    finally graft.StoredArtifacts.deleteTree(root.toString)
+  }
+
+  test("MoR log: chained upserts over 6 ids equal copy-on-write across a compaction") {
+    withLog("graft-morlog") { (root, layout, logDir) =>
+      val d = morBase(layout)
+      val baseBytes = fileBytes(layout)
+      var expect = texts(d)
+      (0L until 6L).foreach { id =>
+        // every merge rewrites the rows the previous one introduced, plus fresh ids
+        val m = d.where(col("doc_id") % 5 === 0 || col("doc_id") % 7 === id)
+          .withColumn("text", concat(col("text"), lit(s"#$id")))
+        Lakehouse.mergeMoR(m, layout, logDir, id)
+        expect = expect ++ texts(m)
+        assert(served(layout, logDir) == expect, s"after merge $id")
+        val (gen, segments) = StoredManifest.read(logDir)
+        assert(segments.length <= 4, s"after merge $id: $gen $segments")
+      }
+      assert(StoredManifest.read(logDir) == (("gen_1", Seq("base_4", "batch_5"))))
+      assert(!Files.exists(root.resolve("log").resolve("gen_0")),
+        "the superseded generation must be deleted")
+      assert(fileBytes(layout) == baseBytes, "base files must stay byte-identical")
+    }
+  }
+
+  test("MoR log: a delete of an upserted id keeps it gone through a compaction") {
+    withLog("graft-mordel") { (_, layout, logDir) =>
+      val d = morBase(layout)
+      val m = d.where(col("doc_id") % 5 === 0).withColumn("text", upper(col("text")))
+      Lakehouse.mergeMoR(m, layout, logDir, 0L)
+      val upserted = m.agg(max(col("doc_id"))).head.getLong(0)
+      val baseOnly = d.where(col("doc_id") % 5 === 1).agg(min(col("doc_id"))).head.getLong(0)
+      import spark.implicits._
+      DeleteVectorStream.applyBatch(Seq(upserted, baseOnly).toDF("doc_id"), layout, logDir, 1L)
+      val expect = texts(d) ++ texts(m) -- Seq(upserted, baseOnly)
+      assert(served(layout, logDir) == expect)
+      SegmentLog.compactionSteps(logDir, Lakehouse.compactMoR(spark))
+        .foreach { case (_, step) => step() }
+      assert(StoredManifest.read(logDir) == (("gen_1", Seq("base_1"))))
+      assert(served(layout, logDir) == expect, "the compaction must keep both deletes")
+    }
+  }
+
+  test("MoR log: a stopped compaction or an uncommitted batch serves one version; the next ingest completes it") {
+    def upsert(d: DataFrame, id: Long) =
+      d.where(col("doc_id") % 3 === 0).withColumn("text", concat(col("text"), lit(s"#$id")))
+    def twoMerges(layout: String, logDir: String): (DataFrame, Map[Long, String]) = {
+      val d = morBase(layout)
+      (0L to 1L).foreach(id => Lakehouse.mergeMoR(upsert(d, id), layout, logDir, id))
+      (d, texts(d) ++ texts(upsert(d, 1L)))
+    }
+    val stepNames = Seq("write-segment", "commit-manifest", "delete-absorbed")
+    stepNames.indices.foreach { k =>
+      withLog("graft-morcrash") { (_, layout, logDir) =>
+        val (d, before) = twoMerges(layout, logDir)
+        val steps = SegmentLog.compactionSteps(logDir, Lakehouse.compactMoR(spark))
+        assert(steps.map(_._1) == stepNames)
+        steps.take(k + 1).foreach { case (_, step) => step() }
+        val done = stepNames.take(k + 1)
+        assert(served(layout, logDir) == before, s"after $done")
+        Lakehouse.mergeMoR(upsert(d, 2L), layout, logDir, 2L)
+        assert(served(layout, logDir) == before ++ texts(upsert(d, 2L)),
+          s"the ingest after $done")
+      }
+    }
+    withLog("graft-moruncommitted") { (root, layout, logDir) =>
+      val (d, before) = twoMerges(layout, logDir)
+      val (gen, segments) = StoredManifest.read(logDir)
+      Lakehouse.mergeMoR(upsert(d, 2L), layout, logDir, 2L)
+      val after = served(layout, logDir)
+      assert(after == before ++ texts(upsert(d, 2L)))
+      // un-commit batch 2: its rows and dv stay written in the live
+      // generation's directory, named by no manifest
+      StoredManifest.write(logDir, gen, segments)
+      val pending = root.resolve("log").resolve(gen).resolve("batch_2")
+      assert(Files.isDirectory(pending.resolve("rows")) && Files.isDirectory(pending.resolve("dv")))
+      assert(served(layout, logDir) == before, "written but uncommitted")
+      // a crash between the batch's two writes: rows landed, dv did not
+      graft.StoredArtifacts.deleteTree(pending.resolve("dv").toString)
+      assert(served(layout, logDir) == before, "rows written, dv not")
+      Lakehouse.mergeMoR(upsert(d, 2L), layout, logDir, 2L)
+      assert(served(layout, logDir) == after, "the re-delivered batch completes")
+    }
   }
 
   test("x176: shard-merge equals direct bottom-k with exact size per source") {

@@ -80,6 +80,21 @@ class ManifestAnnSpec extends SparkSpec {
     } finally graft.StoredArtifacts.deleteTree(base.toString)
   }
 
+  test("compactions release the merged vectors' checkpoint") {
+    val base = Files.createTempDirectory("graft-manifest-ckpt")
+    val idx = base.resolve("ivf").toString
+    try {
+      AnnManifest.init(standing, idx, iters = 1)
+      AnnManifest.append(batch, idx, "delta_1")
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.size
+      (0 until 3).foreach(_ => AnnManifest.compact(spark, idx, iters = 1))
+      assert(sc.getPersistentRDDs.size == before,
+        s"compactions left persisted RDDs behind: ${sc.getPersistentRDDs.keys}")
+      assert(probedIds(idx) == allIds)
+    } finally graft.StoredArtifacts.deleteTree(base.toString)
+  }
+
   test("crash windows: a probe serves one complete generation after ANY compaction step prefix") {
     val nSteps = 3 // gc, write-next-gen, commit-manifest
     for (prefix <- 0 to nSteps) {
